@@ -384,33 +384,6 @@ def _run(sf_dir: str) -> None:
     extra["pass1_total_sec"] = pass_totals[0]
     extra["pass2_total_sec"] = pass_totals[1]
 
-    # Variance probe (r6 verdict #6): window_trailing_7d_spend drifted
-    # >1.3x in three separate rounds while its executed plan stayed the
-    # already-optimal single range-frame window over one exchange
-    # (PLANS_r06.md). Run it 5x in isolation and report the spread: a
-    # wide min-max band on an unchanged plan is machine noise (the JVM
-    # shares 32 cores with whatever else the host runs), and recording
-    # it here turns the next drift into a read-off instead of an
-    # investigation.
-    # r8 adds text_repetition: the only r7 bench-flagged drift (0.65 ->
-    # 0.99 s local, 1.52x) landed on a query the r7 diff never touched,
-    # with a plan already reduced to one corpus pass — same noise
-    # hypothesis, same instrument.
-    probes = ["window_trailing_7d_spend", "text_repetition"]
-    extra["variance_probe"] = {}
-    for probe in probes:
-        samples = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            QUERIES[probe](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        extra["variance_probe"][probe] = {
-            "samples": samples,
-            "min": min(samples),
-            "max": max(samples),
-        }
     # Host-band probe (r9 verdict #7): the r9 bench samples spanned
     # 107-139 s total on IDENTICAL code with zero per-query drifts —
     # "the residual is host band" was an inference. This records the

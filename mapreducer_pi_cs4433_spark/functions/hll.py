@@ -20,6 +20,10 @@ registers remain) the streaming monitor emits per trigger — the batch
 entry states the identical formula as column arithmetic for its
 one-sided in-band contract.
 
+``restore`` is the one definition of the HLL state format: every
+streaming operator that keeps registers in state (distinct, snapshots,
+hll_cells, sliding_distinct) decodes its state row through it.
+
 Reference note: the reference repo (MapReducer-PI-cs4433) has no sketch
 surface; this module belongs to the engine's beyond-reference pipeline
 band (SURVEY.md §2.8).
@@ -35,6 +39,30 @@ from pyspark.sql import functions as F
 M = 256
 RHO_MAX = 41  # 40-bit rho field, all-zero capped at 41
 ALPHA = 0.7213 / (1 + 1.079 / M)
+
+
+def restore(registers, n_rows: int | None = None):
+    """Decode registers read back from operator state: a dense array of
+    exactly M values in [0, RHO_MAX] (or a stack of such rows). Any
+    other shape means the state row was corrupted in the store, and
+    because HLL is lossy no downstream invariant (like the KLL weight)
+    would surface it later — so raise here instead of silently
+    degrading every future estimate. When the state also stores the
+    folded-row count, touched registers can never exceed it."""
+    import numpy as np
+
+    regs = np.asarray(registers, dtype=np.int64)
+    if regs.shape[-1:] != (M,) or (regs < 0).any() or (regs > RHO_MAX).any():
+        raise ValueError(
+            f"HLL state reconstructs shape {regs.shape} (want rows of {M} "
+            f"registers, values in [0, {RHO_MAX}]): state row corrupted"
+        )
+    if n_rows is not None and n_rows < (touched := int((regs > 0).sum())):
+        raise ValueError(
+            f"HLL state claims {n_rows} rows but {touched} registers are "
+            "touched: state row corrupted"
+        )
+    return regs
 
 
 def idx_col(key: Column) -> Column:
@@ -79,8 +107,7 @@ def summ_cols(reg_col: str = "reg_val"):
     registers contribute 2^RHO_MAX each, and the touched-register sum
     is coalesced to 0 so a register table with ZERO rows (an empty set
     side) yields the exact empty-sketch bookkeeping (v_zero = M,
-    sis = M * 2^RHO_MAX) instead of NULL — the r10 self-review finding
-    on orders_hll_set_algebra, fixed once here for every consumer.
+    sis = M * 2^RHO_MAX) instead of NULL.
     Returns (v_zero_col, sis_col) to use inside one .agg()."""
     r = F.col(reg_col)
     v_zero = (F.lit(M) - F.count("*")).cast("long")
@@ -96,9 +123,8 @@ def summ_cols(reg_col: str = "reg_val"):
 
 def estimate_col(v_zero: Column, sis: Column) -> Column:
     """Column twin of ``estimate``: the standard HLL estimator with the
-    linear-counting branch, as whole-stage-codegen column math. ONE
-    definition for every batch entry (was inlined three times before
-    r10's self-review)."""
+    linear-counting branch, as whole-stage-codegen column math — the
+    one definition every batch entry uses."""
     sum_inv = sis / F.lit(float(2**RHO_MAX))
     raw = F.lit(ALPHA * M * M) / sum_inv
     return F.when(

@@ -34,6 +34,10 @@ partitioned (like every practical sketch, including Spark's own GK
 summaries); everything the catalog entry emits — the band bit, the
 exact quantiles, the total weight — is partition-invariant, which is
 what the repo's partition-sweep gate requires.
+
+State format: ``to_state`` serializes a sketch as the typed-array row
+(levels[], values[], parity[], n) the streaming operators keep in state
+(quantiles, kll_cells), and ``restore`` is the one decoder of that row.
 """
 
 from __future__ import annotations
@@ -64,9 +68,7 @@ def _compact(sk: dict, l: int) -> None:
     An ODD level length would break the weight invariant — alternating
     selection over 2m+1 items keeps m or m+1, promoting to weight 2m or
     2m+2 — so one item (the max) stays behind at level l and only the
-    even remainder compacts, the standard KLL leftover rule. (Caught by
-    the sketch_weight == n_events contract itself: the first draft
-    drifted by +2/+3 per type at sf0.01.)"""
+    even remainder compacts, the standard KLL leftover rule."""
     items = sorted(sk["levels"][l])
     leftover = [items.pop()] if len(items) % 2 else []
     if len(sk["levels"]) == l + 1:
@@ -110,6 +112,54 @@ def to_items(sk: dict) -> list[tuple[int, float]]:
 
 def total_weight(sk: dict) -> int:
     return sum(len(vals) << l for l, vals in enumerate(sk["levels"]))
+
+
+def to_state(sk: dict) -> tuple[list, list, list, int]:
+    """The state row: the item table as parallel (level, value) arrays,
+    the parity schedule, and the exact total weight."""
+    items = to_items(sk)
+    return (
+        [l for l, _ in items],
+        [v for _, v in items],
+        list(sk["parity"]),
+        total_weight(sk),
+    )
+
+
+def restore(levels, values, parity, n: int, cap: int) -> dict:
+    """Rebuild a sketch from its ``to_state`` row. The stored items
+    respect the cap they were BUILT with, so the refill must not compact
+    — the stored PARITY schedule is then overlaid so future compactions
+    resume exactly where the previous process stopped.
+
+    Restarting with a SMALLER cap than the state was built with would
+    make the refill itself compact: the level layout then no longer
+    matches the stored parity array while total weight is preserved, so
+    the weight check below would pass with a silently wrong parity
+    schedule. Compaction strictly shrinks the item count, so a refill
+    that lost items means a cap mismatch, and it raises.
+
+    The stored ``n`` is a serialization-integrity cross-check, not
+    bookkeeping: a dropped or duplicated item row is silent in every
+    quantile (the rank band absorbs it) but never in the exact weight."""
+    items = list(zip(levels, values))
+    sk = new_sketch()
+    merge_items(sk, items, cap=cap)
+    if len(to_items(sk)) != len(items):
+        raise ValueError(
+            f"KLL state holds {len(items)} items but refilling at "
+            f"cap={cap} compacted to {len(to_items(sk))}: the state "
+            "was built with a larger cap — restart with the original "
+            "cap (or a fresh checkpoint for the new one)"
+        )
+    par = list(parity) + [0] * (len(sk["levels"]) - len(parity))
+    sk["parity"] = par[: len(sk["levels"])]
+    if total_weight(sk) != n:
+        raise ValueError(
+            f"KLL state reconstructs weight {total_weight(sk)}, expected "
+            f"{n}: state item table corrupted"
+        )
+    return sk
 
 
 def quantile(sk: dict, q_num: int, q_den: int = 1000) -> float | None:

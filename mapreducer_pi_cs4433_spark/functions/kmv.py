@@ -7,7 +7,7 @@ A KMV sketch is the K MINIMUM DISTINCT values of a uniform hash over a
 set's keys — a SET of hash values (two keys colliding to one hash count
 once; that bias belongs to the hash and is the standard theta-sketch
 trade; the convention is shared by every batch build, both DuckDB
-oracles, and the streaming writers, aligned family-wide in r11).
+oracles, and the streaming writers).
 Folding is a k-min merge — associative, commutative, idempotent (like
 HLL's register max), so per-partition partials, day cells, and
 streaming state all merge into exactly the sketch a flat build would
@@ -21,6 +21,10 @@ The hash family is the md5 'kmv|' slot discipline (first 8 hex chars as
 int64 in [0, 2^32)) both engines — and a pure-Python hashlib reference
 in the tests — reproduce bit-for-bit.
 
+``restore`` is the one definition of the KMV state format and ``fold``
+the one k-min merge: the streaming monitor (kmv_distinct) and the year
+writer (snapshots) both decode and fold their state through them.
+
 Reference note: the reference repo (MapReducer-PI-cs4433) has no sketch
 surface; this module belongs to the engine's beyond-reference pipeline
 band (SURVEY.md §2.8).
@@ -33,6 +37,50 @@ from pyspark.sql import functions as F
 
 K = 64
 SPACE = 1 << 32  # md5-derived 8-hex-digit hash space
+
+
+def restore(sample, k: int, n_rows: int | None = None, stored_k: int | None = None):
+    """Decode a k-min sample read back from operator state: sorted
+    unique, at most k values, all in [0, SPACE) — and never more values
+    than ``n_rows`` folded rows when the state stores that count. A KMV
+    sample is lossy downward only, so a corrupted row has no later
+    invariant to surface it: raise here. When the state carries the k
+    it was built with, that must match the configured k — a sample
+    truncated at a smaller k, resumed under a larger one, would pass
+    the size check and read as sub-k, i.e. a COMPLETE set under
+    exact-mode theta."""
+    import numpy as np
+
+    if stored_k is not None and int(stored_k) != int(k):
+        raise ValueError(
+            f"KMV state was built with k={int(stored_k)} but the stream "
+            f"is configured with k={int(k)}: refusing to resume — a "
+            "truncated sample would pass as a complete set under "
+            "exact-mode theta. Match k or rebuild the checkpoint."
+        )
+    s = np.asarray(sample, dtype=np.int64)
+    if (
+        s.shape[0] > k
+        or (np.diff(s) <= 0).any()
+        or (s < 0).any()
+        or (s >= SPACE).any()
+        or (n_rows is not None and n_rows < s.shape[0])
+    ):
+        raise ValueError(
+            f"KMV state reconstructs {s.shape[0]} sample values for "
+            f"{n_rows} rows (want sorted unique, <= {k} and <= rows, in "
+            "[0, 2^32)): state row corrupted"
+        )
+    return s
+
+
+def fold(sample, hashes, k: int):
+    """k-min merge of a batch of hashes into a sample: union distinct,
+    keep the k smallest. Associative, commutative and idempotent, so
+    chunking, arrival order and restarts cannot perturb the result."""
+    import numpy as np
+
+    return np.unique(np.concatenate((sample, hashes)))[:k]
 
 
 def h_col(key: Column) -> Column:

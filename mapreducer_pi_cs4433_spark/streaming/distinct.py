@@ -58,39 +58,14 @@ SNAPSHOT_SCHEMA = StructType(
     ]
 )
 
-# dense register array (length hll.M, values 0..hll.RHO_MAX) + exact
-# folded-row count — fixed-size typed state, never a pickle
+# dense register array + exact folded-row count (decoded by
+# hll.restore) — fixed-size typed state, never a pickle
 _STATE_SCHEMA = StructType(
     [
         StructField("registers", ArrayType(IntegerType()), False),
         StructField("n_rows", LongType(), False),
     ]
 )
-
-
-def _restore(registers, n_rows: int):
-    """Validate a state round trip. Registers are a DENSE array of
-    exactly M values in [0, RHO_MAX] — any other shape means the state
-    row was corrupted in the store, and because HLL is lossy there is
-    no downstream invariant (like the KLL weight) that would surface it
-    later: raise here instead of silently degrading every future
-    estimate."""
-    import numpy as np
-
-    regs = np.asarray(registers, dtype=np.int64)
-    if regs.shape != (hll.M,) or (regs < 0).any() or (regs > hll.RHO_MAX).any():
-        raise ValueError(
-            f"HLL state reconstructs {regs.shape[0] if regs.ndim else 0} "
-            f"registers (want {hll.M}) or out-of-range values: state row "
-            "corrupted"
-        )
-    if n_rows < int((regs > 0).sum()):
-        # touched registers can never exceed rows folded
-        raise ValueError(
-            f"HLL state claims {n_rows} rows but {int((regs > 0).sum())} "
-            "registers are touched: state row corrupted"
-        )
-    return regs
 
 
 def hll_distinct_stream(
@@ -114,7 +89,7 @@ def hll_distinct_stream(
         (ktype,) = key
         if state.exists:
             registers, n_rows = state.get
-            regs = _restore(registers, n_rows)
+            regs = hll.restore(registers, n_rows)
         else:
             regs = np.zeros(hll.M, dtype=np.int64)
             n_rows = 0

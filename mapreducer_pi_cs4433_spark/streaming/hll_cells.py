@@ -24,12 +24,12 @@ invariant), so at-least-once re-delivery overwrites identical rows
 (contrast the KLL writer's effect-idempotence for above-cap cells).
 
 The cell day is the UTC epoch day of the event timestamp
-(``unix_timestamp`` — session-tz-independent, the r10 sliding-window
-lesson), so the day boundary and the watermark share one clock and the
-closure timer at ``(day + 1) * 86_400_000`` ms is always legal while
-d-rows are deliverable. Hashing runs BEFORE the Python operator as JVM
-column math (the house rule); late rows past the watermark are
-recoverable through the snapshots.py repair pattern.
+(``unix_timestamp`` — session-tz-independent), so the day boundary and
+the watermark share one clock and the closure timer at ``(day + 1) *
+86_400_000`` ms is always legal while d-rows are deliverable. Hashing
+runs BEFORE the Python operator as JVM column math (the house rule);
+late rows past the watermark are recoverable through the snapshots.py
+repair pattern.
 
 Reference note: the reference repo (MapReducer-PI-cs4433) has no
 streaming or sketch surface; this module belongs to the engine's
@@ -53,7 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import hll
-from .snapshots import _restore, overwrite_partitions
+from .snapshots import overwrite_partitions
 
 _DAY_MS = 86_400_000
 
@@ -66,6 +66,7 @@ CELL_ROWS_SCHEMA = StructType(
     ]
 )
 
+# one flat register array per open cell shard (decoded by hll.restore)
 _STATE_SCHEMA = StructType(
     [StructField("regs", ArrayType(IntegerType()), False)]
 )
@@ -95,7 +96,7 @@ def hll_day_cell_stream(
     def update(key, pdf_iter, state: GroupState):
         ktype, day = key[0], key[1]
         if state.hasTimedOut:
-            regs = _restore(state.get[0])
+            regs = hll.restore(state.get[0])
             state.remove()
             touched = np.flatnonzero(regs)
             d = epoch + datetime.timedelta(days=int(day))
@@ -109,7 +110,7 @@ def hll_day_cell_stream(
             )
             return
         regs = (
-            _restore(state.get[0])
+            hll.restore(state.get[0])
             if state.exists
             else np.zeros(hll.M, dtype=np.int64)
         )

@@ -6,8 +6,8 @@ twin of streaming/snapshots.py, completing the lifecycle symmetry:
 
 One KLL sketch per OPEN (key, day) cell lives in operator state (the
 same typed-array item-table layout as the running monitor,
-streaming/quantiles.py, whose ``_restore`` integrity guard this module
-reuses); when the event-time watermark closes a day, the cell's final
+streaming/quantiles.py, written by kll.to_state and decoded by
+kll.restore); when the event-time watermark closes a day, the cell's final
 serialized items are emitted as (event_type, day, level, value) rows —
 the exact schema queries/sketches.py::_kll_day_cells persists — and the
 state is removed. Open cells bound the state (days-in-flight x keys,
@@ -31,8 +31,8 @@ Timer legality mirrors the year writer: a day-d row's timestamp is
 strictly below (d+1) * 86,400,000 ms, so the closure timer is always
 above the watermark while d-rows are deliverable. The cell day is the
 UTC epoch day of the event timestamp (``unix_timestamp`` — session-tz-
-independent for timestamp inputs, the r10 sliding-window lesson), so
-the day boundary and the watermark share one clock exactly.
+independent for timestamp inputs), so the day boundary and the
+watermark share one clock exactly.
 
 Reference note: the reference repo (MapReducer-PI-cs4433) has no
 streaming or sketch surface; this module belongs to the engine's
@@ -56,7 +56,6 @@ from pyspark.sql.types import (
 )
 
 from ..functions import kll
-from .quantiles import _restore
 
 _DAY_MS = 86_400_000
 
@@ -99,22 +98,8 @@ def kll_day_cell_stream(
 
     def update(key, pdf_iter, state: GroupState):
         ktype, day = key
-
-        def load():
-            # ONE integrity path for both branches (review finding r11:
-            # the restore + weight cross-check was duplicated verbatim)
-            levels, values, parity, n = state.get
-            sk = _restore(levels, values, parity, cap)
-            if kll.total_weight(sk) != n:
-                raise ValueError(
-                    f"KLL cell state for ({ktype!r}, day {day}) "
-                    f"reconstructs weight {kll.total_weight(sk)}, "
-                    f"expected {n}: state item table corrupted"
-                )
-            return sk
-
         if state.hasTimedOut:
-            sk = load()
+            sk = kll.restore(*state.get, cap=cap)
             state.remove()
             items = kll.to_items(sk)
             d = epoch + _dt.timedelta(days=int(day))
@@ -127,18 +112,10 @@ def kll_day_cell_stream(
                 }
             )
             return
-        sk = load() if state.exists else kll.new_sketch()
+        sk = kll.restore(*state.get, cap=cap) if state.exists else kll.new_sketch()
         for pdf in pdf_iter:
             kll.add_many(sk, pdf[value_col].to_numpy(), cap=cap)
-        items = kll.to_items(sk)
-        state.update(
-            (
-                [l for l, _ in items],
-                [v for _, v in items],
-                list(sk["parity"]),
-                kll.total_weight(sk),
-            )
-        )
+        state.update(kll.to_state(sk))
         # closure = watermark reaching the first instant AFTER day d;
         # always legal: delivered d-rows have ts < (d+1)-midnight, so
         # the watermark is below this while any d-row can still arrive

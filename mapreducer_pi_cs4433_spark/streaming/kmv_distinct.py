@@ -15,9 +15,9 @@ membership.
 Division of labor, same as the HLL monitor: the hash is computed BEFORE
 the stateful operator by the same JVM md5 column expression the batch
 entries use (functions/kmv.py::h_col), so the pandas state update is one
-vectorized unique-merge-truncate per batch. State is a typed long array
-(sorted, distinct, <= k values) plus the exact folded-row count — never
-a pickle.
+vectorized k-min merge (kmv.fold) per batch. State is a typed long array
+(sorted, distinct, <= k values) plus the exact folded-row count, decoded
+by kmv.restore — never a pickle.
 
 Correctness contract (kept live across batch boundaries and restarts):
 k-min merging is associative, commutative, and idempotent, so the
@@ -55,43 +55,21 @@ SNAPSHOT_SCHEMA = StructType(
         StructField("n_rows_seen", LongType(), False),
         StructField("n_sample", IntegerType(), False),
         # max sample hash when the sketch is full, else the full space
-        # (exact-mode theta — the r10 batch-entry semantics)
+        # (exact-mode theta, as in the batch entries)
         StructField("theta", LongType(), False),
         StructField("distinct_est", LongType(), False),
         StructField("sample", ArrayType(LongType()), False),
     ]
 )
 
-# sorted distinct k-min hashes + exact folded-row count
+# sorted distinct k-min hashes + exact folded-row count (decoded by
+# kmv.restore)
 _STATE_SCHEMA = StructType(
     [
         StructField("sample", ArrayType(LongType()), False),
         StructField("n_rows", LongType(), False),
     ]
 )
-
-
-def _restore(sample, n_rows: int, k: int):
-    """Validate a state round trip: the sample is sorted, distinct,
-    holds at most k values in [0, 2^32), and cannot claim more distinct
-    hashes than rows folded. A KMV sample is lossy downward only — a
-    corrupted row has no later invariant to surface it, so raise here."""
-    import numpy as np
-
-    s = np.asarray(sample, dtype=np.int64)
-    if (
-        s.shape[0] > k
-        or (np.diff(s) <= 0).any()
-        or (s < 0).any()
-        or (s >= kmv.SPACE).any()
-        or n_rows < s.shape[0]
-    ):
-        raise ValueError(
-            f"KMV state reconstructs {s.shape[0]} sample values for "
-            f"{n_rows} rows (want sorted distinct, <= {k}, in range): "
-            "state row corrupted"
-        )
-    return s
 
 
 def kmv_distinct_stream(
@@ -115,7 +93,7 @@ def kmv_distinct_stream(
         (ktype,) = key
         if state.exists:
             sample, n_rows = state.get
-            s = _restore(sample, n_rows, k)
+            s = kmv.restore(sample, k, n_rows)
         else:
             s = np.empty(0, dtype=np.int64)
             n_rows = 0
@@ -123,10 +101,7 @@ def kmv_distinct_stream(
         for pdf in pdf_iter:
             h = pdf["h"].to_numpy(dtype=np.int64)
             got += len(h)
-            # k-min merge: union distinct, keep the k smallest —
-            # associative/commutative/idempotent, so chunking and
-            # arrival order cannot perturb the final sample
-            s = np.unique(np.concatenate((s, h)))[:k]
+            s = kmv.fold(s, h, k)
         if not got:
             return
         n_rows += got

@@ -86,20 +86,7 @@ from ..functions.dedup import (
 
 _PAIR_SCHEMA = "id_a long, id_b long, jaccard double"
 
-# The directory protocol (per-batch overwrite parts, nested compacted
-# segments, leftover-ignoring reads, the lineage guard) lives in
-# streaming/partstore.py since a second ingest index arrived
-# (streaming/imagedup.py) — one definition of the listing rules. These
-# aliases keep this module's historical private API, which the protocol
-# tests drive directly.
-_part_dir = partstore.part_dir
-_segment_dir = partstore.segment_dir
-_committed_batches = partstore.committed_batches
-_compacted_hi = partstore.compacted_hi
-_newest_committed = partstore.newest_committed
-_live_parts = partstore.live_parts
-_read_parts = partstore.read_parts
-
+# the index tables this module keeps in its partstore directory
 _INDEX_KINDS = ("pairs", "sigs", "banded", "postings")
 
 
@@ -122,7 +109,7 @@ def read_emitted_pairs(spark: SparkSession, state_path: str) -> DataFrame:
     """Every near-dup pair emitted so far (id_a, id_b, jaccard) — the
     union the batch-equivalence test compares against
     dedup.minhash_lsh_pairs of the full corpus."""
-    got = _read_parts(spark, state_path, "pairs", exclude_batch=-1)
+    got = partstore.read_parts(spark, state_path, "pairs", exclude_batch=-1)
     if got is None:
         return spark.createDataFrame([], _PAIR_SCHEMA)
     return got
@@ -156,7 +143,7 @@ def match_and_register_batch(
     partstore.check_lineage(state_path, "pairs", batch_id)
     rows_per_band = num_perm // bands
 
-    # WITHIN-batch id uniqueness (self-review r9): two rows with the same
+    # WITHIN-batch id uniqueness: two rows with the same
     # doc_id in ONE batch (drop_exact_dups=False, or distinct texts under
     # one id) would otherwise slip past the committed-index guard below
     # and register a MERGED union-document — _hashed_postings would pool
@@ -168,12 +155,12 @@ def match_and_register_batch(
         F.expr(f"min_by({text_col}, md5({text_col}))").alias(text_col)
     )
 
-    hist_banded = _read_parts(spark, state_path, "banded", batch_id)
-    hist_sigs = _read_parts(spark, state_path, "sigs", batch_id)
-    hist_post = _read_parts(spark, state_path, "postings", batch_id)
+    hist_banded = partstore.read_parts(spark, state_path, "banded", batch_id)
+    hist_sigs = partstore.read_parts(spark, state_path, "sigs", batch_id)
+    hist_post = partstore.read_parts(spark, state_path, "postings", batch_id)
 
     if hist_sigs is not None:
-        # First-writer-wins id guard (r9 advice): a doc_id already in the
+        # First-writer-wins id guard: a doc_id already in the
         # committed index (a byte-identical re-crawl arriving past the
         # digest layer's watermark horizon, drop_exact_dups=False, or the
         # same id re-sent with changed text) must NOT register a second
@@ -275,13 +262,17 @@ def match_and_register_batch(
 
     # pairs first, then the index parts: a crash anywhere re-runs the
     # whole batch and overwrites every directory identically
-    pairs.write.mode("overwrite").parquet(_part_dir(state_path, "pairs", batch_id))
-    sigs_b.write.mode("overwrite").parquet(_part_dir(state_path, "sigs", batch_id))
+    pairs.write.mode("overwrite").parquet(
+        partstore.part_dir(state_path, "pairs", batch_id)
+    )
+    sigs_b.write.mode("overwrite").parquet(
+        partstore.part_dir(state_path, "sigs", batch_id)
+    )
     banded_b.write.mode("overwrite").parquet(
-        _part_dir(state_path, "banded", batch_id)
+        partstore.part_dir(state_path, "banded", batch_id)
     )
     post_b.write.mode("overwrite").parquet(
-        _part_dir(state_path, "postings", batch_id)
+        partstore.part_dir(state_path, "postings", batch_id)
     )
 
 

@@ -52,8 +52,8 @@ SNAPSHOT_SCHEMA = StructType(
     ]
 )
 
-# the sketch's item table, flattened into typed parallel arrays (never a
-# Python pickle in the state store)
+# the sketch's item table, flattened into typed parallel arrays by
+# kll.to_state and decoded by kll.restore (never a Python pickle)
 _STATE_SCHEMA = StructType(
     [
         StructField("item_levels", ArrayType(IntegerType()), False),
@@ -62,36 +62,6 @@ _STATE_SCHEMA = StructType(
         StructField("n", LongType(), False),
     ]
 )
-
-
-def _restore(levels, values, parity, cap: int) -> dict:
-    """Rebuild a sketch from its serialized item table. The stored items
-    respect the cap they were BUILT with, so the refill must not compact
-    — the stored PARITY schedule is then overlaid so future compactions
-    resume exactly where the previous process stopped.
-
-    Restarting a query with a SMALLER cap than its state was built with
-    would make the refill itself compact (self-review): the level
-    layout then no longer matches the stored parity array, and because
-    compaction preserves total weight exactly, the integrity guard
-    downstream would pass while the parity schedule — and with it the
-    determinism-across-restart claim — was silently wrong. Detected
-    here: compaction strictly shrinks the item count, so a refill that
-    lost items means a cap mismatch, and it raises instead of
-    degrading."""
-    items = list(zip(levels, values))
-    sk = kll.new_sketch()
-    kll.merge_items(sk, items, cap=cap)
-    if len(kll.to_items(sk)) != len(items):
-        raise ValueError(
-            f"KLL state holds {len(items)} items but refilling at "
-            f"cap={cap} compacted to {len(kll.to_items(sk))}: the state "
-            "was built with a larger cap — restart with the original "
-            "cap (or a fresh checkpoint for the new one)"
-        )
-    par = list(parity) + [0] * (len(sk["levels"]) - len(parity))
-    sk["parity"] = par[: len(sk["levels"])]
-    return sk
 
 
 def kll_quantile_stream(
@@ -111,21 +81,7 @@ def kll_quantile_stream(
 
     def update(key, pdf_iter, state: GroupState):
         (ktype,) = key
-        if state.exists:
-            levels, values, parity, n = state.get
-            sk = _restore(levels, values, parity, cap)
-            if kll.total_weight(sk) != n:
-                # the stored n is a serialization-integrity cross-check,
-                # not bookkeeping: a dropped/duplicated item row in the
-                # state round trip is silent in every quantile (the band
-                # absorbs it) but never in the exact weight
-                raise ValueError(
-                    f"KLL state for {ktype!r} reconstructs weight "
-                    f"{kll.total_weight(sk)}, expected {n}: state item "
-                    "table corrupted"
-                )
-        else:
-            sk = kll.new_sketch()
+        sk = kll.restore(*state.get, cap=cap) if state.exists else kll.new_sketch()
         got = 0
         for pdf in pdf_iter:
             vals = pdf[value_col].to_numpy()
@@ -137,15 +93,7 @@ def kll_quantile_stream(
         # batch entry's sketch_weight == n_events contract stays live in
         # the stream output instead of being shadowed by a side counter
         n_now = kll.total_weight(sk)
-        items = kll.to_items(sk)
-        state.update(
-            (
-                [l for l, _ in items],
-                [v for _, v in items],
-                list(sk["parity"]),
-                n_now,
-            )
-        )
+        state.update(kll.to_state(sk))
         yield pd.DataFrame(
             {
                 "event_type": [ktype],

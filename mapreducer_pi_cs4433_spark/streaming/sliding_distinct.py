@@ -88,28 +88,22 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _restore(days, regs):
-    """Validate a state round trip into {day: register row}. The cell
-    table is days sorted unique with exactly M registers each, values in
-    [0, RHO_MAX]; any other shape means the state row was corrupted in
-    the store — and HLL being lossy, nothing downstream would surface it
-    later, so raise here instead of silently degrading."""
+def _load_cells(days, regs):
+    """Decode the cell-table state row into {day: register row}. The
+    table layout is this module's own — days sorted unique, one
+    M-register row per day; the register rows themselves go through
+    hll.restore."""
     import numpy as np
 
     d = np.asarray(days, dtype=np.int64)
-    r = np.asarray(regs, dtype=np.int64)
-    if (
-        r.shape != (d.shape[0] * hll.M,)
-        or (np.diff(d) <= 0).any()
-        or (r < 0).any()
-        or (r > hll.RHO_MAX).any()
-    ):
+    if (np.diff(d) <= 0).any() or len(regs) != d.shape[0] * hll.M:
         raise ValueError(
-            f"HLL sliding state reconstructs {d.shape[0]} days with "
-            f"{r.shape[0]} register values (want days*{hll.M}, days "
-            "sorted unique, values in range): state row corrupted"
+            f"HLL sliding state holds {d.shape[0]} days and {len(regs)} "
+            f"register values (want days sorted unique, days*{hll.M} "
+            "values): state row corrupted"
         )
-    return {int(day): row for day, row in zip(d, r.reshape(-1, hll.M))}
+    rows = hll.restore(np.reshape(regs, (d.shape[0], hll.M)))
+    return dict(zip(d.tolist(), rows))
 
 
 def hll_sliding_distinct_stream(
@@ -142,7 +136,7 @@ def hll_sliding_distinct_stream(
     bound. Off (None) by default — enable it on any stream whose
     producers' clocks you do not control.
 
-    REPLAY CAVEAT (ADVICE r10 #2): the clamp compares against
+    REPLAY CAVEAT: the clamp compares against
     ``current_timestamp()``, a wall-clock predicate evaluated at
     PROCESSING time — deliberately, because event-time state is
     exactly what a poisoned producer controls, so the only trustworthy
@@ -169,7 +163,7 @@ def hll_sliding_distinct_stream(
     def update(key, pdf_iter, state: GroupState):
         (ktype,) = key
         wm_day = state.getCurrentWatermarkMs() // _DAY_MS
-        cells = _restore(*state.get) if state.exists else {}
+        cells = _load_cells(*state.get) if state.exists else {}
         touched: set[int] = set()
         if not state.hasTimedOut:
             for pdf in pdf_iter:
@@ -259,7 +253,7 @@ def hll_sliding_distinct_stream(
             # (unix_timestamp of an instant is session-tz-independent).
             # A to_date()-derived day drifts one day off in non-UTC
             # sessions and breaks the eviction invariant exactly at the
-            # window edge (r10 self-review finding).
+            # window edge.
             F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400))
             .cast("int")
             .alias("day"),

@@ -1,7 +1,7 @@
 """Streaming INGEST half of the per-period sketch-snapshot lifecycle.
 
-The batch side (queries/sketches.py::_hll_year_regs and its consumers,
-r11) reads persisted per-year HLL register tables and answers any
+The batch side (queries/sketches.py::_hll_year_regs and its consumers)
+reads persisted per-year HLL register tables and answers any
 pair/range question without rescanning closed periods. This module is
 how those snapshots come to EXIST on a live system: a stateful operator
 accumulates each period's registers in typed-array state and emits the
@@ -39,7 +39,7 @@ filters.
 Scale shape: the operators are keyed by (period, shard) where shard =
 pmod(hash-derived column, S) — the open period ingests S-ways parallel
 instead of funneling every row through ONE state key (the reference's
-``setNumReduceTasks(1)`` cliff, streamed — r11 verdict finding #1).
+``setNumReduceTasks(1)`` cliff, streamed).
 The HLL shard axis is the REGISTER LANE (pmod(idx, S)): shards own
 disjoint register subsets, so the union of shard emissions IS the flat
 build's register set and no fold is needed anywhere. The KMV shard
@@ -84,22 +84,9 @@ SNAPSHOT_ROWS_SCHEMA = StructType(
     ]
 )
 
-# one flat register array per open period — typed, never a pickle
+# one flat register array per open period (decoded by hll.restore) —
+# typed, never a pickle
 _STATE_SCHEMA = StructType([StructField("regs", ArrayType(IntegerType()), False)])
-
-
-def _restore(registers):
-    """Validate the state round trip: exactly M registers in range."""
-    import numpy as np
-
-    r = np.asarray(registers, dtype=np.int64)
-    if r.shape != (hll.M,) or (r < 0).any() or (r > hll.RHO_MAX).any():
-        raise ValueError(
-            f"HLL snapshot state reconstructs {r.shape[0]} registers "
-            f"(want {hll.M}, values in [0, {hll.RHO_MAX}]): state row "
-            "corrupted"
-        )
-    return r
 
 
 def _year_end_ms(y: int) -> int:
@@ -130,35 +117,33 @@ def hll_year_snapshot_stream(
     The operator is keyed by (year, register-lane shard): ``shard =
     pmod(idx, shards)`` partitions the 256 register lanes into
     ``shards`` DISJOINT subsets, so the open year's rows fan out to
-    ``shards`` parallel state tasks instead of one (the r11 verdict's
-    single-key-funnel fix) and — because no register lane is shared —
-    the union of the shards' emitted rows IS the year's register set,
-    bit-identical to a flat build with no fold step anywhere. Updates
-    fold register maxima into typed-array state (numpy maximum.at —
-    one pass per batch); every update (re-)arms an event-time timer at
-    the year's end instant, and the timeout path emits the shard's
-    touched lanes and REMOVES the state, so a closed year holds no
-    bytes anywhere except its emitted snapshot.
+    ``shards`` parallel state tasks instead of one and — because no
+    register lane is shared — the union of the shards' emitted rows IS
+    the year's register set, bit-identical to a flat build with no fold
+    step anywhere. Updates fold register maxima into typed-array state
+    (numpy maximum.at — one pass per batch); every update (re-)arms an
+    event-time timer at the year's end instant, and the timeout path
+    emits the shard's touched lanes and REMOVES the state, so a closed
+    year holds no bytes anywhere except its emitted snapshot.
 
-    Session-timezone safety (the r10 non-UTC eviction lesson, applied
-    at period grain): the GROUP key is ``year(date)`` — a property of
-    the DATE, timezone-independent — while ``cast("timestamp")`` pins
-    each date to its SESSION-LOCAL midnight instant and the closure
-    timer sits at the UTC year-end instant. Those clocks differ by the
-    session offset, but the invariant that matters holds in EVERY
-    timezone (|offset| <= 14 h < 24 h): a year-y date's instant is
-    strictly BEFORE year_end_ms(y), so the timer can neither fire while
-    y-rows are still deliverable nor be armed below the watermark; the
-    only timezone effect is that closure lands up to one offset later
-    in far-east sessions (conservative, never lossy). Pinned by the
-    UTC+14 test in tests/test_streaming_snapshots.py."""
+    Session-timezone safety: the GROUP key is ``year(date)`` — a
+    property of the DATE, timezone-independent — while
+    ``cast("timestamp")`` pins each date to its SESSION-LOCAL midnight
+    instant and the closure timer sits at the UTC year-end instant.
+    Those clocks differ by the session offset, but the invariant that
+    matters holds in EVERY timezone (|offset| <= 14 h < 24 h): a year-y
+    date's instant is strictly BEFORE year_end_ms(y), so the timer can
+    neither fire while y-rows are still deliverable nor be armed below
+    the watermark; the only timezone effect is that closure lands up to
+    one offset later in far-east sessions (conservative, never lossy).
+    Pinned by the UTC+14 test in tests/test_streaming_snapshots.py."""
     import numpy as np
     import pandas as pd
 
     def update(key, pdf_iter, state: GroupState):
         y = key[0]
         if state.hasTimedOut:
-            regs = _restore(state.get[0])
+            regs = hll.restore(state.get[0])
             state.remove()
             touched = np.flatnonzero(regs)
             yield pd.DataFrame(
@@ -170,7 +155,7 @@ def hll_year_snapshot_stream(
             )
             return
         regs = (
-            _restore(state.get[0])
+            hll.restore(state.get[0])
             if state.exists
             else np.zeros(hll.M, dtype=np.int64)
         )
@@ -216,22 +201,21 @@ def overwrite_partitions(
     batch_df: DataFrame, path: str, part_col: str
 ) -> None:
     """The ONE foreachBatch snapshot sink (shared by every writer in
-    this family — the year writers here and the day-cell writer in
-    streaming/kll_cells.py; review finding r11 deduplicated the copies):
-    land the batch under ``<path>/<part_col>=<v>/`` with DYNAMIC
-    partition overwrite, so at-least-once re-delivery replaces only the
-    partitions present in the batch — never appends a duplicate, never
-    touches earlier periods' directories. The overwrite mode is a
-    PER-WRITE DataFrameWriter option, not a session conf toggle: the
-    three snapshot writers share this sink and can run as concurrent
+    this family — the year writers here and the day-cell writers in
+    streaming/hll_cells.py and streaming/kll_cells.py): land the batch
+    under ``<path>/<part_col>=<v>/`` with DYNAMIC partition overwrite,
+    so at-least-once re-delivery replaces only the partitions present in
+    the batch — never appends a duplicate, never touches earlier
+    periods' directories. The overwrite mode is a PER-WRITE
+    DataFrameWriter option, not a session conf toggle: the three
+    snapshot writers share this sink and can run as concurrent
     foreachBatch streams in one SparkSession, where a save/restore of
     ``spark.sql.sources.partitionOverwriteMode`` could flip another
-    stream's in-flight overwrite back to static — a whole-table erase
-    (ADVICE r11 #1). Dynamic mode also makes an empty batch (a trigger
-    that closed nothing) a structural no-op — zero partitions in the
-    data means zero directories touched — so there is no pre-probe and
-    the batch plan executes EXACTLY ONCE per trigger (the r11
-    take(1)-double-execution fix; both properties are pinned in
+    stream's in-flight overwrite back to static — a whole-table erase.
+    Dynamic mode also makes an empty batch (a trigger that closed
+    nothing) a structural no-op — zero partitions in the data means zero
+    directories touched — so there is no pre-probe and the batch plan
+    executes EXACTLY ONCE per trigger (both properties are pinned in
     tests/test_streaming_snapshots.py)."""
     (
         batch_df.repartition(part_col)
@@ -259,18 +243,18 @@ def repair_hll_year_snapshots(
 ) -> None:
     """Batch BACKFILL for the writers' watermark trade: rows later than
     ``watermark`` past their period's end are discarded before the
-    streaming operator (module docstring), which r11 graded a terminal
-    loss. Register-max idempotence makes it recoverable instead — fold
-    the late rows' registers into the affected CLOSED years and rewrite
-    exactly those partitions through the idempotent sink. The repaired
-    store equals a flat build over original + late rows (max is
-    associative/commutative/idempotent — repair order, repair repetition,
-    and batch-vs-late split all collapse to the same value); untouched
-    years' partition directories are not rewritten (dynamic overwrite
-    only touches partitions present in the merged frame). Bounded work:
-    the merge ranks sketch-sized rows (<= affected-years x 256 + late
-    registers), never history — ``localCheckpoint`` materializes that
-    tiny result so the write does not read the path it overwrites."""
+    streaming operator (module docstring). Register-max idempotence
+    makes that loss recoverable — fold the late rows' registers into the
+    affected CLOSED years and rewrite exactly those partitions through
+    the idempotent sink. The repaired store equals a flat build over
+    original + late rows (max is associative/commutative/idempotent —
+    repair order, repair repetition, and batch-vs-late split all
+    collapse to the same value); untouched years' partition directories
+    are not rewritten (dynamic overwrite only touches partitions present
+    in the merged frame). Bounded work: the merge ranks sketch-sized
+    rows (<= affected-years x 256 + late registers), never history —
+    ``localCheckpoint`` materializes that tiny result so the write does
+    not read the path it overwrites."""
     spark = late_df.sparkSession
     late = (
         late_df.filter(
@@ -333,45 +317,12 @@ KMV_ROWS_SCHEMA = StructType(
 _KMV_STATE_SCHEMA = StructType(
     [
         StructField("hs", ArrayType(LongType()), False),
-        # k is PERSISTED with the sample: a checkpoint restarted with a
-        # LARGER k than the state was built with would otherwise pass
-        # the <= k size check and emit the previously-truncated sample
-        # as sub-k — which every consumer treats as a COMPLETE set
-        # under exact-mode theta, silently wrecking estimates (ADVICE
-        # r11 #2; the KMV analog of the KLL cap-mismatch guard in
-        # streaming/quantiles.py).
+        # k is PERSISTED with the sample so kmv.restore can refuse a
+        # restart under a different k (a truncated sample resumed under
+        # a larger k would read as a COMPLETE set)
         StructField("k", IntegerType(), False),
     ]
 )
-
-
-def _restore_kmv(hs, k: int, stored_k: int | None = None):
-    """Validate the k-min sample round trip: sorted unique, in the hash
-    space, at most k entries — and, when the state carries its build-k,
-    that it matches the stream's configured k (resuming a truncated
-    sample under a larger k would masquerade as a complete set)."""
-    import numpy as np
-
-    if stored_k is not None and int(stored_k) != int(k):
-        raise ValueError(
-            f"KMV snapshot state was built with k={int(stored_k)} but "
-            f"the stream is configured with k={int(k)}: refusing to "
-            "resume — a truncated sample would pass as a complete set "
-            "under exact-mode theta. Match k or rebuild the checkpoint."
-        )
-    a = np.asarray(hs, dtype=np.int64)
-    if (
-        a.shape[0] > k
-        or (np.diff(a) <= 0).any()
-        or (a < 0).any()
-        or (a >= kmv.SPACE).any()
-    ):
-        raise ValueError(
-            f"KMV snapshot state reconstructs {a.shape[0]} hashes "
-            f"(want <= {k}, sorted unique, in [0, 2^32)): state row "
-            "corrupted"
-        )
-    return a
 
 
 def kmv_year_snapshot_stream(
@@ -385,20 +336,20 @@ def kmv_year_snapshot_stream(
     """Per-year KMV k-min samples, emitted at event-time closure as
     (y, h) rows. The operator is keyed by (year, hash-residue shard):
     ``shard = pmod(h, shards)`` spreads the open year's rows over
-    ``shards`` parallel state tasks (the r11 verdict's single-key-funnel
-    fix), each holding the k-min of ITS residue class; a closed year
-    therefore emits <= shards * k candidate rows, and the SINK
-    (write_kmv_year_samples) folds them to the global k-min — correct
-    because every global top-k hash is within its residue class's
-    top-k (the batch builder's salted two-phase argument). The folded
-    store is the exact schema queries/sketches.py::_kmv_year_samples
-    persists, so the batch consumers (orders_kmv_set_difference /
+    ``shards`` parallel state tasks, each holding the k-min of ITS
+    residue class; a closed year therefore emits <= shards * k candidate
+    rows, and the SINK (write_kmv_year_samples) folds them to the global
+    k-min — correct because every global top-k hash is within its
+    residue class's top-k (the batch builder's salted two-phase
+    argument). The folded store is the exact schema
+    queries/sketches.py::_kmv_year_samples persists, so the batch
+    consumers (orders_kmv_set_difference /
     orders_kmv_diff_from_snapshots) run on a stream-built store
     unchanged. Hashing is JVM column math BEFORE the Python operator
     (kmv.h_col — the house rule); the state is one sorted <= k-long
-    array per (year, shard) plus its build-k (restart guard); each
-    batch folds via unique-merge-truncate (one vectorized pass). Timer
-    math and timezone reasoning are identical to
+    array per (year, shard) plus its build-k (restart guard, checked by
+    kmv.restore); each batch folds via kmv.fold (one vectorized pass).
+    Timer math and timezone reasoning are identical to
     hll_year_snapshot_stream."""
     import numpy as np
     import pandas as pd
@@ -406,20 +357,19 @@ def kmv_year_snapshot_stream(
     def update(key, pdf_iter, state: GroupState):
         y = key[0]
         if state.hasTimedOut:
-            hs = _restore_kmv(state.get[0], k, state.get[1])
+            hs = kmv.restore(state.get[0], k, stored_k=state.get[1])
             state.remove()
             yield pd.DataFrame(
                 {"y": [int(y)] * len(hs), "h": [int(h) for h in hs]}
             )
             return
         hs = (
-            _restore_kmv(state.get[0], k, state.get[1])
+            kmv.restore(state.get[0], k, stored_k=state.get[1])
             if state.exists
             else np.empty(0, dtype=np.int64)
         )
         for pdf in pdf_iter:
-            batch = pdf["h"].to_numpy(dtype=np.int64)
-            hs = np.unique(np.concatenate([hs, batch]))[:k]
+            hs = kmv.fold(hs, pdf["h"].to_numpy(dtype=np.int64), k)
         state.update(([int(h) for h in hs], int(k)))
         state.setTimeoutTimestamp(_year_end_ms(int(y)))
 

@@ -19,12 +19,10 @@ from pyspark.sql import functions as F
 
 from mapreducer_pi_cs4433_spark.functions import hll
 from mapreducer_pi_cs4433_spark.sources.loaders import load_table
-from mapreducer_pi_cs4433_spark.streaming.distinct import (
-    _restore,
-    hll_distinct_stream,
-)
+from mapreducer_pi_cs4433_spark.streaming.distinct import hll_distinct_stream
 
 from .conftest import SF_SMOKE
+from .test_sketch_state import HLL_WITH_ROWS, check_cases
 
 
 def _reference_registers(user_ids) -> list[int]:
@@ -133,22 +131,11 @@ def test_stream_hll_registers_match_reference_across_restarts(
 
 
 def test_state_roundtrip_detects_corruption():
-    """HLL is lossy, so unlike the KLL monitor no later invariant would
-    surface a mangled state row — the restore guard must catch every
-    corruption class at the boundary: truncated array, out-of-range
-    register, and an n_rows smaller than the touched-register count."""
-    regs = [0] * hll.M
-    regs[3] = 7
-    regs[200] = 41
-    assert _restore(regs, 10).tolist() == regs
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore(regs[1:], 10)
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([hll.RHO_MAX + 1] + regs[1:], 10)
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([-1] + regs[1:], 10)
-    with pytest.raises(ValueError, match="touched"):
-        _restore(regs, 1)
+    """hll_distinct_stream decodes its state row as
+    hll.restore(registers, n_rows): every corruption class of that call
+    shape (truncated array, out-of-range register, an n_rows smaller
+    than the touched-register count) raises at the boundary."""
+    check_cases(hll.restore, HLL_WITH_ROWS)
 
 
 def test_hll_sliding_window_boundaries_match_reference(spark):

@@ -17,12 +17,10 @@ from pyspark.sql import functions as F
 
 from mapreducer_pi_cs4433_spark.functions import kmv
 from mapreducer_pi_cs4433_spark.sources.loaders import load_table
-from mapreducer_pi_cs4433_spark.streaming.kmv_distinct import (
-    _restore,
-    kmv_distinct_stream,
-)
+from mapreducer_pi_cs4433_spark.streaming.kmv_distinct import kmv_distinct_stream
 
 from .conftest import SF_SMOKE
+from .test_sketch_state import KMV_SHARED, KMV_WITH_ROWS, check_cases
 
 _K = 8  # small enough that the smoke corpus fills the sketch
 
@@ -160,20 +158,11 @@ def test_stream_kmv_drops_null_keys_and_ids(spark):
 
 
 def test_restore_rejects_corrupted_state():
-    """Unsorted, oversized, out-of-range, or count-inconsistent samples
-    raise instead of silently degrading every future estimate."""
-    ok = _restore([1, 5, 9], 10, 16)
-    assert list(ok) == [1, 5, 9]
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([5, 1, 9], 10, 16)  # unsorted
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([1, 1, 9], 10, 16)  # duplicate
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore(list(range(17)), 100, 16)  # oversized
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([1, kmv.SPACE], 10, 16)  # out of range
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore([1, 5, 9], 2, 16)  # more samples than rows
+    """kmv_distinct_stream decodes its state row as
+    kmv.restore(sample, k, n_rows): unsorted, oversized, out-of-range,
+    or count-inconsistent samples raise instead of silently degrading
+    every future estimate."""
+    check_cases(kmv.restore, KMV_SHARED + KMV_WITH_ROWS)
 
 
 def test_live_churn_against_persisted_reference_sample(spark):

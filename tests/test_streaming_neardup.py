@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
 from mapreducer_pi_cs4433_spark.sources.loaders import load_table
+from mapreducer_pi_cs4433_spark.streaming import partstore
 from mapreducer_pi_cs4433_spark.streaming.neardup import (
     match_and_register_batch,
     neardup_ingest_stream,
@@ -172,8 +173,6 @@ def test_neardup_reingested_doc_id_is_not_reregistered(spark):
     duplicated posting rows inflate verify_exact_jaccard's n_common and
     size counts, so every later jaccard involving that doc is silently
     wrong and the batch-equivalence contract breaks."""
-    from mapreducer_pi_cs4433_spark.streaming.neardup import _read_parts
-
     chunks = _doc_chunks(spark)
     state = tempfile.mkdtemp(prefix="ndr_state_")
     try:
@@ -202,7 +201,7 @@ def test_neardup_reingested_doc_id_is_not_reregistered(spark):
             batch_id=2,
         )
         # exactly one signature row per doc across the whole index
-        sigs = _read_parts(spark, state, "sigs", exclude_batch=-1)
+        sigs = partstore.read_parts(spark, state, "sigs", exclude_batch=-1)
         dup_ids = (
             sigs.groupBy("id").count().filter(F.col("count") > 1).collect()
         )
@@ -226,11 +225,7 @@ def test_neardup_compaction_mid_stream_preserves_equivalence(spark):
     still equals the batch operator (r8 verdict ask #6 — the module
     prescribed compaction but nothing proved the ``b{id}/_SUCCESS``
     listing protocol and a compactor agree)."""
-    from mapreducer_pi_cs4433_spark.streaming.neardup import (
-        _committed_batches,
-        _compacted_hi,
-        compact_index,
-    )
+    from mapreducer_pi_cs4433_spark.streaming.neardup import compact_index
 
     chunks = _doc_chunks(spark)
     state = tempfile.mkdtemp(prefix="ndc_state_")
@@ -246,8 +241,8 @@ def test_neardup_compaction_mid_stream_preserves_equivalence(spark):
         assert compact_index(spark, state) == 0  # covers batch 0 only:
         # batch 1 is the newest committed — the only replay candidate —
         # and must stay a per-batch dir
-        assert _compacted_hi(state, "sigs") == 0
-        assert _committed_batches(state, "sigs") == [1]
+        assert partstore.compacted_hi(state, "sigs") == 0
+        assert partstore.committed_batches(state, "sigs") == [1]
         # crash-replay of the newest batch AFTER compaction: idempotent
         match_and_register_batch(spark, dfs[1], state, batch_id=1)
         match_and_register_batch(spark, dfs[2], state, batch_id=2)
@@ -272,9 +267,7 @@ def test_neardup_compaction_mid_stream_preserves_equivalence(spark):
         spark.read.parquet(seg).filter(
             F.col("id") % 3 == 0
         ).write.mode("overwrite").parquet(leftover)
-        from mapreducer_pi_cs4433_spark.streaming.neardup import _read_parts
-
-        sigs = _read_parts(spark, state, "sigs", exclude_batch=-1)
+        sigs = partstore.read_parts(spark, state, "sigs", exclude_batch=-1)
         assert (
             sigs.groupBy("id").count().filter(F.col("count") > 1).count()
             == 0
@@ -314,8 +307,6 @@ def test_neardup_within_batch_duplicate_id_registers_one_doc(spark):
     signed, so the module's id-uniqueness invariant holds within a batch
     too, and the surviving pairs still match the batch operator run on
     the same deduplicated corpus."""
-    from mapreducer_pi_cs4433_spark.streaming.neardup import _read_parts
-
     chunks = _doc_chunks(spark)
     state = tempfile.mkdtemp(prefix="ndw_state_")
     try:
@@ -325,9 +316,9 @@ def test_neardup_within_batch_duplicate_id_registers_one_doc(spark):
             + [Row(doc_id=dup_id, text="a second text under the same id")]
         )
         match_and_register_batch(spark, docs0, state, batch_id=0)
-        sigs = _read_parts(spark, state, "sigs", exclude_batch=-1)
+        sigs = partstore.read_parts(spark, state, "sigs", exclude_batch=-1)
         assert sigs.filter(F.col("id") == dup_id).count() == 1
-        post = _read_parts(spark, state, "postings", exclude_batch=-1)
+        post = partstore.read_parts(spark, state, "postings", exclude_batch=-1)
         n_shingles = post.filter(F.col("id") == dup_id).count()
         # the registered shingle set must equal ONE text's, never the
         # union of both (the union-doc failure mode)
@@ -364,11 +355,7 @@ def test_neardup_auto_compaction_bounds_parts_and_preserves_equivalence(
     history read."""
     import os as _os
 
-    from mapreducer_pi_cs4433_spark.streaming.neardup import (
-        _committed_batches,
-        _compacted_hi,
-        _INDEX_KINDS,
-    )
+    from mapreducer_pi_cs4433_spark.streaming.neardup import _INDEX_KINDS
 
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     rows = sorted(docs.collect(), key=lambda r: r.doc_id)
@@ -393,10 +380,10 @@ def test_neardup_auto_compaction_bounds_parts_and_preserves_equivalence(
         assert got == _batch_pairs(spark)
         assert got
         for kind in _INDEX_KINDS:
-            hi = _compacted_hi(state, kind)
+            hi = partstore.compacted_hi(state, kind)
             assert hi >= 0, kind  # a segment actually committed
             live_b = [
-                b for b in _committed_batches(state, kind) if b > hi
+                b for b in partstore.committed_batches(state, kind) if b > hi
             ]
             assert len(live_b) <= 2, (kind, hi, live_b)
             # covered leftovers were deleted, not just shadowed
@@ -440,12 +427,12 @@ def test_neardup_compaction_removes_subsumed_segment_and_recovers(spark):
             assert nd.compact_index(spark, state) == 1
         finally:
             nd._INDEX_KINDS = orig_kinds
-        assert nd._compacted_hi(state, "pairs") == 1
-        assert nd._compacted_hi(state, "sigs") == 0  # straggler
+        assert partstore.compacted_hi(state, "pairs") == 1
+        assert partstore.compacted_hi(state, "sigs") == 0  # straggler
         # the re-run must finish the stragglers, not no-op on pairs
         assert nd.compact_index(spark, state) == 1
         for kind in orig_kinds:
-            assert nd._compacted_hi(state, kind) == 1, kind
+            assert partstore.compacted_hi(state, kind) == 1, kind
             # and the subsumed c..._00000000 segment is gone
             listing = _os.listdir(_os.path.join(state, kind))
             assert [d for d in listing if d.startswith("c")] == [

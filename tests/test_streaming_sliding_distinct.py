@@ -27,7 +27,7 @@ import pytest
 
 from mapreducer_pi_cs4433_spark.functions import hll
 from mapreducer_pi_cs4433_spark.streaming.sliding_distinct import (
-    _restore,
+    _load_cells,
     hll_sliding_distinct_stream,
 )
 
@@ -202,17 +202,17 @@ def test_restore_rejects_corrupted_state():
     days = [100, 101]
     regs = list(np.zeros(2 * hll.M, dtype=np.int64))
     regs[0] = 5
-    cells = _restore(days, regs)
+    cells = _load_cells(days, regs)
     assert set(cells) == {100, 101} and cells[100][0] == 5
 
     with pytest.raises(ValueError, match="corrupted"):
-        _restore(days, regs[1:])  # truncated
+        _load_cells(days, regs[1:])  # truncated
     with pytest.raises(ValueError, match="corrupted"):
-        _restore([101, 100], regs)  # unsorted
+        _load_cells([101, 100], regs)  # unsorted
     bad = list(regs)
     bad[3] = hll.RHO_MAX + 1
     with pytest.raises(ValueError, match="corrupted"):
-        _restore(days, bad)  # out of range
+        _load_cells(days, bad)  # out of range
 
 
 def test_future_skew_clamp_blocks_watermark_poisoning(spark):

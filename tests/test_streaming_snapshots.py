@@ -29,13 +29,14 @@ import tempfile
 
 import pytest
 
-from mapreducer_pi_cs4433_spark.functions import hll
+from mapreducer_pi_cs4433_spark.functions import hll, kmv
 from mapreducer_pi_cs4433_spark.streaming.snapshots import (
-    _restore,
     hll_year_snapshot_stream,
     read_year_snapshots,
     write_year_snapshots,
 )
+
+from .test_sketch_state import HLL_FLAT, KMV_SHARED, KMV_STORED_K, check_cases
 
 
 def _reference_registers(keys) -> dict[int, int]:
@@ -205,18 +206,9 @@ def test_year_snapshots_close_exactly_and_idempotently(spark, provider):
 
 
 def test_snapshot_restore_rejects_corrupted_state():
-    import numpy as np
-
-    regs = list(np.zeros(hll.M, dtype=np.int64))
-    regs[3] = 7
-    r = _restore(regs)
-    assert r[3] == 7 and r.shape == (hll.M,)
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore(regs[1:])  # truncated
-    bad = list(regs)
-    bad[0] = hll.RHO_MAX + 1
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore(bad)  # out of range
+    """hll_year_snapshot_stream decodes each open year as
+    hll.restore(registers), with no row count."""
+    check_cases(hll.restore, HLL_FLAT)
 
 
 def test_year_snapshots_correct_in_far_east_session_tz(spark):
@@ -373,26 +365,10 @@ def test_kmv_year_samples_close_bit_exactly(spark, provider):
 
 
 def test_kmv_restore_rejects_corrupted_state():
-    from mapreducer_pi_cs4433_spark.streaming.snapshots import _restore_kmv
-
-    good = [5, 9, 1000]
-    assert list(_restore_kmv(good, k=8)) == good
-    assert list(_restore_kmv(good, k=8, stored_k=8)) == good
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore_kmv([9, 5, 1000], k=8)  # unsorted
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore_kmv([5, 5, 1000], k=8)  # duplicate
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore_kmv(list(range(9)), k=8)  # more than k
-    with pytest.raises(ValueError, match="corrupted"):
-        _restore_kmv([5, 2**32], k=8)  # outside the hash space
-    # k-mismatch restart guard (ADVICE r11 #2): a sample truncated at
-    # k=8 must NOT resume under k=16 — it would read as sub-k, i.e. a
-    # COMPLETE set under exact-mode theta. Both directions refuse.
-    with pytest.raises(ValueError, match="built with k=8"):
-        _restore_kmv(good, k=16, stored_k=8)
-    with pytest.raises(ValueError, match="built with k=16"):
-        _restore_kmv(good, k=8, stored_k=16)
+    """kmv_year_snapshot_stream decodes each open year as
+    kmv.restore(sample, k, stored_k=...): the shared corruption checks,
+    and a sample built under one k never resumes under another."""
+    check_cases(kmv.restore, KMV_SHARED + KMV_STORED_K)
 
 
 def test_hll_state_shards_across_lanes(spark):
