@@ -112,9 +112,18 @@ def ensure_table(
     """Return the persisted artifact table, building it on first use.
 
     The parquet _SUCCESS marker is the build-complete signal (a killed
-    build leaves no marker and is simply rebuilt)."""
+    build leaves no marker and is simply rebuilt).
+
+    A warm read skips parquet schema inference, which costs a Spark job
+    per read: the schema is kept on the session, keyed by (path, _SUCCESS
+    mtime_ns), so a rebuild, which writes a new marker, gets a new key.
+    Only the schema is kept, never the DataFrame, so every read lists the
+    files afresh: a stream-built store promoted into an artifact location
+    is rewritten in place by repair and compaction (dynamic partition
+    overwrite), which leaves _SUCCESS untouched."""
     path = artifact_dir(sf_dir, kind)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    marker = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(marker):
         import time
 
         t0 = time.perf_counter()
@@ -123,4 +132,12 @@ def ensure_table(
             w = w.partitionBy(partition_by)
         w.parquet(path)
         record_build(kind, time.perf_counter() - t0)
-    return spark.read.parquet(path)
+    schemas = getattr(spark, "_graft_artifact_schemas", None)
+    if schemas is None:
+        schemas = spark._graft_artifact_schemas = {}
+    key = (path, os.stat(marker).st_mtime_ns)
+    if key in schemas:
+        return spark.read.schema(schemas[key]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df

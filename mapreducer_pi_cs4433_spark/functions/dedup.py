@@ -29,7 +29,7 @@ from __future__ import annotations
 import math
 from decimal import Decimal
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .text import exploded_shingles
@@ -746,6 +746,18 @@ def minhash_lsh_pairs(
     return verify_exact_jaccard(candidates, posting, threshold)
 
 
+def checkpoint_observed(
+    df: DataFrame, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Eagerly localCheckpoint `df` and return it with `metrics` (named
+    aggregates over its rows, e.g. ``n=F.count(F.lit(1))``). The metrics
+    ride the checkpoint's own job as an Observation, so a fixpoint loop
+    reads its convergence test without a second job over the table."""
+    obs = Observation()
+    observed = df.observe(obs, *(m.alias(n) for n, m in metrics.items()))
+    return observed.localCheckpoint(eager=True), obs.get
+
+
 def connected_components(
     edges: DataFrame,
     id_a: str = "id_a",
@@ -758,22 +770,27 @@ def connected_components(
     node id in v's component — the canonical cluster id for dedup (every
     member of a near-dup cluster maps to the same keeper).
 
-    Scale shape: each superstep is one shuffle join (edges x labels) + one
-    grouped MIN + one outer merge — all relational, whole-stage codegen.
-    Labels are eagerly localCheckpoint-ed every superstep so the plan/lineage
-    stays O(1) deep instead of growing by three operators per iteration
-    (without truncation the fixpoint loop re-executes every prior superstep
-    and analysis cost grows quadratically). Convergence needs O(diameter)
-    supersteps; near-dup graphs are overwhelmingly pairs/stars (diameter
-    1-2), so 2-3 supersteps in practice. For adversarial long-chain graphs
-    use connected_components_star (the O(log n)-round alternating-star
-    contraction, implemented below); propagation is the catalog default
-    because each superstep is 3 jobs vs the star rounds' ~6, which wins
-    whenever the diameter is small — the near-dup regime.
+    Scale shape: the first superstep starts from comp(v) = v, so it is one
+    grouped aggregate over the symmetric edges, comp(v) = least(v, min
+    over N(v)). Each later superstep is one shuffle join (edges x labels)
+    + one grouped MIN + one outer merge — all relational, whole-stage
+    codegen. Labels are eagerly localCheckpoint-ed every superstep so the
+    plan/lineage stays O(1) deep instead of growing by three operators per
+    iteration (without truncation the fixpoint loop re-executes every
+    prior superstep and analysis cost grows quadratically). Convergence
+    needs O(diameter) supersteps; near-dup graphs are overwhelmingly
+    pairs/stars (diameter 1-2), so 2-3 supersteps in practice. For
+    adversarial long-chain graphs use connected_components_star (the
+    O(log n)-round alternating-star contraction, implemented below);
+    propagation is the catalog default because a superstep is cheaper
+    than a star round (one shuffle join and one grouped MIN against two
+    of each plus a distinct), which wins whenever the diameter is small —
+    the near-dup regime.
 
     This is deliberately an iterative driver-side loop — the one operator
     family (transitive closure) that a single declarative plan cannot
-    express; each iteration's `changed` count is the only driver readback.
+    express. Each superstep's count of changed labels is an Observation
+    on its checkpoint, so convergence costs no job of its own.
     """
     # Materialize the edge list ONCE, before symmetrizing: every superstep
     # joins against it, and without truncation each iteration (and both
@@ -785,13 +802,18 @@ def connected_components(
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    labels = (
-        sym.select("src")
-        .distinct()
-        .select(F.col("src").alias("id"), F.col("src").alias("comp"))
-        .localCheckpoint(eager=True)
+    labels, seen = checkpoint_observed(
+        sym.groupBy("src")
+        .agg(F.min("dst").alias("nbr_min"))
+        .select(
+            F.col("src").alias("id"),
+            F.least(F.col("src"), F.col("nbr_min")).alias("comp"),
+        ),
+        changed=F.count(F.when(F.col("comp") < F.col("id"), 1)),
     )
-    for _ in range(max_iter):
+    for _ in range(max_iter - 1):
+        if seen["changed"] == 0:
+            break
         nbr_min = (
             sym.join(
                 labels.select(
@@ -802,20 +824,17 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("c_dst").alias("nbr_min"))
         )
-        merged = labels.join(
-            nbr_min, labels["id"] == nbr_min["src"], "left"
-        ).select(
-            "id",
-            F.least(F.col("comp"), F.coalesce("nbr_min", F.col("comp"))).alias(
-                "comp"
+        merged, seen = checkpoint_observed(
+            labels.join(nbr_min, labels["id"] == nbr_min["src"], "left").select(
+                "id",
+                F.least(
+                    F.col("comp"), F.coalesce("nbr_min", F.col("comp"))
+                ).alias("comp"),
+                (F.col("nbr_min") < F.col("comp")).alias("_changed"),
             ),
-            (F.col("nbr_min") < F.col("comp")).alias("_changed"),
+            changed=F.count(F.when(F.col("_changed"), 1)),
         )
-        merged = merged.localCheckpoint(eager=True)
-        changed = merged.filter(F.col("_changed")).count()
         labels = merged.select("id", "comp")
-        if changed == 0:
-            break
     return labels
 
 
@@ -840,19 +859,21 @@ def connected_components_star(
     is (member, root). Each operation is one shuffle (groupBy the pivot
     node) plus a broadcast-size min table; the edge set is checkpointed per
     round to truncate lineage, and convergence is an exact edge-set
-    equality check (count + left_anti). Returns (id, comp) like
-    connected_components — equality between the two algorithms is
-    property-tested against a classical union-find.
+    equality check: the edge counts (Observations on the checkpoints, no
+    job of their own) and, only when they agree, one left_anti count.
+    Returns (id, comp) like connected_components — equality between the
+    two algorithms is property-tested against a classical union-find.
     """
-    e = (
+    e, seen = checkpoint_observed(
         edges.select(
             F.least(F.col(id_a), F.col(id_b)).alias("s"),
             F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
         )
         .filter(F.col("s") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )  # canonical undirected edges (s < b)
+    n_e = seen["n"]
 
     def _canon(df: DataFrame) -> DataFrame:
         return (
@@ -889,14 +910,14 @@ def connected_components_star(
                 m2.select(F.col("u").alias("x"), F.col("m").alias("y"))
             )
         )
-        new_e = small.localCheckpoint(eager=True)
-        n_new = new_e.count()
+        new_e, seen = checkpoint_observed(small, n=F.count(F.lit(1)))
+        n_new = seen["n"]
         changed = (
             new_e.join(e, ["s", "b"], "left_anti").count()
-            if n_new == e.count()
+            if n_new == n_e
             else 1
         )
-        e = new_e
+        e, n_e = new_e, n_new
         if changed == 0:
             break
     # fixed point: every edge is (root=s, member=b); roots label themselves

@@ -12,8 +12,13 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import uuid
+from collections.abc import Callable
+from typing import TypeVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -35,6 +40,25 @@ def count_exchanges(df: DataFrame) -> int:
     # formatted mode prints one "(N) Exchange" header per node; broadcast
     # exchanges print as "(N) BroadcastExchange" and are excluded
     return len(re.findall(r"\(\d+\) Exchange\b", plan))
+
+
+def run_counting_jobs(spark: SparkSession, fn: Callable[[], T]) -> tuple[T, int]:
+    """Call `fn` under a fresh Spark job group and return its result with
+    the number of Spark jobs it ran (statusTracker). For a query function
+    this is its eager driver work — checkpoints, counts, collects, schema
+    inference — the per-query job budget that tests pin."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the listener bus: drain it, so the jobs
+    # of the call that just returned are all recorded
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

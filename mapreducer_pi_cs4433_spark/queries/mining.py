@@ -10,14 +10,13 @@ family rather than another variation of a covered one:
   prefix filtering is exact AND pruned — the operator a
   contamination/compliance sweep needs when "we found every pair" must
   be provable.
-- ``graph_kcore_census`` — k-core decomposition by fixed unrolled
-  peeling: the SUBGRAPH-refinement member of the iterative-graph family
+- ``graph_kcore_census`` — k-core decomposition by capped peeling:
+  the SUBGRAPH-refinement member of the iterative-graph family
   (PageRank = per-node weighted aggregate, LPA = per-node plurality,
   components = reachability; k-core iteratively deletes). Peeling is
-  IDEMPOTENT at its fixpoint, so a fixed-iteration unroll equals the
-  true k-core once converged and both engines run the same fixed
-  program either way — convergence at the test scale factors is
-  asserted separately (peel N == peel N+1).
+  IDEMPOTENT at its fixpoint, so stopping there returns what the fixed
+  program of the oracle returns — convergence at the test scale factors
+  is asserted separately against a Python peel run to its fixpoint.
 - ``text_collocation_pmi`` — top-K adjacent-token collocations ranked
   by PMI. PMI's log is monotone in the exact rational
   c_ab / (c_a * c_b), so the ranking runs on integer-scaled exact
@@ -34,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import dedup
+from ..functions.artifacts import artifact_dir, parquet_num_rows
 from .catalog import _fmt_doc, _t, query
 from .extensions import (
     _SHINGLE_K,
@@ -161,8 +161,9 @@ def _restrict(sym: DataFrame, keep: DataFrame, _hint) -> DataFrame:
 def _kcore_degree_table(
     spark: SparkSession, sf_dir: str, k: int, peels: int
 ) -> DataFrame:
-    """Degree table of the graph after `peels` rounds of k-peeling —
-    the shared kernel of the census query and the convergence test.
+    """Degree table of the graph after at most `peels` rounds of
+    k-peeling, stopping at the fixpoint — the shared kernel of the census
+    query and the convergence test.
 
     Keeper sets are NESTED (keep_i ⊆ keep_{i-1}: a peeled node has no
     rows in the next degree table), so round i restricts the BASE edge
@@ -172,7 +173,16 @@ def _kcore_degree_table(
     round); the edge-sized stream is NEVER materialized and never feeds
     more than one lineage — the naive edges-carried-forward unroll
     tripled its fact-sized subtree per round (3^peels plan explosion:
-    730 exchanges at 6 peels, caught by plan inspection r8)."""
+    730 exchanges at 6 peels, caught by plan inspection r8).
+
+    Nesting also makes the fixpoint test exact and free: equal keeper
+    SIZE in two consecutive rounds means an equal keeper SET, after
+    which every further round is a no-op. Each keeper's size is an
+    Observation on its own checkpoint job, and round 1 compares against
+    the node count in the degree artifact's parquet footers (None when
+    the footers can't be read: round 1 then never stops early). So the
+    loop stops at the fixpoint and returns exactly what `peels` rounds
+    would."""
     sym, _deg = ensure_pagerank_graph(spark, sf_dir)
     _hint = graph_broadcast_hint(spark, sf_dir)
     # r13 (optimization): degrees aggregate on DST, not src. The edge
@@ -184,16 +194,20 @@ def _kcore_degree_table(
     # reduces each peel's exchange from |E| rows to ~|V| (guide §2.3;
     # measured 2.50 -> 1.94 s at sf0.1). Output keeps the src column
     # name — it is the node id either way.
+    prev = parquet_num_rows(artifact_dir(sf_dir, "pr_graph_deg"))
     keep = None
     for _ in range(peels):
         edges = sym if keep is None else _restrict(sym, keep, _hint)
-        keep = (
+        keep, seen = dedup.checkpoint_observed(
             edges.groupBy("dst")
             .agg(F.count("*").alias("c"))
             .filter(F.col("c") >= k)
-            .select(F.col("dst").alias("node"))
-            .localCheckpoint()
+            .select(F.col("dst").alias("node")),
+            n=F.count(F.lit(1)),
         )
+        if seen["n"] == prev:
+            break
+        prev = seen["n"]
     return _restrict(sym, keep, _hint).groupBy(
         F.col("dst").alias("src")
     ).agg(F.count("*").alias("c"))
@@ -201,17 +215,19 @@ def _kcore_degree_table(
 
 @query("graph_kcore_census", oracle=_kcore_oracle(_KCORE_K, _KCORE_PEELS))
 def graph_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{k}-core of the part-supplier co-purchase graph by {p} unrolled
-    peeling rounds: each round drops nodes with degree < {k} and
-    restricts the edge list to survivors. Peeling is IDEMPOTENT once
-    converged (a converged core loses nothing to another round), so the
-    fixed unroll equals the true k-core whenever {p} rounds suffice —
-    asserted by peel({p}) == peel({p}+1) at sf0.001 and sf0.01 on every
-    suite run and at sf0.1 under the full gate (tests/test_mining.py;
-    measured convergence depth per SF recorded in CORRECTNESS_NOTES.md)
-    — and the oracle runs the IDENTICAL fixed program, so the hash
-    check holds by construction even before convergence. Output: census of
-    the surviving subgraph by within-core degree.
+    """{k}-core of the part-supplier co-purchase graph by at most {p}
+    peeling rounds, stopping at the fixpoint: each round drops nodes with
+    degree < {k} and restricts the edge list to survivors. Peeling is
+    IDEMPOTENT once converged (a converged core loses nothing to another
+    round), so the loop stops as soon as a round keeps every node of the
+    round before it, and its result equals {p} fixed rounds — the program
+    the oracle runs, so the hash check holds by construction even when {p}
+    rounds do not reach the fixpoint. That they do at sf0.001 and sf0.01
+    on every suite run, and at sf0.1 under the full gate, is asserted
+    against an independent Python peel run to its fixpoint
+    (tests/test_mining.py; measured convergence depth per SF recorded in
+    CORRECTNESS_NOTES.md). Output: census of the surviving subgraph by
+    within-core degree.
 
     Scale shape per round — the fourth member of the iterative-graph
     family over the SAME persisted edge artifact: one pass over the
@@ -228,7 +244,9 @@ def graph_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     and never fans out (the edges-carried-forward form tripled its
     fact-sized lineage per round — a 3^{p} plan explosion, caught and
     killed by plan inspection). Peeling only SHRINKS the keeper, so
-    every later round is cheaper than its predecessor."""
+    every later round is cheaper than its predecessor, and a round that
+    shrinks nothing ends the loop: its size, observed on its checkpoint,
+    equals the previous round's."""
     d = _kcore_degree_table(spark, sf_dir, _KCORE_K, _KCORE_PEELS)
     return d.groupBy(F.col("c").alias("core_degree")).agg(
         F.count("*").alias("n_nodes"),

@@ -163,8 +163,11 @@ def read_hll_day_cells(spark, path: str) -> DataFrame:
     reg_val) cell table — column-compatible with
     queries/sketches.py::_hll_day_cells, so every batch cell consumer
     and operators/sketch_compaction.py::compact_hll_day_cells run on a
-    stream-built store unchanged."""
-    return spark.read.parquet(path).select(
+    stream-built store unchanged. The store's schema is known
+    (CELL_ROWS_SCHEMA), so the read runs no schema-inference job; the
+    file listing is still fresh on every call, so a new ``day=``
+    partition shows up on the next read."""
+    return spark.read.schema(CELL_ROWS_SCHEMA).parquet(path).select(
         "event_type",
         F.col("day").cast("date").alias("day"),
         F.col("idx").cast("int").alias("idx"),

@@ -1,0 +1,134 @@
+"""Per-query job budgets and warm artifact reads.
+
+A query function's eager driver work (checkpoints, counts, collects,
+schema inference) runs as Spark jobs before its plan executes, and at
+small scale each job's fixed cost outweighs its rows. The budgets below
+are the measured warm job counts at sf0.001, so a new eager action in a
+pinned query fails here. The artifact cases guard the schema memo that
+lets a warm artifact read run no job: it must never serve a stale schema
+or a stale file listing.
+"""
+
+from __future__ import annotations
+
+import datetime
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from mapreducer_pi_cs4433_spark.functions.artifacts import (
+    artifact_dir,
+    ensure_table,
+)
+from mapreducer_pi_cs4433_spark.plans.inspect import run_counting_jobs
+from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
+from mapreducer_pi_cs4433_spark.streaming.hll_cells import (
+    CELL_ROWS_SCHEMA,
+    read_hll_day_cells,
+    write_hll_day_cells,
+)
+from mapreducer_pi_cs4433_spark.streaming.snapshots import overwrite_partitions
+
+from .conftest import SF_SMOKE
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        # one keeper checkpoint (2 jobs under AQE): sf0.001 is a 3-core
+        # already, so round 1 matches the footer node count and stops
+        ("graph_kcore_census", 2),
+        # edge checkpoint, the aggregate superstep 1, and one join
+        # superstep that changes nothing
+        ("dedup_clusters", 8),
+        ("dedup_prefix_filter", 0),
+        ("dedup_keeper_selection", 0),
+    ],
+)
+def test_warm_query_function_job_budget(spark, name, budget):
+    fn = QUERIES[name]
+    fn(spark, SF_SMOKE)  # builds artifacts on a fresh index dir
+    _, jobs = run_counting_jobs(spark, lambda: fn(spark, SF_SMOKE))
+    assert jobs <= budget
+
+
+@pytest.fixture
+def artifact_sf(tmp_path, monkeypatch):
+    """An empty corpus dir whose artifacts live under tmp_path."""
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    return str(sf)
+
+
+def test_warm_ensure_table_runs_no_job(spark, artifact_sf):
+    def build():
+        return spark.range(5).withColumn("v", F.col("id") * 2)
+
+    ensure_table(spark, artifact_sf, "t", build)
+    df, jobs = run_counting_jobs(
+        spark, lambda: ensure_table(spark, artifact_sf, "t", build)
+    )
+    assert jobs == 0
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (i, 2 * i) for i in range(5)
+    ]
+
+
+def test_rebuilt_artifact_serves_new_schema(spark, artifact_sf):
+    first = ensure_table(spark, artifact_sf, "t", lambda: spark.range(3))
+    assert first.columns == ["id"]
+    os.remove(os.path.join(artifact_dir(artifact_sf, "t"), "_SUCCESS"))
+    rebuilt = ensure_table(
+        spark,
+        artifact_sf,
+        "t",
+        lambda: spark.range(2).select(
+            F.col("id").cast("string").alias("name"), F.lit(7).alias("n")
+        ),
+    )
+    assert dict(rebuilt.dtypes) == {"name": "string", "n": "int"}
+    assert sorted(tuple(r) for r in rebuilt.collect()) == [("0", 7), ("1", 7)]
+
+
+def test_partition_added_to_promoted_store_is_read(spark, artifact_sf):
+    """A store rewritten in place by dynamic partition overwrite keeps
+    its _SUCCESS marker, so the memoized schema is reused — but the file
+    listing must be fresh."""
+
+    def rows(day):
+        return spark.range(2).select(F.col("id").alias("v"), F.lit(day).alias("day"))
+
+    ensure_table(spark, artifact_sf, "s", lambda: rows("a"), partition_by="day")
+    path = artifact_dir(artifact_sf, "s")
+    marker = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
+    assert ensure_table(spark, artifact_sf, "s", None).count() == 2
+
+    overwrite_partitions(rows("b"), path, "day")
+    assert os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns == marker
+    got = ensure_table(spark, artifact_sf, "s", None)
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (0, "a"), (0, "b"), (1, "a"), (1, "b")
+    ]
+
+
+def test_hll_cell_read_back_runs_no_job_and_sees_new_days(spark, tmp_path):
+    store = str(tmp_path / "cells")
+
+    def land(day):
+        write_hll_day_cells(
+            spark.createDataFrame(
+                [("view", day, 3, 5), ("buy", day, 7, 2)], CELL_ROWS_SCHEMA
+            ),
+            store,
+        )
+
+    land(datetime.date(2024, 1, 5))
+    df, jobs = run_counting_jobs(spark, lambda: read_hll_day_cells(spark, store))
+    assert jobs == 0
+    assert df.count() == 2
+    land(datetime.date(2024, 1, 6))
+    assert {
+        str(r.day) for r in read_hll_day_cells(spark, store).collect()
+    } == {"2024-01-05", "2024-01-06"}

@@ -1673,52 +1673,113 @@ _kcore_edges = st.lists(
 )
 
 
-@settings(deadline=None, max_examples=8, suppress_health_check=list(HealthCheck))
-@given(rows=_kcore_edges)
-def test_prop_kcore_equals_python_peel(spark, rows):
-    """The fixed-peel k-core census must equal the sequential Python
-    peel on arbitrary little graphs — duplicate lineitem rows (edge
-    dedup), stars that dissolve entirely (empty census), nodes whose
-    neighbors are peeled under them mid-round."""
-    import shutil
+def _kcore_census_ref(rows, peels):
+    """Sequential Python peel of the co-purchase graph of `rows`, exactly
+    `peels` rounds (the fixed program the oracle runs), as census rows
+    (core_degree, n_nodes, n_suppliers, min_node)."""
     from collections import defaultdict
 
+    from mapreducer_pi_cs4433_spark.queries.mining import _KCORE_K
+
+    adj = defaultdict(set)
+    for a, b in {(a, 1_000_000 + b) for a, b in rows}:
+        adj[a].add(b)
+        adj[b].add(a)
+    nodes = set(adj)
+    for _ in range(peels):
+        nodes = {n for n in nodes if len(adj[n] & nodes) >= _KCORE_K}
+    by_deg = defaultdict(list)
+    for n in nodes:
+        c = len(adj[n] & nodes)
+        if c > 0:
+            by_deg[c].append(n)
+    return {
+        (c, len(ns), sum(1 for n in ns if n >= 1_000_000), min(ns))
+        for c, ns in by_deg.items()
+    }
+
+
+def _kcore_census(spark, rows):
+    import shutil
+
     from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
-    from mapreducer_pi_cs4433_spark.queries.mining import (
-        _KCORE_K,
-        _KCORE_PEELS,
-    )
 
     d = _tmp_sf_dir(
         spark, lineitem=(list(rows), "l_partkey long, l_suppkey long")
     )
     try:
-        got = {
+        return {
             (r.core_degree, r.n_nodes, r.n_suppliers, r.min_node)
             for r in QUERIES["graph_kcore_census"](spark, d).collect()
         }
-        edges = {(a, 1_000_000 + b) for a, b in rows}
-        adj = defaultdict(set)
-        for a, b in edges:
-            adj[a].add(b)
-            adj[b].add(a)
-        nodes = set(adj)
-        for _ in range(_KCORE_PEELS):
-            nodes = {
-                n for n in nodes if len(adj[n] & nodes) >= _KCORE_K
-            }
-        deg = {n: len(adj[n] & nodes) for n in nodes}
-        by_deg = defaultdict(list)
-        for n, c in deg.items():
-            if c > 0:
-                by_deg[c].append(n)
-        want = {
-            (c, len(ns), sum(1 for n in ns if n >= 1_000_000), min(ns))
-            for c, ns in by_deg.items()
-        }
-        assert got == want
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+@settings(deadline=None, max_examples=8, suppress_health_check=list(HealthCheck))
+@given(rows=_kcore_edges)
+def test_prop_kcore_equals_python_peel(spark, rows):
+    """The k-core census must equal the sequential Python peel on
+    arbitrary little graphs — duplicate lineitem rows (edge dedup), stars
+    that dissolve entirely (empty census), nodes whose neighbors are
+    peeled under them mid-round."""
+    from mapreducer_pi_cs4433_spark.queries.mining import _KCORE_PEELS
+
+    assert _kcore_census(spark, rows) == _kcore_census_ref(rows, _KCORE_PEELS)
+
+
+def _kcore_chain(n):
+    """A K(4,4) core (parts 1-4, suppliers 1-4) plus a path of n nodes
+    alternating part / supplier, 10, 10, 11, 11, ... Path node i has one
+    core neighbor (the last node two) besides its path neighbors, so its
+    degree is 3 until node i-1 is peeled: the 3-peel removes node i in
+    round i+1, one node per round, and the core stays."""
+    rows = [(p, q) for p in range(1, 5) for q in range(1, 5)]
+    for i in range(n):
+        j = 10 + i // 2
+        if i % 2 == 0:  # part j
+            rows += [(j, 1)] + ([(j, 2)] if i == n - 1 else [])
+            if i + 1 < n:
+                rows.append((j, j))
+        else:  # supplier j
+            rows += [(1, j)] + ([(2, j)] if i == n - 1 else [])
+            if i + 1 < n:
+                rows.append((j + 1, j))
+    return rows
+
+
+@pytest.mark.parametrize(
+    "rows, sizes",
+    [
+        # cascade: 11 nodes, one peeled per round, fixpoint seen in round 4
+        (_kcore_chain(3), [10, 9, 8, 8]),
+        # 8 rounds needed: the cap binds and no round may stop early
+        (_kcore_chain(8), [15, 14, 13, 12, 11, 10]),
+        # a star dissolves: the last two keepers are empty checkpoints
+        ([(1, 1), (1, 2), (1, 3)], [1, 0, 0]),
+    ],
+    ids=["cascade", "cap_binds", "dissolves"],
+)
+def test_kcore_stops_at_fixpoint(spark, monkeypatch, rows, sizes):
+    """The peel loop stops when a keeper is as large as the one before
+    it (round 1 against the footer node count) and never before: each
+    round's keeper size, read from the Observation on its checkpoint, is
+    recorded, and the census still equals the fixed-round Python peel."""
+    from mapreducer_pi_cs4433_spark.functions import dedup
+    from mapreducer_pi_cs4433_spark.queries.mining import _KCORE_PEELS
+
+    assert _KCORE_PEELS == 6  # the expected round sizes assume it
+    seen_sizes = []
+    checkpoint_observed = dedup.checkpoint_observed
+
+    def recording(df, **metrics):
+        out, seen = checkpoint_observed(df, **metrics)
+        seen_sizes.append(seen["n"])
+        return out, seen
+
+    monkeypatch.setattr(dedup, "checkpoint_observed", recording)
+    assert _kcore_census(spark, rows) == _kcore_census_ref(rows, _KCORE_PEELS)
+    assert seen_sizes == sizes
 
 
 _pmi_docs = st.lists(

@@ -1,9 +1,12 @@
 """Isolated per-query profiler for the optimization rounds.
 
 Times one or more catalog queries with the noop sink (guide §1.4), N
-repeats each (min = least-contended sample on this shared host), and
-optionally dumps the formatted physical plan to a file — the
-before/after evidence the optimization rounds commit under plans/r{N}/.
+repeats each (min = least-contended sample on a shared host), prints the
+Spark jobs of each repeat's query-function call (`fn_jobs`: the eager
+driver work the per-query job budgets in tests/test_job_budgets.py pin)
+and of its plan execution (`exec_jobs`), and optionally dumps the
+formatted physical plan to a file — the before/after evidence the
+optimization rounds commit under plans/r{N}/.
 
     python tools/opt_profile.py QUERY [QUERY...] [--repeats 3] \
         [--sf-dir /root/testdata/sf0.1] [--plan-dir plans/r12] \
@@ -22,7 +25,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mapreducer_pi_cs4433_spark.plans.inspect import formatted_plan  # noqa: E402
+from mapreducer_pi_cs4433_spark.plans.inspect import (  # noqa: E402
+    formatted_plan,
+    run_counting_jobs,
+)
 from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES  # noqa: E402
 from mapreducer_pi_cs4433_spark.session import get_spark  # noqa: E402
 
@@ -40,16 +46,20 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in args.names:
         fn = QUERIES[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        samples = []
+        samples, jobs = [], []
         for i in range(args.repeats):
             t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            df, fn_jobs = run_counting_jobs(
+                spark, lambda: fn(spark, args.sf_dir)
+            )
+            _, exec_jobs = run_counting_jobs(
+                spark, lambda: df.write.format("noop").mode("overwrite").save()
+            )
             samples.append(round(time.perf_counter() - t0, 3))
+            jobs.append(f"{fn_jobs}+{exec_jobs}")
         print(
             f"{name}: min={min(samples)} med={sorted(samples)[len(samples)//2]}"
-            f" samples={samples}",
+            f" samples={samples} fn_jobs+exec_jobs={jobs}",
             flush=True,
         )
         if args.plan_dir:
