@@ -102,6 +102,32 @@ def parquet_num_rows(path: str) -> int | None:
         return None
 
 
+def read_committed_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet directory that is complete once its _SUCCESS
+    marker exists, without a schema-inference job after the first read.
+
+    Parquet schema inference costs a Spark job per read, so the schema
+    is kept on the session, keyed by (path, _SUCCESS mtime_ns): a
+    rewrite that writes a new marker gets a new key. Only the schema is
+    kept, never the DataFrame, so every read lists the files afresh: a
+    store rewritten in place by dynamic partition overwrite, which
+    leaves _SUCCESS untouched, still shows its new partitions. A
+    directory without the marker (a write that never finished) is read
+    with inference and nothing is kept."""
+    try:
+        key = (path, os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns)
+    except OSError:
+        return spark.read.parquet(path)
+    schemas = getattr(spark, "_graft_artifact_schemas", None)
+    if schemas is None:
+        schemas = spark._graft_artifact_schemas = {}
+    if key in schemas:
+        return spark.read.schema(schemas[key]).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df
+
+
 def ensure_table(
     spark: SparkSession,
     sf_dir: str,
@@ -112,18 +138,11 @@ def ensure_table(
     """Return the persisted artifact table, building it on first use.
 
     The parquet _SUCCESS marker is the build-complete signal (a killed
-    build leaves no marker and is simply rebuilt).
-
-    A warm read skips parquet schema inference, which costs a Spark job
-    per read: the schema is kept on the session, keyed by (path, _SUCCESS
-    mtime_ns), so a rebuild, which writes a new marker, gets a new key.
-    Only the schema is kept, never the DataFrame, so every read lists the
-    files afresh: a stream-built store promoted into an artifact location
-    is rewritten in place by repair and compaction (dynamic partition
-    overwrite), which leaves _SUCCESS untouched."""
+    build leaves no marker and is simply rebuilt). A warm read runs no
+    schema-inference job (``read_committed_parquet``); a rebuild writes
+    a new marker and so is read with its new schema."""
     path = artifact_dir(sf_dir, kind)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         import time
 
         t0 = time.perf_counter()
@@ -132,12 +151,4 @@ def ensure_table(
             w = w.partitionBy(partition_by)
         w.parquet(path)
         record_build(kind, time.perf_counter() - t0)
-    schemas = getattr(spark, "_graft_artifact_schemas", None)
-    if schemas is None:
-        schemas = spark._graft_artifact_schemas = {}
-    key = (path, os.stat(marker).st_mtime_ns)
-    if key in schemas:
-        return spark.read.schema(schemas[key]).parquet(path)
-    df = spark.read.parquet(path)
-    schemas[key] = df.schema
-    return df
+    return read_committed_parquet(spark, path)

@@ -22,7 +22,7 @@ one-sided in-band contract.
 
 ``restore`` is the one definition of the HLL state format: every
 streaming operator that keeps registers in state (distinct, snapshots,
-hll_cells, sliding_distinct) decodes its state row through it.
+sliding_distinct) decodes its state row through it.
 
 Reference note: the reference repo (MapReducer-PI-cs4433) has no sketch
 surface; this module belongs to the engine's beyond-reference pipeline

@@ -13,23 +13,41 @@ with this writer the full lifecycle is streamed end to end: ingest
 (here) -> consume (cell merges, zero raw rescans) -> repair
 (snapshots.py backfill pattern) -> maintain (month compaction).
 
-State is keyed by (event_type, day, lane shard): ``shard = pmod(idx,
-shards)`` gives each state task a DISJOINT register-lane subset of its
-cell (the snapshots.py sharding argument at day grain), so a hot
-(type, day) cell ingests S-ways parallel and the union of shard
-emissions IS the cell — register max needs no fold anywhere.
+State is one JVM state-store row per (event_type, day, register): the
+stream is Spark's own append-mode windowed aggregate, ``max(rho)`` per
+register over a 1-day event-time window, so each register is its own
+group and parallelism comes from the shuffle partitions. Register max
+is the whole HLL merge, so no Python operator and no lane sharding is
+needed. The append-mode aggregate emits each group exactly once, when
+the watermark reaches the end of its window, which is this store's
+closure contract; a closed cell holds no state anywhere except its
+emitted rows.
 Idempotence is the family's STRONG kind: a closed cell's registers are
 a deterministic value (register max is order/chunking/restart
 invariant), so at-least-once re-delivery overwrites identical rows
 (contrast the KLL writer's effect-idempotence for above-cap cells).
 
 The cell day is the UTC epoch day of the event timestamp
-(``unix_timestamp`` — session-tz-independent), so the day boundary and
-the watermark share one clock and the closure timer at ``(day + 1) *
-86_400_000`` ms is always legal while d-rows are deliverable. Hashing
-runs BEFORE the Python operator as JVM column math (the house rule);
-late rows past the watermark are recoverable through the snapshots.py
-repair pattern.
+(``unix_timestamp`` — session-tz-independent). Tumbling windows are
+epoch-aligned, so the day is a function of the window and adds no
+groups, and a day closes when the watermark reaches ``(day + 1) *
+86_400_000`` ms. A row older than the watermark still folds in while
+its day is open; rows for a day that has already closed are dropped
+by the aggregate and are recoverable through the snapshots.py repair
+pattern.
+
+A checkpoint written by the earlier Python state operator
+(``applyInPandasWithState`` keyed by lane shard) cannot be resumed by
+this aggregate. Spark 4.1 refuses the restart with
+
+  [STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA] Streaming
+  stateful operator name does not match with the operator in state
+  metadata. ... Stateful operators in the metadata: [(OperatorId: 0 ->
+  OperatorName: applyInPandasWithState)]; Stateful operators in current
+  batch: [(OperatorId: 0 -> OperatorName: stateStoreSave)].
+
+Start such a stream from a fresh checkpoint; the sink is idempotent by
+value, so re-ingesting rewrites identical cells.
 
 Reference note: the reference repo (MapReducer-PI-cs4433) has no
 streaming or sketch surface; this module belongs to the engine's
@@ -38,13 +56,9 @@ beyond-reference band (SURVEY.md §2.8).
 
 from __future__ import annotations
 
-import datetime
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    ArrayType,
     DateType,
     IntegerType,
     StringType,
@@ -55,8 +69,6 @@ from pyspark.sql.types import (
 from ..functions import hll
 from .snapshots import overwrite_partitions
 
-_DAY_MS = 86_400_000
-
 CELL_ROWS_SCHEMA = StructType(
     [
         StructField("event_type", StringType(), False),
@@ -66,11 +78,6 @@ CELL_ROWS_SCHEMA = StructType(
     ]
 )
 
-# one flat register array per open cell shard (decoded by hll.restore)
-_STATE_SCHEMA = StructType(
-    [StructField("regs", ArrayType(IntegerType()), False)]
-)
-
 
 def hll_day_cell_stream(
     stream: DataFrame,
@@ -78,51 +85,12 @@ def hll_day_cell_stream(
     id_col: str = "user_id",
     ts_col: str = "ts",
     watermark: str = "2 days",
-    shards: int = 4,
 ) -> DataFrame:
     """Per-(event_type, day) HLL register cells, emitted ONCE per cell
     at event-time closure as (event_type, day, idx, reg_val) rows — the
     exact schema queries/sketches.py::_hll_day_cells persists — suitable
-    for ``foreachBatch(write_hll_day_cells)``. Each (cell, lane-shard)
-    state task folds register maxima over its disjoint lane subset
-    (numpy maximum.at, one pass per batch) and the timeout path emits
-    the shard's touched lanes and removes the state — a closed cell
-    holds no bytes anywhere except its emitted rows."""
-    import numpy as np
-    import pandas as pd
-
-    epoch = datetime.date(1970, 1, 1)
-
-    def update(key, pdf_iter, state: GroupState):
-        ktype, day = key[0], key[1]
-        if state.hasTimedOut:
-            regs = hll.restore(state.get[0])
-            state.remove()
-            touched = np.flatnonzero(regs)
-            d = epoch + datetime.timedelta(days=int(day))
-            yield pd.DataFrame(
-                {
-                    "event_type": [ktype] * len(touched),
-                    "day": [d] * len(touched),
-                    "idx": [int(i) for i in touched],
-                    "reg_val": [int(regs[i]) for i in touched],
-                }
-            )
-            return
-        regs = (
-            hll.restore(state.get[0])
-            if state.exists
-            else np.zeros(hll.M, dtype=np.int64)
-        )
-        for pdf in pdf_iter:
-            np.maximum.at(
-                regs,
-                pdf["idx"].to_numpy(dtype=np.int64),
-                pdf["rho"].to_numpy(dtype=np.int64),
-            )
-        state.update(([int(r) for r in regs],))
-        state.setTimeoutTimestamp((int(day) + 1) * _DAY_MS)
-
+    for ``foreachBatch(write_hll_day_cells)``. Only touched registers
+    have a row, as in the batch twin."""
     pre = (
         stream.filter(
             F.col(key_col).isNotNull()
@@ -133,21 +101,19 @@ def hll_day_cell_stream(
             F.col(ts_col).alias("__ts"),
             F.col(key_col).alias("event_type"),
             # UTC epoch day — shares the watermark's clock exactly
-            F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400))
-            .cast("int")
-            .alias("day"),
+            F.date_from_unix_date(
+                F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400))
+                .cast("int")
+            ).alias("day"),
             hll.idx_col(F.col(id_col)).alias("idx"),
             hll.rho_col(F.col(id_col)).alias("rho"),
         )
-        .withColumn("shard", F.pmod(F.col("idx"), F.lit(int(shards))))
         .withWatermark("__ts", watermark)
     )
-    return pre.groupBy("event_type", "day", "shard").applyInPandasWithState(
-        update,
-        outputStructType=CELL_ROWS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return (
+        pre.groupBy("event_type", F.window("__ts", "1 day"), "day", "idx")
+        .agg(F.max("rho").alias("reg_val"))
+        .select("event_type", "day", "idx", "reg_val")
     )
 
 

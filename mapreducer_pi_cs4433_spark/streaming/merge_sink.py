@@ -44,6 +44,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.artifacts import read_committed_parquet
+
 _PTR = "_LATEST"
 
 
@@ -79,11 +81,15 @@ def read_state(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame | None:
     """The state table at `version` (default: latest); None before the
-    first commit."""
+    first commit. A version directory is written once and the pointer
+    names it only after the write completes, so a warm read reuses the
+    schema kept on the session and runs no job (a version without
+    _SUCCESS, such as time travel to a crashed write, is read
+    uncached)."""
     v = latest_version(path) if version is None else version
     if v is None:
         return None
-    return spark.read.parquet(_version_dir(path, v))
+    return read_committed_parquet(spark, _version_dir(path, v))
 
 
 def merge_cdc_batch(
@@ -128,7 +134,7 @@ def merge_cdc_batch(
         merged = compact.select("k", "cur", F.col("n").alias("n_changes"))
         new_v = 0
     else:
-        prev = spark.read.parquet(_version_dir(state_path, prev_v))
+        prev = read_state(spark, state_path, prev_v)
         p, c = prev.alias("p"), compact.alias("c")
         joined = p.join(c, F.col("p.k") == F.col("c.k"), "full_outer")
         # newer (ts, vid) wins; struct comparison gives the total order.

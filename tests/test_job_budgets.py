@@ -5,8 +5,8 @@ schema inference) runs as Spark jobs before its plan executes, and at
 small scale each job's fixed cost outweighs its rows. The budgets below
 are the measured warm job counts at sf0.001, so a new eager action in a
 pinned query fails here. The artifact cases guard the schema memo that
-lets a warm artifact read run no job: it must never serve a stale schema
-or a stale file listing.
+lets a warm artifact or merge-sink state read run no job: it must never
+serve a stale schema or a stale file listing.
 """
 
 from __future__ import annotations
@@ -27,6 +27,11 @@ from mapreducer_pi_cs4433_spark.streaming.hll_cells import (
     CELL_ROWS_SCHEMA,
     read_hll_day_cells,
     write_hll_day_cells,
+)
+from mapreducer_pi_cs4433_spark.streaming.merge_sink import (
+    latest_version,
+    merge_cdc_batch,
+    read_state,
 )
 from mapreducer_pi_cs4433_spark.streaming.snapshots import overwrite_partitions
 
@@ -132,3 +137,37 @@ def test_hll_cell_read_back_runs_no_job_and_sees_new_days(spark, tmp_path):
     assert {
         str(r.day) for r in read_hll_day_cells(spark, store).collect()
     } == {"2024-01-05", "2024-01-06"}
+
+
+def _changes(spark, rows):
+    return spark.createDataFrame(
+        [
+            (k, datetime.datetime(2024, 1, 5, h), eid, "view", 1.5)
+            for k, h, eid in rows
+        ],
+        "user_id long, ts timestamp, event_id long, event_type string, "
+        "value double",
+    )
+
+
+def test_warm_merge_state_read_runs_no_job(spark, tmp_path):
+    state = str(tmp_path / "state")
+    merge_cdc_batch(spark, _changes(spark, [(1, 1, 10), (2, 2, 11)]), state)
+    read_state(spark, state)
+    df, jobs = run_counting_jobs(spark, lambda: read_state(spark, state))
+    assert jobs == 0
+    assert sorted((r.k, r.n_changes) for r in df.collect()) == [(1, 1), (2, 1)]
+
+
+def test_merge_state_committed_after_a_read_is_served(spark, tmp_path):
+    """The next version is a new directory under a new pointer, so the
+    next read resolves it and keys its schema afresh."""
+    state = str(tmp_path / "state")
+    merge_cdc_batch(spark, _changes(spark, [(1, 1, 10)]), state)
+    assert [r.k for r in read_state(spark, state).collect()] == [1]
+    merge_cdc_batch(spark, _changes(spark, [(1, 3, 12), (5, 2, 13)]), state)
+    assert latest_version(state) == 1
+    got = read_state(spark, state)
+    assert sorted((r.k, r.cur.vid, r.n_changes) for r in got.collect()) == [
+        (1, 12, 2), (5, 13, 1)
+    ]

@@ -29,7 +29,7 @@ HLL_WITH_ROWS = [
     ("negative", ([-1] + _REGS[1:], 10), {}, "corrupted"),
     ("fewer rows than touched registers", (_REGS, 1), {}, "touched"),
 ]
-# hll.restore(registers): streaming/snapshots and streaming/hll_cells
+# hll.restore(registers): streaming/snapshots
 HLL_FLAT = [
     ("clean, no row count", (_REGS,), {}, None),
     ("truncated, no row count", (_REGS[1:],), {}, "corrupted"),

@@ -186,7 +186,7 @@ def test_hll_day_cell_consumers_run_unchanged_then_compact(
             .parquet(src)
         )
         q = (
-            hll_day_cell_stream(stream, watermark="2 days", shards=3)
+            hll_day_cell_stream(stream, watermark="2 days")
             .writeStream.foreachBatch(
                 lambda df, bid: write_hll_day_cells(df, dest)
             )

@@ -7,12 +7,16 @@ Contracts, replayed chunked with a full restart at every boundary:
 
 1. Closure-exactness: a closed cell's registers are BIT-IDENTICAL to an
    independent hashlib flat build over every chunk's rows for that cell
-   (register max at cell grain — order/chunking/restart/shard
-   invariant; the shard axis is the register lane, so the union of
-   shard emissions IS the cell with no fold).
+   (register max at cell grain — order/chunking/restart invariant).
+   The stream's one stateful operator is Spark's own aggregate
+   (``stateStoreSave``), never a Python state operator.
 2. Closure-only writes: open days hold no partition; cross-day and
-   cross-type keys do not leak between cells.
-3. Full-lifecycle composition: MONTH COMPACTION over the stream-built
+   cross-type keys do not leak between cells. A day closes exactly when
+   the watermark reaches its end, the batch twin's rule.
+3. Late rows: a row older than the watermark still folds into a day
+   that is open; a row for a closed day is dropped and the cell is left
+   as it was.
+4. Full-lifecycle composition: MONTH COMPACTION over the stream-built
    store (compact_hll_day_cells, run unchanged via the reader twin's
    layout) keeps the per-type register rollup bit-identical — the
    stream -> maintain -> consume round trip in one assertion.
@@ -52,6 +56,9 @@ def _ts(y, m, d, h=12):
 
 
 def _run_chunks(spark, chunks, src, ckpt, store):
+    """Land each chunk and run one availableNow query over it (a full
+    restart at every boundary); returns every query's progress."""
+    progress = []
     for chunk in chunks:
         spark.createDataFrame(
             chunk, "event_type string, user_id long, ts timestamp"
@@ -60,7 +67,7 @@ def _run_chunks(spark, chunks, src, ckpt, store):
             "event_type string, user_id long, ts timestamp"
         ).option("maxFilesPerTrigger", 1).parquet(src)
         q = (
-            hll_day_cell_stream(stream, watermark="2 days", shards=3)
+            hll_day_cell_stream(stream, watermark="2 days")
             .writeStream.foreachBatch(
                 lambda df, bid: write_hll_day_cells(df, store)
             )
@@ -70,6 +77,19 @@ def _run_chunks(spark, chunks, src, ckpt, store):
             .start()
         )
         q.awaitTermination(300)
+        progress.extend(q.recentProgress)
+    return progress
+
+
+def _state_ops(progress):
+    return [op for p in progress for op in p["stateOperators"]]
+
+
+def _read_cells(spark, store):
+    got = {}
+    for r in read_hll_day_cells(spark, store).collect():
+        got.setdefault((r.event_type, r.day), {})[r.idx] = r.reg_val
+    return got
 
 
 def _store_days(store: str) -> set[str]:
@@ -114,15 +134,17 @@ def test_hll_day_cells_close_bit_exactly(spark, provider):
         enable_rocksdb_state(spark)
     try:
         # first chunk alone: nothing closed (watermark inside day 1)
-        _run_chunks(spark, chunks[:1], src, ckpt, store)
+        progress = _run_chunks(spark, chunks[:1], src, ckpt, store)
         assert _store_days(store) == set()
 
-        _run_chunks(spark, chunks[1:], src, ckpt, store)
+        progress += _run_chunks(spark, chunks[1:], src, ckpt, store)
         assert _store_days(store) == {"2024-01-05", "2024-01-20", "2024-02-03"}
 
-        got = {}
-        for r in read_hll_day_cells(spark, store).collect():
-            got.setdefault((r.event_type, r.day), {})[r.idx] = r.reg_val
+        # the JVM aggregate, not a Python state operator
+        ops = {op["operatorName"] for op in _state_ops(progress)}
+        assert ops == {"stateStoreSave"}
+
+        got = _read_cells(spark, store)
         want = {
             (t, d): _ref_registers(ks) for (t, d), ks in cells.items()
         }
@@ -137,6 +159,80 @@ def test_hll_day_cells_close_bit_exactly(spark, provider):
                 spark.conf.set(
                     "spark.sql.streaming.stateStore.providerClass", prev
                 )
+        for d in (src, ckpt, os.path.dirname(store)):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_day_closes_when_watermark_lands_on_its_end(spark):
+    """The watermark is max ts - 2 days, so a flush one microsecond
+    before 2024-01-08 leaves day 2024-01-05 open, and a flush at
+    2024-01-08 00:00:00 closes it: the batch twin's rule, day <
+    (max_ts - 2 days).date()."""
+    keys = [1, 2, 3, 7]
+    chunks = [
+        [("a", k, _ts(2024, 1, 5)) for k in keys],
+        [("z", 999, datetime.datetime(2024, 1, 7, 23, 59, 59, 999999))],
+        [("z", 998, datetime.datetime(2024, 1, 8, 0, 0, 0))],
+    ]
+    src = tempfile.mkdtemp(prefix="hbound_src_")
+    ckpt = tempfile.mkdtemp(prefix="hbound_ck_")
+    store = tempfile.mkdtemp(prefix="hbound_store_") + "/hll_day_cells"
+    try:
+        _run_chunks(spark, chunks[:2], src, ckpt, store)
+        assert _store_days(store) == set()
+        _run_chunks(spark, chunks[2:], src, ckpt, store)
+        assert _store_days(store) == {"2024-01-05"}
+        assert _read_cells(spark, store) == {
+            ("a", datetime.date(2024, 1, 5)): _ref_registers(keys)
+        }
+    finally:
+        for d in (src, ckpt, os.path.dirname(store)):
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def test_late_row_folds_into_open_day_and_drops_for_closed_day(spark):
+    """A row older than the watermark whose day is still open is folded
+    into that day's cell; once the day has closed, a row for it is
+    dropped by the watermark and the stored cell stays as it was."""
+    day = datetime.date(2024, 1, 5)
+    keys = [1, 2, 3]
+    late_key = next(
+        k for k in range(1000, 2000)
+        if _ref_registers(keys + [k]) != _ref_registers(keys)
+    )
+    closed_key = next(
+        k for k in range(2000, 3000)
+        if _ref_registers(keys + [late_key, k])
+        != _ref_registers(keys + [late_key])
+    )
+    chunks = [
+        # watermark -> 2024-01-05 18:00, inside the open day
+        [("a", k, _ts(2024, 1, 5)) for k in keys]
+        + [("z", 999, _ts(2024, 1, 7, 18))],
+        # late (13:00 < 18:00) but its day is open
+        [("a", late_key, _ts(2024, 1, 5, 13))],
+        # watermark -> 2024-01-08 12:00: day 2024-01-05 closes
+        [("z", 998, _ts(2024, 1, 10))],
+        # a row for the closed day
+        [("a", closed_key, _ts(2024, 1, 5, 14))],
+    ]
+    src = tempfile.mkdtemp(prefix="hlate_src_")
+    ckpt = tempfile.mkdtemp(prefix="hlate_ck_")
+    store = tempfile.mkdtemp(prefix="hlate_store_") + "/hll_day_cells"
+    try:
+        progress = _run_chunks(spark, chunks[:3], src, ckpt, store)
+        assert sum(
+            op["numRowsDroppedByWatermark"] for op in _state_ops(progress)
+        ) == 0
+        want = _ref_registers(keys + [late_key])
+        assert _read_cells(spark, store)[("a", day)] == want
+
+        progress = _run_chunks(spark, chunks[3:], src, ckpt, store)
+        assert sum(
+            op["numRowsDroppedByWatermark"] for op in _state_ops(progress)
+        ) == 1
+        assert _read_cells(spark, store)[("a", day)] == want
+    finally:
         for d in (src, ckpt, os.path.dirname(store)):
             shutil.rmtree(d, ignore_errors=True)
 
