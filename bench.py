@@ -366,7 +366,7 @@ def _run(sf_dir: str) -> None:
         ptotal = 0.0
         for name, fn in sorted(QUERIES.items()):
             # fn() is INSIDE the timed region: iterative operators (e.g.
-            # dedup_clusters' connected-components fixpoint) execute eagerly
+            # er_fuzzy_resolution's connected-components fixpoint) execute eagerly
             # while building their result; for declarative queries plan
             # construction adds only ~ms.
             t0 = time.perf_counter()

@@ -53,6 +53,7 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
     not work any query should repeat."""
     from .functions import dedup as fdedup
     from .functions import similarity as fsim
+    from .functions.artifacts import scan_num_rows
 
     # Canonical build params come FROM the catalog queries (the artifact
     # consumers), so the ops build step and the query path always resolve
@@ -96,37 +97,37 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
         else {k.strip() for k in kinds_csv.split(",") if k.strip()}
     )
     docs = loaders.load_table(spark, sf_dir, "documents")
-    built: list[tuple[str, int]] = []
+    built: list[tuple[str, DataFrame]] = []
     if "minhash" in kinds:
         built.append(
-            ("minhash", fdedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K).count())
+            ("minhash", fdedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K))
         )
     if "postings" in kinds:
-        built.append(("postings", fdedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K).count()))
+        built.append(("postings", fdedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K)))
     if "posshingle" in kinds:
         built.append(
             (
                 "posshingle",
-                fdedup.ensure_positional_shingles(spark, docs, sf_dir, k=_SPAN_K).count(),
+                fdedup.ensure_positional_shingles(spark, docs, sf_dir, k=_SPAN_K),
             )
         )
     if "pairs" in kinds:
         built.append(
-            ("pairs", fdedup.ensure_neardup_pairs(spark, docs, sf_dir, k=_SHINGLE_K).count())
+            ("pairs", fdedup.ensure_neardup_pairs(spark, docs, sf_dir, k=_SHINGLE_K))
         )
     if "components" in kinds:
         built.append(
-            ("components", fdedup.ensure_neardup_components(spark, docs, sf_dir, k=_SHINGLE_K).count())
+            ("components", fdedup.ensure_neardup_components(spark, docs, sf_dir, k=_SHINGLE_K))
         )
     if kinds & {"ivf", "pq", "ivfpq", "semantic", "hnsw"}:
         emb = loaders.load_table(spark, sf_dir, "embeddings")
         if "ivf" in kinds:
-            built.append(("ivf", fsim.ensure_ivf_index(spark, emb, sf_dir, planes=_IVF_PLANES).count()))
+            built.append(("ivf", fsim.ensure_ivf_index(spark, emb, sf_dir, planes=_IVF_PLANES)))
         if "pq" in kinds:
             _, codes = fsim.ensure_pq_artifacts(
                 spark, emb, sf_dir, m=_PQ_M, k=_PQ_CODE_K, sample_rows=_PQ_SAMPLE
             )
-            built.append(("pq", codes.count()))
+            built.append(("pq", codes))
         if "ivfpq" in kinds:
             built.append(
                 (
@@ -135,7 +136,7 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
                         spark, emb, sf_dir,
                         m=_PQ_M, k=_PQ_CODE_K, sample_rows=_PQ_SAMPLE,
                         planes=_IVF_PLANES,
-                    ).count(),
+                    ),
                 )
             )
         if "semantic" in kinds:
@@ -146,7 +147,7 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
                     "semantic",
                     fsim.ensure_kmeans_assignment(
                         spark, emb, sf_dir, k=_KMEANS_K
-                    ).count(),
+                    ),
                 )
             )
             # the k*d centroid 'model' the streaming assigner broadcasts
@@ -156,7 +157,7 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
                     "semantic_cent",
                     fsim.ensure_kmeans_centroids(
                         spark, emb, sf_dir, k=_KMEANS_K
-                    ).count(),
+                    ),
                 )
             )
         if "hnsw" in kinds:
@@ -165,14 +166,14 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
             built.append(
                 (
                     "hnsw",
-                    fhnsw.ensure_hnsw_index(spark, emb, sf_dir, n_shards=4).count(),
+                    fhnsw.ensure_hnsw_index(spark, emb, sf_dir, n_shards=4),
                 )
             )
     if "graph" in kinds:
         from .queries.extensions import ensure_pagerank_graph
 
         sym, _deg = ensure_pagerank_graph(spark, sf_dir)
-        built.append(("graph", sym.count()))
+        built.append(("graph", sym))
     if "cooccur" in kinds:
         # co-occurrence build outputs: the supplier support-pair table
         # (graph_triangle_count) and the (order, brand) basket table
@@ -183,10 +184,10 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
         )
 
         built.append(
-            ("cooccur_supp", ensure_cooccur_supp_support(spark, sf_dir).count())
+            ("cooccur_supp", ensure_cooccur_supp_support(spark, sf_dir))
         )
         built.append(
-            ("basket_ob", ensure_basket_order_brand(spark, sf_dir).count())
+            ("basket_ob", ensure_basket_order_brand(spark, sf_dir))
         )
     if "decontam" in kinds:
         # the per-benchmark-release decontamination pair list; the query
@@ -196,7 +197,7 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
         built.append(
             (
                 "decontam",
-                decontaminate_training_set(spark, sf_dir).count(),
+                decontaminate_training_set(spark, sf_dir),
             )
         )
     if "hll_cells" in kinds:
@@ -204,42 +205,42 @@ def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
         # events_distinct_hll_rollup and events_distinct_hll_sliding
         from .queries.sketches import _hll_day_cells
 
-        built.append(("hll_cells", _hll_day_cells(spark, sf_dir).count()))
+        built.append(("hll_cells", _hll_day_cells(spark, sf_dir)))
     if "kll_cells" in kinds:
         # the per-(type, day) KLL cell item table (r11 migration) read
         # by events_quantile_rollup_kll
         from .queries.sketches import _kll_day_cells
 
-        built.append(("kll_cells", _kll_day_cells(spark, sf_dir).count()))
+        built.append(("kll_cells", _kll_day_cells(spark, sf_dir)))
     if "kmv_years" in kinds:
         # the per-year KMV k-min samples (r11) read by the KMV
         # set-difference pair (orders_kmv_set_difference /
         # orders_kmv_diff_from_snapshots)
         from .queries.sketches import _kmv_year_samples
 
-        built.append(("kmv_years", _kmv_year_samples(spark, sf_dir).count()))
+        built.append(("kmv_years", _kmv_year_samples(spark, sf_dir)))
     if "hll_years" in kinds:
         # the per-year HLL register snapshots (r11) read by the HLL
         # set-algebra pair (orders_hll_set_algebra /
         # orders_hll_union_from_snapshots)
         from .queries.sketches import _hll_year_regs
 
-        built.append(("hll_years", _hll_year_regs(spark, sf_dir).count()))
+        built.append(("hll_years", _hll_year_regs(spark, sf_dir)))
     if "layout" in kinds:
         # the partitioned/evolved layout artifacts: running the query
         # functions triggers their ensure_table builds (the returned
-        # plans are readers; count() forces materialization) — the DPP
-        # year-partitioned fact and the two schema_evo generations
+        # plans are readers over them) — the DPP year-partitioned fact
+        # and the two schema_evo generations
         from .queries.catalog import QUERIES as _Q
 
         built.append(
-            ("layout_dpp", _Q["layout_partition_pruned_rollup"](spark, sf_dir).count())
+            ("layout_dpp", _Q["layout_partition_pruned_rollup"](spark, sf_dir))
         )
         built.append(
-            ("schema_evo", _Q["source_schema_evolution"](spark, sf_dir).count())
+            ("schema_evo", _Q["source_schema_evolution"](spark, sf_dir))
         )
-    for kind, n in built:
-        print(f"build-index: {kind} ready ({n} rows)")
+    for kind, df in built:
+        print(f"build-index: {kind} ready ({scan_num_rows(df)} rows)")
     return 0
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import os
 from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -100,6 +101,30 @@ def parquet_num_rows(path: str) -> int | None:
         # cases, not crashes (r8 self-review: only OSError was caught,
         # so a missing pyarrow crashed every gated graph query)
         return None
+
+
+def scan_num_rows(df: DataFrame) -> int:
+    """Row count of ``df``: from the parquet footers of its input files
+    when the plan is a bare file scan (no Spark job), else ``count()``.
+
+    A filter or join over a scan lists the same input files with a
+    different row count, so only a plan that is one file relation is
+    read from footers. A non-local file, or a footer that cannot be read
+    (not parquet, mid-write, no pyarrow), falls back to ``count()``."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (
+        plan.getClass().getSimpleName() == "LogicalRelation"
+        and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    ):
+        try:
+            import pyarrow.parquet as pq
+
+            paths = [urlparse(u) for u in df.inputFiles()]
+            if all(u.scheme in ("", "file") for u in paths):
+                return sum(pq.read_metadata(unquote(u.path)).num_rows for u in paths)
+        except (OSError, ImportError, ValueError):
+            pass
+    return df.count()
 
 
 def read_committed_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -626,10 +626,9 @@ def ensure_neardup_components(
 ) -> DataFrame:
     """Persisted connected-component assignment (id, comp) over the
     persisted near-dup pair table. The iterative min-label propagation runs
-    once per corpus build; keeper selection / cluster rollups are then a
-    single join away. `dedup_clusters` still runs the propagation live (it
-    is the suite's iterative-operator demonstration); this artifact serves
-    the downstream curation queries that would otherwise each pay for it."""
+    once per corpus build; `dedup_clusters` and `dedup_keeper_selection`
+    read it, so cluster rollups and keeper selection are a single join
+    away instead of each paying for the fixpoint's jobs."""
     from .artifacts import ensure_table
 
     return ensure_table(

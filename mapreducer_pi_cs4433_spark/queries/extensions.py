@@ -999,15 +999,17 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     miss bound must be the tightest available (~1e-4 even at the j=0.5
     boundary vs ~35% for r=4 boundary pairs).
 
-    Pairs come from the persisted verified-pair artifact
-    (dedup.ensure_neardup_pairs — built once per corpus); the propagation
-    itself runs live here, as the suite's iterative-operator entry."""
+    The assignment is the persisted component artifact
+    (dedup.ensure_neardup_components): connected_components over the
+    verified-pair artifact, run once per corpus build, so the query
+    function runs no Spark job and the plan is one artifact scan plus the
+    size aggregate. The propagation itself still runs live in
+    er_fuzzy_resolution."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ensure_neardup_pairs(
+    comp = dedup.ensure_neardup_components(
         spark, docs, sf_dir, k=_SHINGLE_K, num_perm=64, bands=32,
         threshold=_JACCARD_T,
     )
-    comp = dedup.connected_components(pairs)
     sizes = comp.groupBy("comp").agg(F.count("*").alias("cluster_size"))
     return comp.join(sizes, "comp").select(
         F.col("id").alias("doc_id"),
@@ -2654,7 +2656,8 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the (part)-(supplier) co-purchase graph — the graph-
     analytics family beyond connected components, and a fixed-depth
     iterative algorithm expressed as ONE lazy plan (4 unrolled iterations;
-    no driver actions, unlike the fixpoint-converged dedup_clusters).
+    no driver actions, unlike the fixpoint-converged
+    dedup.connected_components).
 
     Exact integer arithmetic end to end: ranks are scaled to micro-units,
     each contribution is a floor division (`div` / `//` agree on

@@ -993,9 +993,9 @@ def er_fuzzy_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition: er_fuzzy_name_pairs (dimension-blocked candidate
     generation) -> dedup.connected_components (min-label propagation on
-    the name graph, string labels — the same iterative operator the
-    near-dup cluster entry uses) -> broadcast joins of the listing and
-    size marginals. Oracle: DuckDB recursive-CTE transitive closure over
+    the name graph, string labels — the same iterative operator that
+    builds the near-dup component artifact) -> broadcast joins of the
+    listing and size marginals. Oracle: DuckDB recursive-CTE transitive closure over
     the identical pair set (the dedup_clusters precedent).
     """
     from ..functions import dedup

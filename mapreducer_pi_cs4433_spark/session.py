@@ -11,6 +11,17 @@ configuration lets Catalyst/AQE make those calls per-query instead:
   with DuckDB's naive-as-UTC semantics regardless of host TZ.
 - Arrow enabled: any Pandas-UDF path (similarity, multimodal) transfers
   columnar batches instead of pickled rows.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: with it on, every
+  ``pyspark.sql.functions`` and Column call captures its Python call site
+  (a stack walk plus several Py4J round trips, about 1 ms a call), and a
+  query function builds its plan from dozens of such calls. PySpark fixes
+  the setting per process at the first function call, reading it as off
+  when no session exists yet, so without the conf it depended on import
+  order. The cost is in error messages only: a runtime error keeps its
+  class and condition (e.g. ``REMAINDER_BY_ZERO``), but its
+  ``== DataFrame ==`` context names a JVM frame instead of the Python
+  ``file:line``. The conf is static, so ``tune_session`` cannot set it on
+  an externally-built session.
 """
 
 from __future__ import annotations
@@ -49,6 +60,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # r13 (optimization, guide §1.2 step 3 — configuration, measured):
         # the whole-stage-codegen compile cache defaults to 100 entries;

@@ -12,7 +12,7 @@ import pytest
 
 from .conftest import REFERENCE_DATA
 
-pytestmark = pytest.mark.skipif(
+needs_reference_data = pytest.mark.skipif(
     not os.path.isdir(REFERENCE_DATA), reason="reference data not mounted"
 )
 
@@ -31,6 +31,7 @@ def _run(*args: str) -> subprocess.CompletedProcess:
     )
 
 
+@needs_reference_data
 def test_cli_task_c(tmp_path):
     out = tmp_path / "c"
     r = _run("--single-file", "taskC", f"{REFERENCE_DATA}/pages.csv", str(out))
@@ -57,6 +58,7 @@ def test_cli_missing_input_exits_2_without_traceback():
     assert "Traceback" not in r.stderr
 
 
+@needs_reference_data
 def test_cli_parquet_output(tmp_path):
     out = tmp_path / "c_parquet"
     r = _run(
@@ -81,6 +83,7 @@ def test_cli_pi():
     assert "pi is roughly 3.1" in r.stdout
 
 
+@needs_reference_data
 def test_cli_jsonl_output(tmp_path):
     out = tmp_path / "c_jsonl"
     r = _run(

@@ -17,12 +17,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from mapreducer_pi_cs4433_spark.cli import _build_index
+from mapreducer_pi_cs4433_spark.functions import dedup
 from mapreducer_pi_cs4433_spark.functions.artifacts import (
     artifact_dir,
     ensure_table,
+    scan_num_rows,
 )
 from mapreducer_pi_cs4433_spark.plans.inspect import run_counting_jobs
 from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
+from mapreducer_pi_cs4433_spark.queries.extensions import _JACCARD_T, _SHINGLE_K
+from mapreducer_pi_cs4433_spark.sources.loaders import load_table
 from mapreducer_pi_cs4433_spark.streaming.hll_cells import (
     CELL_ROWS_SCHEMA,
     read_hll_day_cells,
@@ -44,9 +49,8 @@ from .conftest import SF_SMOKE
         # one keeper checkpoint (2 jobs under AQE): sf0.001 is a 3-core
         # already, so round 1 matches the footer node count and stops
         ("graph_kcore_census", 2),
-        # edge checkpoint, the aggregate superstep 1, and one join
-        # superstep that changes nothing
-        ("dedup_clusters", 8),
+        # reads the component artifact that set-up builds
+        ("dedup_clusters", 0),
         ("dedup_prefix_filter", 0),
         ("dedup_keeper_selection", 0),
     ],
@@ -56,6 +60,27 @@ def test_warm_query_function_job_budget(spark, name, budget):
     fn(spark, SF_SMOKE)  # builds artifacts on a fresh index dir
     _, jobs = run_counting_jobs(spark, lambda: fn(spark, SF_SMOKE))
     assert jobs <= budget
+
+
+def test_connected_components_job_budget(spark):
+    """The fixpoint over the warm pair artifact: the edge checkpoint,
+    the aggregate superstep 1, and one join superstep that changes
+    nothing, each convergence check read from an Observation. Its
+    result is the component artifact dedup_clusters reads."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    params = dict(k=_SHINGLE_K, num_perm=64, bands=32, threshold=_JACCARD_T)
+    pairs = dedup.ensure_neardup_pairs(spark, docs, SF_SMOKE, **params)
+    comp, jobs = run_counting_jobs(spark, lambda: dedup.connected_components(pairs))
+    assert jobs <= 8
+    built = dedup.ensure_neardup_components(spark, docs, SF_SMOKE, **params)
+    assert sorted(comp.collect()) == sorted(built.collect())
+
+
+def test_warm_build_index_runs_no_job(spark, capsys):
+    _build_index(spark, SF_SMOKE, "minhash")
+    _, jobs = run_counting_jobs(spark, lambda: _build_index(spark, SF_SMOKE, "minhash"))
+    assert jobs == 0
+    assert "minhash ready (500 rows)" in capsys.readouterr().out
 
 
 @pytest.fixture
@@ -79,6 +104,17 @@ def test_warm_ensure_table_runs_no_job(spark, artifact_sf):
     assert sorted(tuple(r) for r in df.collect()) == [
         (i, 2 * i) for i in range(5)
     ]
+
+
+def test_scan_num_rows_reads_footers_of_a_bare_scan(spark, artifact_sf):
+    df = ensure_table(
+        spark, artifact_sf, "t", lambda: spark.range(10).repartition(3)
+    )
+    assert len(df.inputFiles()) == 3
+    n, jobs = run_counting_jobs(spark, lambda: scan_num_rows(df))
+    assert (n, jobs) == (10, 0)
+    # a filter lists the same files: it must be counted, not footer-summed
+    assert scan_num_rows(df.filter(F.col("id") < 4)) == 4
 
 
 def test_rebuilt_artifact_serves_new_schema(spark, artifact_sf):

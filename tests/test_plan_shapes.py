@@ -289,8 +289,8 @@ def test_lsh_entries_never_rescan_the_corpus(spark):
         ("dedup_minhash_lsh", 0),
         ("pipeline_clean_corpus", 0),
         ("dedup_keeper_selection", 1),
-        # r4: verified-pair/component artifacts — clusters is pure
-        # pairs-artifact + propagation, rate reads docs once (source dim)
+        # verified-pair/component artifacts: clusters is one scan of
+        # the component artifact, rate reads docs once (source dim)
         ("dedup_clusters", 0),
         ("neardup_rate_by_source", 1),
     ):
