@@ -39,10 +39,7 @@ def _write(df: DataFrame, out: str, single_file: bool, output_format: str) -> No
     elif output_format == "jsonl":
         sinks.write_jsonl(df, out)
     else:
-        # timestampFormat matches the reference's rendering (TaskG.java:123)
-        df.write.mode("overwrite").option("sep", "\t").option(
-            "timestampFormat", "yyyy-MM-dd HH:mm:ss"
-        ).csv(out)
+        sinks.write_tsv(df, out)
 
 
 def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:

@@ -423,7 +423,6 @@ def cross_containment_pairs(
     threshold: float = 0.5,
     num_perm: int = 64,
     bands: int = 32,
-    prefilter: bool = True,
     sigs_left: DataFrame | None = None,
     sigs_right: DataFrame | None = None,
     posting_left: DataFrame | None = None,
@@ -447,8 +446,8 @@ def cross_containment_pairs(
     decontamination targets); equality with the exhaustive DuckDB oracle
     is re-checked at every driver round.
 
-    `prefilter` applies the same signature-agreement gate as
-    minhash_lsh_pairs before exact verification, floored at the SAME
+    The same signature-agreement gate as minhash_lsh_pairs runs before
+    exact verification, floored at the SAME
     similar-size Jaccard bound the banding recall model already assumes
     (j ≳ τ/(2-τ), minus 4σ at num_perm): on this high-df corpus banding
     emits ~46k cross candidates for ~100 true pairs at sf0.1, and each
@@ -477,25 +476,22 @@ def cross_containment_pairs(
         .select("id_l", "id_r")
         .distinct()
     )
-    if prefilter:
-        j_bound = threshold / (2.0 - threshold)
-        est_floor = max(
-            0.0, j_bound - 4.0 * math.sqrt(j_bound * (1.0 - j_bound) / num_perm)
-        )
-        agree = sum(
-            F.when(F.col("sig_l")[i] == F.col("sig_r")[i], 1).otherwise(0)
-            for i in range(num_perm)
-        )
-        gl = sigs_left.select(F.col("id").alias("id_l"), F.col("sig").alias("sig_l"))
-        gr = sigs_right.select(
-            F.col("id").alias("id_r"), F.col("sig").alias("sig_r")
-        )
-        cand = (
-            cand.join(gl, "id_l")
-            .join(gr, "id_r")
-            .filter(agree >= math.ceil(est_floor * num_perm))
-            .select("id_l", "id_r")
-        )
+    j_bound = threshold / (2.0 - threshold)
+    est_floor = max(
+        0.0, j_bound - 4.0 * math.sqrt(j_bound * (1.0 - j_bound) / num_perm)
+    )
+    agree = sum(
+        F.when(F.col("sig_l")[i] == F.col("sig_r")[i], 1).otherwise(0)
+        for i in range(num_perm)
+    )
+    gl = sigs_left.select(F.col("id").alias("id_l"), F.col("sig").alias("sig_l"))
+    gr = sigs_right.select(F.col("id").alias("id_r"), F.col("sig").alias("sig_r"))
+    cand = (
+        cand.join(gl, "id_l")
+        .join(gr, "id_r")
+        .filter(agree >= math.ceil(est_floor * num_perm))
+        .select("id_l", "id_r")
+    )
     pl = (
         posting_left
         if posting_left is not None
@@ -651,7 +647,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    prefilter: bool = True,
     sigs: DataFrame | None = None,
     posting: DataFrame | None = None,
 ) -> DataFrame:
@@ -671,8 +666,7 @@ def minhash_lsh_pairs(
     computed data — one broadcast join + numpy batch kernel — and discards
     ~97% of candidates first. The 4-sigma margin keeps the prefilter's
     per-true-pair miss probability (~3e-5 at the threshold boundary,
-    n=64) below the banding miss floor, so overall recall is unchanged;
-    set prefilter=False for the raw two-stage shape.
+    n=64) below the banding miss floor, so overall recall is unchanged.
 
     `sigs` / `posting` accept the PERSISTED artifact tables
     (ensure_minhash_signatures / ensure_postings), optionally pre-filtered
@@ -685,13 +679,12 @@ def minhash_lsh_pairs(
     rows_per_band = num_perm // bands
     if sigs is None:
         sigs = minhash_signatures(df, text_col, id_col, k, num_perm)
-        if prefilter:
-            # inline signatures feed BOTH band-key generation and the
-            # agreement prefilter; materialize once (~520 B/doc) instead
-            # of re-running the shingle scan + 64-min aggregation per
-            # consumer (persisted-artifact callers skip this: parquet
-            # reads are already materialized)
-            sigs = sigs.localCheckpoint()
+        # inline signatures feed BOTH band-key generation and the
+        # agreement prefilter; materialize once (~520 B/doc) instead of
+        # re-running the shingle scan + 64-min aggregation per consumer
+        # (persisted-artifact callers skip this: parquet reads are
+        # already materialized)
+        sigs = sigs.localCheckpoint()
     banded = _banded_keys(sigs, bands, rows_per_band)
     left = banded.select("band", "bkey", F.col("id").alias("id_a"))
     right = banded.select(
@@ -709,30 +702,29 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    if prefilter:
-        est_floor = max(
-            0.0,
-            threshold - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
-        )
-        # agreement count as an explicit 64-term codegen sum (array getItem
-        # + equality — NOT an array HOF, NOT a Python kernel: at 34k
-        # candidate rows the Arrow round-trip costs more than it saves).
-        # Plain equi-joins on id: AQE broadcasts the signature side when it
-        # fits (it does locally); at corpus scale both sides shuffle on id,
-        # which is the right co-location anyway (signatures are ~520 bytes
-        # per doc — never driver-collected, never forced broadcast).
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(num_perm)
-        )
-        ga = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        gb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        candidates = (
-            candidates.join(ga, "id_a")
-            .join(gb, "id_b")
-            .filter(agree >= math.ceil(est_floor * num_perm))
-            .select("id_a", "id_b")
-        )
+    est_floor = max(
+        0.0,
+        threshold - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
+    )
+    # agreement count as an explicit 64-term codegen sum (array getItem
+    # + equality — NOT an array HOF, NOT a Python kernel: at 34k
+    # candidate rows the Arrow round-trip costs more than it saves).
+    # Plain equi-joins on id: AQE broadcasts the signature side when it
+    # fits (it does locally); at corpus scale both sides shuffle on id,
+    # which is the right co-location anyway (signatures are ~520 bytes
+    # per doc — never driver-collected, never forced broadcast).
+    agree = sum(
+        F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+        for i in range(num_perm)
+    )
+    ga = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    gb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    candidates = (
+        candidates.join(ga, "id_a")
+        .join(gb, "id_b")
+        .filter(agree >= math.ceil(est_floor * num_perm))
+        .select("id_a", "id_b")
+    )
     # exact verification of candidates only, via the ONE shared tail
     # (verify_exact_jaccard) the prefix-filter and streaming ingest paths
     # already use — r9 advice: this highest-traffic path had kept its own

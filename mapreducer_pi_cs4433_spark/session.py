@@ -62,19 +62,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # r13 (optimization, guide §1.2 step 3 — configuration, measured):
         # the whole-stage-codegen compile cache defaults to 100 entries;
         # an engine running 188 distinct queries (x several codegen
         # fragments each) evicts every fragment between bench passes and
         # pays Janino recompilation per query per pass. The cache is
         # per-JVM compile state, not data-scale-dependent, so a larger
-        # default is right at any cluster size; parameterized for
-        # ablation. Entries are compiled classes (~KBs each) — 4096 is
-        # well inside the default heap.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        # value is right at any cluster size. Entries are compiled
+        # classes (~KBs each) — 4096 is well inside the default heap.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # optional JVM flags for the local driver (e.g. a GC experiment:
     # SPARK_GRAFT_DRIVER_JAVA_OPTS="-XX:+UseParallelGC"); empty default

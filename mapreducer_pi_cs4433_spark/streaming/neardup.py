@@ -126,7 +126,6 @@ def match_and_register_batch(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    prefilter: bool = True,
 ) -> None:
     """Fold one document batch into the near-dup index and append the
     verified pairs it forms (within itself and against all prior
@@ -233,26 +232,24 @@ def match_and_register_batch(
         all_sigs = sigs_b
         all_post = post_b
 
-    if prefilter:
-        # identical constants to minhash_lsh_pairs: threshold - 4 sigma
-        # agreement floor, 64-term codegen sum (no array HOF)
-        est_floor = max(
-            0.0,
-            threshold
-            - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
-        )
-        agree = sum(
-            F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-            for i in range(num_perm)
-        )
-        ga = all_sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        gb = all_sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        candidates = (
-            candidates.join(ga, "id_a")
-            .join(gb, "id_b")
-            .filter(agree >= math.ceil(est_floor * num_perm))
-            .select("id_a", "id_b")
-        )
+    # identical constants to minhash_lsh_pairs: threshold - 4 sigma
+    # agreement floor, 64-term codegen sum (no array HOF)
+    est_floor = max(
+        0.0,
+        threshold - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
+    )
+    agree = sum(
+        F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+        for i in range(num_perm)
+    )
+    ga = all_sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    gb = all_sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    candidates = (
+        candidates.join(ga, "id_a")
+        .join(gb, "id_b")
+        .filter(agree >= math.ceil(est_floor * num_perm))
+        .select("id_a", "id_b")
+    )
 
     # exact verification — the batch operator's posting-intersection
     # math via the SHARED helper (one definition of the "same math as
