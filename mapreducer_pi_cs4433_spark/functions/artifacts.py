@@ -12,6 +12,11 @@ place gets a NEW key and artifacts rebuild instead of silently serving
 derived values of deleted data (the failure mode load_table's
 static-table memoization merely documents; here it is engineered away,
 at the cost of one directory stat per lookup).
+
+`ensure_table` is the single writer: every build-once table (shingle
+postings, MinHash signatures, IVF/PQ/IVF-PQ codes, k-means tables, the
+graph tables) is committed, timed and read through it, so the rule for
+what "built" means lives here and nowhere else.
 """
 
 from __future__ import annotations
@@ -34,13 +39,6 @@ _INDEX_ROOT_DEFAULT = "/tmp/spark_graft_indexes"
 BUILD_TIMES: dict[str, float] = {}
 
 
-def record_build(kind: str, seconds: float) -> None:
-    """Record one cold artifact build (also used by the ensure_* builders
-    that persist through their own writers — IVF's partitioned parquet,
-    PQ's npy sidecar — instead of ensure_table)."""
-    BUILD_TIMES[kind] = round(seconds, 4)
-
-
 def _source_signature(sf_dir: str) -> str:
     sig = [os.path.abspath(sf_dir)]
     try:
@@ -60,47 +58,6 @@ def artifact_dir(sf_dir: str, kind: str) -> str:
     root = os.environ.get(_INDEX_ROOT_ENV, _INDEX_ROOT_DEFAULT)
     key = hashlib.md5(_source_signature(sf_dir).encode()).hexdigest()[:12]
     return os.path.join(root, key, kind)
-
-
-def parquet_num_rows(path: str) -> int | None:
-    """Total row count of a parquet directory from the file FOOTERS
-    alone — no Spark job, no data pages read. This is what makes
-    size-gating decisions (broadcast vs shuffle join of a node-sized
-    artifact) free: parquet stores num_rows in every footer, so the
-    count costs one metadata stat per file. Returns None when the
-    footers can't be read OR can't be trusted as the table's total —
-    artifact not built yet / build killed mid-write (no _SUCCESS
-    marker: summing the surviving footers would return a PARTIAL count
-    rather than the table's), a partition_by layout (data files nested
-    in subdirectories: the top-level scan would see zero files and
-    report 0 rows for a populated table), or a non-local store without
-    a pyarrow filesystem — callers fall back to a Spark count() on the
-    node-sized table, still cheap relative to one iteration of the job
-    being gated (r9 advice: the pre-fix version violated this contract
-    on both unreachable-but-documented edges)."""
-    try:
-        import pyarrow.parquet as pq
-
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return None
-        total = 0
-        n_files = 0
-        with os.scandir(path) as it:
-            for e in it:
-                if e.is_file() and e.name.endswith(".parquet"):
-                    total += pq.read_metadata(e.path).num_rows
-                    n_files += 1
-        if n_files == 0:  # partitioned layout: files live one level down
-            return None
-        return total
-    except (OSError, ImportError, ValueError):
-        # OSError: missing/unlistable path; ImportError: no pyarrow in
-        # this environment; ValueError covers pyarrow's ArrowInvalid
-        # (a ValueError subclass) from a footer another process is
-        # mid-writing — all three are the documented fall-back-to-count
-        # cases, not crashes (r8 self-review: only OSError was caught,
-        # so a missing pyarrow crashed every gated graph query)
-        return None
 
 
 def scan_num_rows(df: DataFrame) -> int:
@@ -163,9 +120,13 @@ def ensure_table(
     """Return the persisted artifact table, building it on first use.
 
     The parquet _SUCCESS marker is the build-complete signal (a killed
-    build leaves no marker and is simply rebuilt). A warm read runs no
-    schema-inference job (``read_committed_parquet``); a rebuild writes
-    a new marker and so is read with its new schema."""
+    build leaves no marker and is simply rebuilt). ``build`` runs before
+    the table is written, so anything it persists on the side (PQ's
+    ``codebooks.npy``) is in place before the marker exists: the marker
+    alone means the whole artifact is there. A cold build's wall, nested
+    builds its closure triggers included, lands in ``BUILD_TIMES[kind]``.
+    A warm read runs no schema-inference job (``read_committed_parquet``);
+    a rebuild writes a new marker and so is read with its new schema."""
     path = artifact_dir(sf_dir, kind)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         import time
@@ -175,5 +136,5 @@ def ensure_table(
         if partition_by:
             w = w.partitionBy(partition_by)
         w.parquet(path)
-        record_build(kind, time.perf_counter() - t0)
+        BUILD_TIMES[kind] = round(time.perf_counter() - t0, 4)
     return read_committed_parquet(spark, path)

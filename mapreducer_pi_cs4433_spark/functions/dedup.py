@@ -86,7 +86,7 @@ def _hashed_postings(
     at larger k — and joins compare 8-byte longs; a 64-bit collision would
     perturb one intersection count with probability ~(n_distinct^2)/2^65 —
     negligible."""
-    sh = exploded_shingles(df, text_col, id_col, k, distinct=False)
+    sh = exploded_shingles(df, text_col, id_col, k)
     return sh.select("id", F.xxhash64("shingle").alias("h")).distinct()
 
 
@@ -379,7 +379,7 @@ def minhash_signatures(
     over the exploded posting stream (whole-stage codegen), one shuffle
     keyed by doc id. Duplicate shingles don't affect MIN, so the stream
     skips the distinct pass."""
-    posting = exploded_shingles(df, text_col, id_col, k, distinct=False).select(
+    posting = exploded_shingles(df, text_col, id_col, k).select(
         "id", F.xxhash64("shingle").alias("h")
     )
     sigs = posting.groupBy("id").agg(
@@ -927,39 +927,25 @@ def simhash64(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    weighted: bool = False,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash per document: sign-sum of shingle hash bits.
 
     The 64 bit-votes are relational SUM aggregates over the exploded shingle
-    stream; bit b of the result is 1 iff more than half the (weighted)
-    shingles have bit b set. Near-dup docs differ in few bits (compare with
+    stream; bit b of the result is 1 iff more than half the shingles have
+    bit b set. Near-dup docs differ in few bits (compare with
     bit_count(a ^ b)).
 
-    weighted=False (set semantics): votes over DISTINCT shingles — requires
-    a pre-shuffle dedup of the posting stream, the plan's dominant cost
-    (~70% at sf0.1). weighted=True (term-frequency semantics, the classic
-    Charikar/Manku weighting): votes over the raw stream, each shingle
-    weighted by its occurrence count. That drops the distinct entirely:
-    partial aggregation collapses each document map-side (doc rows are
-    generated contiguously by the explode), so the ONLY exchange carries
-    ~65 longs per document regardless of document size — the shape to use
-    at corpus scale. Both variants keep planted near-dups within a few bits
-    (property-tested).
-
-    hash_fn="md5" swaps the engine-private xxhash64 shingle hash for
-    md5_hash64 — bit-reproducible in DuckDB, which upgrades the catalog
-    entry from rows-only to hash-checked at ~1.3x the hash cost.
+    Term-frequency semantics (the classic Charikar/Manku weighting): votes
+    run over the raw shingle stream, each shingle weighted by its
+    occurrence count, so there is no distinct pass: partial aggregation
+    collapses each document map-side (doc rows are generated contiguously
+    by the explode), and the ONLY exchange carries ~65 longs per document
+    regardless of document size. Shingles hash with md5_hash64, which
+    DuckDB reproduces bit for bit, so the catalog entry is hash-checked.
 
     Returns (id, simhash)."""
-    hasher = md5_hash64 if hash_fn == "md5" else F.xxhash64
-    if weighted:
-        sh = exploded_shingles(df, text_col, id_col, k, distinct=False)
-        posting = sh.select("id", hasher("shingle").alias("h"))
-    else:
-        sh = exploded_shingles(df, text_col, id_col, k, distinct=False)
-        posting = sh.select("id", hasher("shingle").alias("h")).distinct()
+    sh = exploded_shingles(df, text_col, id_col, k)
+    posting = sh.select("id", md5_hash64("shingle").alias("h"))
     # r12 (optimization): TWO bit-votes per SUM, packed in 32-bit lanes.
     # The 64 independent `sum((h >> b) & 1)` aggregates were the
     # measured cost of this operator (1.97 s of the 2.86 s query at

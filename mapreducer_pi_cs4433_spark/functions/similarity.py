@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .artifacts import artifact_dir as _artifact_dir
+from .artifacts import artifact_dir, ensure_table
 
 _HYPERPLANE_SEED = 0x51AB5  # fixed: buckets must be stable across jobs/runs
 
@@ -247,18 +247,13 @@ def ensure_ivf_index(
     (a full corpus pass each invocation); an index is a build artifact with
     a lifecycle, not per-query work. First call per (sf_dir, planes) pays
     one build job; every later call is a pruned parquet read."""
-    path = _artifact_dir(sf_dir, f"ivf_p{planes}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import time
-
-        from .artifacts import record_build
-
-        t0 = time.perf_counter()
-        build_ivf_index(df, vec_col, id_col, planes).write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(path)
-        record_build(f"ivf_p{planes}", time.perf_counter() - t0)
-    return spark.read.parquet(path)
+    return ensure_table(
+        spark,
+        sf_dir,
+        f"ivf_p{planes}",
+        lambda: build_ivf_index(df, vec_col, id_col, planes),
+        partition_by="bucket",
+    )
 
 
 def ensure_pq_artifacts(
@@ -279,32 +274,27 @@ def ensure_pq_artifacts(
     cluster this would be a tiny parquet/object-store artifact). r2
     retrained codebooks and re-encoded the corpus inside every query
     invocation, including a driver-side collect of the training sample —
-    the wrong lifecycle at any scale beyond a demo."""
+    the wrong lifecycle at any scale beyond a demo.
+
+    The codes table is the committed artifact; its build saves the
+    codebooks beside it before the codes are written, so committed codes
+    mean the sidecar exists too (see artifacts.ensure_table)."""
     # sample_rows is IN the key: it changes the trained codebooks, so two
     # callers differing only in sample size must not share an artifact
     # (pre-r5 the cli build step and the catalog query collided here)
-    path = _artifact_dir(sf_dir, f"pq_m{m}_k{k}_s{sample_rows}")
-    books_file = os.path.join(path, "codebooks.npy")
-    codes_path = os.path.join(path, "codes")
-    if not (
-        os.path.exists(books_file)
-        and os.path.exists(os.path.join(codes_path, "_SUCCESS"))
-    ):
-        import time
+    kind = f"pq_m{m}_k{k}_s{sample_rows}"
+    books_file = os.path.join(artifact_dir(sf_dir, kind), "codebooks.npy")
 
-        from .artifacts import record_build
-
-        t0 = time.perf_counter()
+    def build() -> DataFrame:
         books = train_pq_codebooks(df, vec_col, m=m, k=k, sample_rows=sample_rows)
-        encode_pq(df, books, vec_col, id_col).write.mode("overwrite").parquet(
-            codes_path
-        )
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(os.path.dirname(books_file), exist_ok=True)
         tmp = books_file + ".tmp.npy"
         np.save(tmp, books)
         os.replace(tmp, books_file)
-        record_build(f"pq_m{m}_k{k}_s{sample_rows}", time.perf_counter() - t0)
-    return np.load(books_file), spark.read.parquet(codes_path)
+        return encode_pq(df, books, vec_col, id_col)
+
+    codes = ensure_table(spark, sf_dir, f"{kind}/codes", build)
+    return np.load(books_file), codes
 
 
 def ensure_ivfpq_codes(
@@ -328,23 +318,21 @@ def ensure_ivfpq_codes(
     assignment, ensure_pq_artifacts codes) with one build-time join; both
     parents persist independently, so rebuilding one layout never
     retrains the other."""
-    key = f"ivfpq_p{planes}_m{m}_k{k}_s{sample_rows}"
-    path = _artifact_dir(sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import time
 
-        from .artifacts import record_build
-
-        t0 = time.perf_counter()
+    def build() -> DataFrame:
         _, codes = ensure_pq_artifacts(
             spark, df, sf_dir, vec_col, id_col, m, k, sample_rows
         )
         index = ensure_ivf_index(spark, df, sf_dir, vec_col, id_col, planes)
-        codes.join(index.select("id", "bucket"), "id").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(path)
-        record_build(key, time.perf_counter() - t0)
-    return spark.read.parquet(path)
+        return codes.join(index.select("id", "bucket"), "id")
+
+    return ensure_table(
+        spark,
+        sf_dir,
+        f"ivfpq_p{planes}_m{m}_k{k}_s{sample_rows}",
+        build,
+        partition_by="bucket",
+    )
 
 
 def kmeans_assignment(
@@ -487,14 +475,8 @@ def ensure_kmeans_assignment(
     artifact (one scoring pass), so the two artifacts are mutually
     consistent by construction — and a cold build of both costs one
     Lloyd chain, not two."""
-    key = f"kmeans_k{k}_i{iters}"
-    path = _artifact_dir(sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import time
 
-        from .artifacts import record_build
-
-        t0 = time.perf_counter()
+    def build() -> DataFrame:
         cent = ensure_kmeans_centroids(
             spark, df, sf_dir, k, iters, vec_col, id_col
         )
@@ -506,9 +488,9 @@ def ensure_kmeans_assignment(
             .cast("long")
             .alias("vq"),
         )
-        _assign_against(q, cent, id_col).write.mode("overwrite").parquet(path)
-        record_build(key, time.perf_counter() - t0)
-    return spark.read.parquet(path)
+        return _assign_against(q, cent, id_col)
+
+    return ensure_table(spark, sf_dir, f"kmeans_k{k}_i{iters}", build)
 
 
 def ensure_kmeans_centroids(
@@ -525,19 +507,12 @@ def ensure_kmeans_centroids(
     (streaming/enrich.py). Persisted separately from the assignment so a
     stream consumer ships only k*d integers, never the corpus-sized
     assignment."""
-    key = f"kmeans_cent_k{k}_i{iters}"
-    path = _artifact_dir(sf_dir, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import time
-
-        from .artifacts import record_build
-
-        t0 = time.perf_counter()
-        kmeans_centroids(df, k, iters, vec_col, id_col).write.mode(
-            "overwrite"
-        ).parquet(path)
-        record_build(key, time.perf_counter() - t0)
-    return spark.read.parquet(path)
+    return ensure_table(
+        spark,
+        sf_dir,
+        f"kmeans_cent_k{k}_i{iters}",
+        lambda: kmeans_centroids(df, k, iters, vec_col, id_col),
+    )
 
 
 def hamming_ball(bucket: int, planes: int, radius: int) -> list[int]:

@@ -163,37 +163,21 @@ def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumns({f"{text_col}_scrubbed": scrubbed, **out_cols})
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """All k-character shingles of the (whitespace-normalized) text as an
-    array. Expression-only: sequence + transform + substring."""
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.regexp_replace(c, r"\s+", " ")
-    n = F.length(norm)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: norm.substr(i, F.lit(k)),
-        ),
-    ).otherwise(F.array(norm))
-
-
 def exploded_shingles(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Relational shingle stream: (id, shingle) — one row per (distinct)
-    k-char shingle of the whitespace-normalized text.
+    """Relational shingle stream: (id, shingle) — one row per k-char
+    shingle position of the whitespace-normalized text (duplicates kept;
+    consumers that need set semantics dedup after hashing).
 
-    This is the scale-path twin of char_shingles(): array higher-order
-    functions run as interpreted CodegenFallback expressions (~14us per
-    element), so every shingle consumer (MinHash, SimHash, Jaccard,
-    fingerprints) goes through this explode instead — generate + substring
-    stay inside whole-stage codegen. Texts shorter than k yield the whole
-    text, matching char_shingles.
+    Array higher-order functions (a transform over a sequence of offsets)
+    run as interpreted CodegenFallback expressions (~14us per element),
+    so every shingle consumer (MinHash, SimHash, Jaccard, fingerprints)
+    goes through this explode instead — generate + substring stay inside
+    whole-stage codegen. Texts shorter than k yield the whole text.
     """
     norm = F.regexp_replace(F.col(text_col), r"\s+", " ")
     slim = df.select(F.col(id_col).alias("id"), norm.alias("_norm"))
@@ -209,19 +193,15 @@ def exploded_shingles(
     target = spark.sparkContext.defaultParallelism
     if slim.rdd.getNumPartitions() < target:
         slim = slim.repartition(target)
-    out = (
-        slim.select(
-            "id",
-            "_norm",
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.greatest(F.length("_norm") - F.lit(k - 1), F.lit(1))
-                )
-            ).alias("_i"),
-        )
-        .select("id", F.col("_norm").substr(F.col("_i"), F.lit(k)).alias("shingle"))
-    )
-    return out.distinct() if distinct else out
+    return slim.select(
+        "id",
+        "_norm",
+        F.explode(
+            F.sequence(
+                F.lit(1), F.greatest(F.length("_norm") - F.lit(k - 1), F.lit(1))
+            )
+        ).alias("_i"),
+    ).select("id", F.col("_norm").substr(F.col("_i"), F.lit(k)).alias("shingle"))
 
 
 def fingerprint(
@@ -232,7 +212,7 @@ def fingerprint(
     DuckDB computes the identical fingerprint — unlike engine-private hash
     functions. Relational min-aggregate over the exploded shingle stream
     (codegen path). Returns (id_col, fingerprint hex string)."""
-    sh = exploded_shingles(df, text_col, id_col, k, distinct=False)
+    sh = exploded_shingles(df, text_col, id_col, k)
     return sh.groupBy(F.col("id").alias(id_col)).agg(
         F.min(F.md5("shingle")).alias("fingerprint")
     )

@@ -603,7 +603,7 @@ _DRIVER_PRIORITY = [
     # r9 fifth wave (1 seat): the HLL-state incremental-maintenance
     # proof (merge == rebuild as bit identity), new this round — funded
     # by demoting graph_label_propagation, whose r8 driver row stands
-    # and whose r9 change (the parquet_num_rows footer-count contract)
+    # and whose r9 change (the footer-count size gate)
     # is already re-verified by the FULL gates at both SFs and the r8
     # judge's own re-run.
     "ivm_hll_register_merge",

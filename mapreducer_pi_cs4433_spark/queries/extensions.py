@@ -1167,11 +1167,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral md5-derived 64-bit hash (dedup.md5_hash64) instead of
     engine-private xxhash64, so both engines compute bit-identical
     fingerprints (r2 was rows-only for exactly this reason).
-    tf-weighted variant: no distinct pass, so the single exchange carries
+    tf-weighted votes: no distinct pass, so the single exchange carries
     ~65 longs per document — the corpus-scale plan (see simhash64)."""
-    return dedup.simhash64(
-        _t(spark, sf_dir, "documents"), k=_SHINGLE_K, weighted=True, hash_fn="md5"
-    )
+    return dedup.simhash64(_t(spark, sf_dir, "documents"), k=_SHINGLE_K)
 
 
 @query("dedup_embedding_neardup")
@@ -2559,47 +2557,31 @@ def _pagerank_oracle() -> str:
     """
 
 
-_GRAPH_BCAST_ENV = "SPARK_GRAFT_GRAPH_BROADCAST_MAX_NODES"
 # ~8M (node, value) int64 pairs ~= 128 MB raw — comfortably inside a
 # large executor's broadcast budget with room for the hash map overhead;
 # past it the hint must NOT be forced, because a forced broadcast does
 # not degrade under pressure, it OOMs the executors.
-_GRAPH_BCAST_DEFAULT_MAX_NODES = 8_000_000
+_GRAPH_BCAST_MAX_NODES = 8_000_000
 
 
-def graph_nodes_broadcastable(spark: SparkSession, sf_dir: str) -> bool:
-    """Size gate for the iterative-graph family's per-iteration join of
-    the NODE-sized label/rank table onto the edge artifact. Below the
-    crossover the measured-right plan is a forced broadcast (edges never
-    shuffle; at bench scale this halved PageRank's wall). But the node
-    table grows linearly with the corpus — at a TPC-H-shaped 100 TB the
-    part+supplier node set is billions of rows, far past any
-    broadcastable size — so the hint is gated on the node COUNT, read
-    for free from the persisted degree artifact's parquet footers
-    (fallback: one count() on the node-sized table). Above the gate the
-    join is left plain: Catalyst/AQE then picks a shuffle join keyed on
-    the edge artifact's src, which degrades gracefully instead of
-    OOMing. Both plan modes are pinned in tests/test_plan_shapes.py."""
-    import os as _os
+def graph_broadcast_hint(deg: DataFrame):
+    """The size-gated join hint every iterative-graph member (LPA,
+    PageRank, k-core) applies to its node-sized table (labels / ranks /
+    keepers): F.broadcast below the crossover, identity above it.
 
-    from ..functions.artifacts import artifact_dir, parquet_num_rows
+    Below the crossover the measured-right plan is a forced broadcast
+    (edges never shuffle; at bench scale this halved PageRank's wall).
+    But the node table grows linearly with the corpus — at a
+    TPC-H-shaped 100 TB the part+supplier node set is billions of rows,
+    far past any broadcastable size — so the hint is gated on the node
+    COUNT: the rows of the degree artifact ``deg``, read from its parquet
+    footers (no Spark job). Above the gate the join is left plain:
+    Catalyst/AQE then picks a shuffle join keyed on the edge artifact's
+    src, which degrades gracefully instead of OOMing. Both plan modes
+    are pinned in tests/test_plan_shapes.py."""
+    from ..functions.artifacts import scan_num_rows
 
-    cap = int(
-        _os.environ.get(_GRAPH_BCAST_ENV, _GRAPH_BCAST_DEFAULT_MAX_NODES)
-    )
-    n = parquet_num_rows(artifact_dir(sf_dir, "pr_graph_deg"))
-    if n is None:  # footers unreadable: count the node-sized table once
-        _, deg = ensure_pagerank_graph(spark, sf_dir)
-        n = deg.count()
-    return n <= cap
-
-
-def graph_broadcast_hint(spark: SparkSession, sf_dir: str):
-    """The size-gated join hint every iterative-graph member applies to
-    its node-sized table (labels / ranks / keepers): F.broadcast below
-    the crossover, identity above it (one definition for the whole
-    family — LPA, PageRank, k-core each used to carry a copy)."""
-    if graph_nodes_broadcastable(spark, sf_dir):
+    if scan_num_rows(deg) <= _GRAPH_BCAST_MAX_NODES:
         return F.broadcast
     return lambda df: df
 
@@ -2670,7 +2652,7 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-sized; the broadcast hint is SIZE-GATED on the degree
     artifact's footer row count — forced below the crossover, plain
     equi-join above it so AQE picks a shuffle join instead of OOMing,
-    see graph_nodes_broadcastable) + one grouped integer SUM — the
+    see graph_broadcast_hint) + one grouped integer SUM — the
     canonical distributed PageRank step; unrolling keeps it a single
     Catalyst plan, so the optimizer shares the edge/degree scans across
     iterations via exchange reuse."""
@@ -2681,8 +2663,8 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct+union ETL on every query run).
     sym, deg = ensure_pagerank_graph(spark, sf_dir)
     # size-gated hint (r8): force the broadcast only while the node table
-    # fits — see graph_nodes_broadcastable for the 100x rationale
-    _hint = graph_broadcast_hint(spark, sf_dir)
+    # fits — see graph_broadcast_hint for the 100x rationale
+    _hint = graph_broadcast_hint(deg)
     r = deg.select(
         F.col("src").alias("node"), F.lit(_PR_SCALE).cast("long").alias("r")
     )
@@ -4326,7 +4308,7 @@ def text_lm_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized exchanges are the compaction groupBy and the final per-doc
     aggregation."""
     docs = _t(spark, sf_dir, "documents")
-    tri = text.exploded_shingles(docs, k=3, distinct=False)
+    tri = text.exploded_shingles(docs, k=3)
     grouped = (
         tri.groupBy("id", "shingle")
         .agg(F.count("*").alias("n_occ"))

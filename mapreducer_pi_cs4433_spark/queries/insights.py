@@ -95,8 +95,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per iteration — identical cost profile to the PageRank
     sibling over the SAME persisted edge artifact: the node-sized label
     table broadcasts onto the edge list (edges never shuffle) under the
-    SIZE GATE (graph_nodes_broadcastable: footer-counted node rows vs a
-    configurable cap — above it the join stays plain and AQE picks a
+    SIZE GATE (graph_broadcast_hint: footer-counted node rows vs a
+    fixed cap — above it the join stays plain and AQE picks a
     shuffle join, because a forced broadcast of a corpus-linear node
     table does not degrade at 100x, it OOMs), then ONE vnode-keyed
     exchange per iteration feeds BOTH the (vnode, label) vote count and
@@ -118,7 +118,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label-table broadcast only while the node count (free from the
     # degree artifact's parquet footers) fits; above the crossover the
     # join is left plain so AQE picks a shuffle join instead of OOMing
-    _hint = graph_broadcast_hint(spark, sf_dir)
+    _hint = graph_broadcast_hint(deg)
     # seed from the DEGREE artifact (one row per node, node-sized parquet
     # read) rather than distinct() over the edge list — drops an
     # edge-sized exchange from the plan

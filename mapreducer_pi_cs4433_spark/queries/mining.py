@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import dedup
-from ..functions.artifacts import artifact_dir, parquet_num_rows
+from ..functions.artifacts import scan_num_rows
 from .catalog import _fmt_doc, _t, query
 from .extensions import (
     _SHINGLE_K,
@@ -179,12 +179,12 @@ def _kcore_degree_table(
     SIZE in two consecutive rounds means an equal keeper SET, after
     which every further round is a no-op. Each keeper's size is an
     Observation on its own checkpoint job, and round 1 compares against
-    the node count in the degree artifact's parquet footers (None when
-    the footers can't be read: round 1 then never stops early). So the
+    the node count of the degree artifact, read from its parquet footers
+    (``scan_num_rows``: a ``count()`` when they can't be read). So the
     loop stops at the fixpoint and returns exactly what `peels` rounds
     would."""
-    sym, _deg = ensure_pagerank_graph(spark, sf_dir)
-    _hint = graph_broadcast_hint(spark, sf_dir)
+    sym, deg = ensure_pagerank_graph(spark, sf_dir)
+    _hint = graph_broadcast_hint(deg)
     # r13 (optimization): degrees aggregate on DST, not src. The edge
     # artifact is symmetric (every undirected edge appears in both
     # directions) and _restrict keeps an edge only when BOTH endpoints
@@ -194,7 +194,7 @@ def _kcore_degree_table(
     # reduces each peel's exchange from |E| rows to ~|V| (guide §2.3;
     # measured 2.50 -> 1.94 s at sf0.1). Output keeps the src column
     # name — it is the node id either way.
-    prev = parquet_num_rows(artifact_dir(sf_dir, "pr_graph_deg"))
+    prev = scan_num_rows(deg)
     keep = None
     for _ in range(peels):
         edges = sym if keep is None else _restrict(sym, keep, _hint)
@@ -232,7 +232,7 @@ def graph_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per round — the fourth member of the iterative-graph
     family over the SAME persisted edge artifact: one pass over the
     BASE edges restricted by the latest keeper set (two semi-joins
-    under the r8 SIZE GATE: graph_nodes_broadcastable — broadcast below
+    under the r8 SIZE GATE: graph_broadcast_hint — broadcast below
     the node-count crossover, shuffle join above it) and one dst-keyed
     degree aggregation (r13: dst, not src — the edge artifact is
     clustered by dst, so the map-side partial compresses each peel's

@@ -1,4 +1,4 @@
-"""Sessionization: gap-based event sessions, three implementations.
+"""Sessionization: gap-based event sessions, two implementations.
 
 - sessionize(df): built-in ``session_window`` — works identically on batch
   and streaming DataFrames; the engine manages merge/expiry state. Prefer
@@ -7,13 +7,7 @@
   custom per-key state machines the built-ins can't express (dynamic gaps,
   per-session ML features, cross-event invariants). Arrow-batched, state is
   one row per user, sessions emit when closed by a gap or by processing-time
-  timeout.
-- sessionize_tws(stream): the same state machine on Spark 4's
-  ``transformWithStateInPandas`` (StatefulProcessor API) — typed state
-  handles, first-class named timers, initial-state support, and
-  RocksDB-only state (the API the old GroupState path is converging
-  toward). Both stateful variants are replay-tested equal to the
-  built-in.
+  timeout. Replay-tested equal to the built-in.
 
 Serialization: the state function is a local closure (module-level functions
 ship by cloudpickle reference and break when executors can't import this
@@ -161,108 +155,3 @@ def sessionize_stateful(
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
-
-def sessionize_tws(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_seconds: int = 1800,
-    flush_timeout_seconds: int | None = None,
-) -> DataFrame:
-    """sessionize_stateful's state machine on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor).
-
-    Same semantics as sessionize_stateful (gap-close on arrival order,
-    processing-time flush timer for idle users; session_end = last event's
-    timestamp), expressed against the current stateful API: a typed
-    ValueState handle instead of a raw tuple, explicit per-key timers
-    (re-armed by delete+register on every batch with input), and a
-    dedicated expired-timer callback. REQUIRES the RocksDB state store
-    provider (session.enable_rocksdb_state) — transformWithState does not
-    run on the on-heap provider — and a Python environment with protobuf
-    (the API's state-server protocol; this container ships without it, so
-    the replay-equality test self-skips there, the same environment gate
-    as the multimodal codecs).
-
-    The availableNow caveat from sessionize_stateful applies here too:
-    armed timers keep a bounded replay alive through empty micro-batches;
-    bounded drivers should watch stateOperators.numRowsTotal and stop().
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_seconds * 1_000_000
-    timeout_ms = (
-        gap_seconds if flush_timeout_seconds is None else flush_timeout_seconds
-    ) * 1000
-
-    def _emit(rows: list[tuple[int, int, int, int]]) -> "pd.DataFrame":
-        return pd.DataFrame(
-            {
-                "user_id": [c[0] for c in rows],
-                "session_start": [pd.Timestamp(c[1], unit="us") for c in rows],
-                "session_end": [pd.Timestamp(c[2], unit="us") for c in rows],
-                "n_events": [c[3] for c in rows],
-            }
-        )
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "session", "start_us BIGINT, last_us BIGINT, n_events INT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user,) = key
-            ts_list: list[int] = []
-            for pdf in rows:
-                ts_list.extend(
-                    int(v.value // 1000) for v in pd.to_datetime(pdf["__ts"])
-                )
-            ts_list.sort()
-            cur = self._state.get()
-            s, last, n = cur if cur is not None else (None, None, None)
-            closed: list[tuple[int, int, int, int]] = []
-            for t in ts_list:
-                if s is None:
-                    s, last, n = t, t, 1
-                elif t - last > gap_us:
-                    closed.append((user, s, last, n))
-                    s, last, n = t, t, 1
-                else:
-                    last, n = t, n + 1
-            if s is not None:
-                self._state.update((s, last, n))
-                for old in list(self._handle.listTimers()):
-                    self._handle.deleteTimer(old)
-                self._handle.registerTimer(
-                    timerValues.getCurrentProcessingTimeInMs() + timeout_ms
-                )
-            if closed:
-                yield _emit(closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user,) = key
-            cur = self._state.get()
-            if cur is not None:
-                s, last, n = cur
-                self._state.clear()
-                yield _emit([(user, s, last, n)])
-
-        def close(self) -> None:
-            pass
-
-    prepared = stream.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("__ts"),
-    )
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="Append",
-        timeMode="ProcessingTime",
-    )

@@ -186,17 +186,12 @@ def test_exact_dedup_properties(spark, docs):
     assert len({r.digest for r in out}) == len(out)
 
 
-@pytest.mark.parametrize("weighted", [False, True])
-def test_simhash_near_dups_have_close_hashes(spark, docs, weighted):
+def test_simhash_near_dups_have_close_hashes(spark, docs):
     """Planted near-dup pairs (exact jaccard >= 0.5) must be much closer in
-    SimHash hamming distance than random pairs — under both the distinct
-    (set) and tf-weighted (scale-path) vote semantics."""
+    SimHash hamming distance than random pairs under tf-weighted votes."""
     pairs = dedup.ngram_jaccard_pairs(docs, k=12, threshold=0.5).collect()
     assert pairs
-    sims = {
-        r.id: r.simhash
-        for r in dedup.simhash64(docs, k=12, weighted=weighted).collect()
-    }
+    sims = {r.id: r.simhash for r in dedup.simhash64(docs, k=12).collect()}
 
     def ham(a, b):
         return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
@@ -213,14 +208,11 @@ def test_weighted_simhash_single_cheap_exchange(spark, docs):
     final aggregation) — no pre-shuffle distinct of the shingle stream."""
     from mapreducer_pi_cs4433_spark.plans.inspect import count_exchanges
 
-    w = count_exchanges(dedup.simhash64(docs, k=12, weighted=True))
     # <= 2: the per-doc final aggregation, plus (small corpora only) the
     # explode-parallelize repartition that exploded_shingles inserts when
     # the scan yields fewer splits than cores — that gate no-ops at real
     # corpus scale, so the data-sized exchange count stays 1.
-    assert w <= 2
-    # set-semantics variant pays the pre-shuffle distinct on top
-    assert count_exchanges(dedup.simhash64(docs, k=12, weighted=False)) > w
+    assert count_exchanges(dedup.simhash64(docs, k=12)) <= 2
 
 
 def test_embedding_neardup_finds_planted_duplicate(spark):

@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreducer_pi_cs4433_spark.cli import _build_index
-from mapreducer_pi_cs4433_spark.functions import dedup
+from mapreducer_pi_cs4433_spark.functions import dedup, similarity
 from mapreducer_pi_cs4433_spark.functions.artifacts import (
     artifact_dir,
     ensure_table,
@@ -26,7 +26,15 @@ from mapreducer_pi_cs4433_spark.functions.artifacts import (
 )
 from mapreducer_pi_cs4433_spark.plans.inspect import run_counting_jobs
 from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
-from mapreducer_pi_cs4433_spark.queries.extensions import _JACCARD_T, _SHINGLE_K
+from mapreducer_pi_cs4433_spark.queries.extensions import (
+    _IVF_PLANES,
+    _JACCARD_T,
+    _KMEANS_K,
+    _PQ_CODE_K,
+    _PQ_M,
+    _PQ_SAMPLE,
+    _SHINGLE_K,
+)
 from mapreducer_pi_cs4433_spark.sources.loaders import load_table
 from mapreducer_pi_cs4433_spark.streaming.hll_cells import (
     CELL_ROWS_SCHEMA,
@@ -76,6 +84,27 @@ def test_connected_components_job_budget(spark):
     assert sorted(comp.collect()) == sorted(built.collect())
 
 
+@pytest.mark.parametrize(
+    "ensure",
+    [
+        lambda s, e: similarity.ensure_ivf_index(s, e, SF_SMOKE, planes=_IVF_PLANES),
+        lambda s, e: similarity.ensure_pq_artifacts(
+            s, e, SF_SMOKE, m=_PQ_M, k=_PQ_CODE_K, sample_rows=_PQ_SAMPLE
+        )[1],
+        lambda s, e: similarity.ensure_kmeans_assignment(s, e, SF_SMOKE, k=_KMEANS_K),
+    ],
+    ids=["ivf", "pq", "kmeans"],
+)
+def test_warm_similarity_artifact_runs_no_job(spark, ensure):
+    """The similarity builders commit through ensure_table, so a warm
+    read reuses the kept schema: no inference job."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    built = ensure(spark, emb)
+    df, jobs = run_counting_jobs(spark, lambda: ensure(spark, emb))
+    assert jobs == 0
+    assert df.schema == built.schema
+
+
 def test_warm_build_index_runs_no_job(spark, capsys):
     _build_index(spark, SF_SMOKE, "minhash")
     _, jobs = run_counting_jobs(spark, lambda: _build_index(spark, SF_SMOKE, "minhash"))
@@ -115,6 +144,16 @@ def test_scan_num_rows_reads_footers_of_a_bare_scan(spark, artifact_sf):
     assert (n, jobs) == (10, 0)
     # a filter lists the same files: it must be counted, not footer-summed
     assert scan_num_rows(df.filter(F.col("id") < 4)) == 4
+    # a partition_by layout nests its files one level down
+    part = ensure_table(
+        spark,
+        artifact_sf,
+        "p",
+        lambda: spark.range(50).withColumn("p", F.col("id") % 2),
+        partition_by="p",
+    )
+    n, jobs = run_counting_jobs(spark, lambda: scan_num_rows(part))
+    assert (n, jobs) == (50, 0)
 
 
 def test_rebuilt_artifact_serves_new_schema(spark, artifact_sf):

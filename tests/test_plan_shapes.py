@@ -1004,7 +1004,10 @@ def test_graph_broadcast_gate_modes(spark, monkeypatch):
     shuffle). Above the cap (cap=0 here) the hint must be ABSENT and the
     join fall back to a shuffle join, because a forced broadcast of a
     corpus-linear node table does not degrade at 100x node counts — it
-    OOMs. Both modes, both family members."""
+    OOMs. Both modes, all three family members."""
+    from mapreducer_pi_cs4433_spark.queries import extensions
+
+    cap = extensions._GRAPH_BCAST_MAX_NODES
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -1014,12 +1017,10 @@ def test_graph_broadcast_gate_modes(spark, monkeypatch):
             "graph_pagerank_suppliers",
             "graph_kcore_census",
         ):
-            monkeypatch.delenv(
-                "SPARK_GRAFT_GRAPH_BROADCAST_MAX_NODES", raising=False
-            )
+            monkeypatch.setattr(extensions, "_GRAPH_BCAST_MAX_NODES", cap)
             plan = formatted_plan(QUERIES[name](spark, SF_SMOKE))
             assert "BroadcastExchange" in plan, name  # forced below cap
-            monkeypatch.setenv("SPARK_GRAFT_GRAPH_BROADCAST_MAX_NODES", "0")
+            monkeypatch.setattr(extensions, "_GRAPH_BCAST_MAX_NODES", 0)
             plan = formatted_plan(QUERIES[name](spark, SF_SMOKE))
             assert "BroadcastExchange" not in plan, name  # gate released
             assert (

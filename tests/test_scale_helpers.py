@@ -556,78 +556,6 @@ def test_artifact_key_changes_when_source_rewritten(spark, tmp_path, monkeypatch
     assert artifact_dir(str(corpus), "minhash_k12_p64") == k2
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python driver worker requires protobuf, "
-    "not shipped in this container (operator is environment-gated like "
-    "the multimodal codecs; see sessionize_tws docstring)",
-)
-def test_sessionize_tws_matches_builtin(spark):
-    """The transformWithStateInPandas variant (Spark 4 StatefulProcessor
-    API) must emit exactly the built-in session_window sessions on a
-    bounded replay, like its GroupState twin. RocksDB provider required —
-    transformWithState does not run on the on-heap store."""
-    from mapreducer_pi_cs4433_spark.session import enable_rocksdb_state
-
-    events = load_table(spark, SF_SMOKE, "events")
-    src = tempfile.mkdtemp(prefix="tws_src_")
-    ckpt = tempfile.mkdtemp(prefix="tws_ck_")
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    enable_rocksdb_state(spark)
-    try:
-        events.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        out = sessions.sessionize_tws(
-            stream, gap_seconds=1800, flush_timeout_seconds=2
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_test")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        import time as _t
-
-        deadline = _t.time() + 120
-        while _t.time() < deadline:
-            p = q.lastProgress
-            if p and p["batchId"] >= 1:
-                ops = p.get("stateOperators") or []
-                if ops and ops[0].get("numRowsTotal") == 0:
-                    break
-            _t.sleep(1)
-        q.stop()
-        q.awaitTermination(30)
-        got = {
-            (r.user_id, r.session_start, r.n_events)
-            for r in spark.sql("select * from tws_test").collect()
-        }
-        want = {
-            (r.user_id, r.session_start, r.n_events)
-            for r in sessions.sessionize(events, gap="30 minutes").collect()
-        }
-        assert got == want
-        assert got
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_orc_roundtrip_schema_and_pushdown(spark):
     """ORC round-trip must preserve schema + values exactly, and filters
     must reach the ORC scan (searchArgument pushdown) like parquet."""
@@ -648,47 +576,6 @@ def test_orc_roundtrip_schema_and_pushdown(spark):
         assert "PushedFilters" in plan and "doc_id" in plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_parquet_num_rows_matches_spark_count(spark, tmp_path, monkeypatch):
-    """parquet_num_rows (the free footer count behind the iterative-graph
-    broadcast size gate) must equal the Spark count of the same artifact,
-    and return None for unreadable/missing paths so callers fall back to
-    a real count instead of gating on garbage."""
-    from mapreducer_pi_cs4433_spark.functions.artifacts import (
-        artifact_dir,
-        ensure_table,
-        parquet_num_rows,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    ensure_table(
-        spark,
-        "/some/corpus",
-        "rows_probe",
-        lambda: spark.range(123).repartition(4),
-    )
-    path = artifact_dir("/some/corpus", "rows_probe")
-    assert parquet_num_rows(path) == 123
-    assert parquet_num_rows(path + "_missing") is None
-    # Contract edges (r9 advice): a killed/partial build (no _SUCCESS)
-    # must return None — not the partial sum of surviving footers — and
-    # a partition_by layout (data files nested one level down) must
-    # return None — not 0 — so the broadcast gate falls back to a real
-    # count() instead of gating on garbage.
-    os.remove(os.path.join(path, "_SUCCESS"))
-    assert parquet_num_rows(path) is None
-    ensure_table(
-        spark,
-        "/some/corpus",
-        "rows_probe_part",
-        lambda: spark.range(50).withColumn("p", F.col("id") % 2),
-        partition_by="p",
-    )
-    ppath = artifact_dir("/some/corpus", "rows_probe_part")
-    assert parquet_num_rows(ppath) is None
-    # and the documented fallback really does produce the true count
-    assert spark.read.parquet(ppath).count() == 50
 
 
 def test_write_partitioned_rejects_high_cardinality(spark):
