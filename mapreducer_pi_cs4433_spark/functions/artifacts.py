@@ -60,14 +60,14 @@ def artifact_dir(sf_dir: str, kind: str) -> str:
     return os.path.join(root, key, kind)
 
 
-def scan_num_rows(df: DataFrame) -> int:
-    """Row count of ``df``: from the parquet footers of its input files
-    when the plan is a bare file scan (no Spark job), else ``count()``.
+def _scan_footers(df: DataFrame) -> list | None:
+    """Parquet footers of ``df``'s input files when its plan is a bare
+    file scan of local files, read without a Spark job; else None.
 
-    A filter or join over a scan lists the same input files with a
-    different row count, so only a plan that is one file relation is
-    read from footers. A non-local file, or a footer that cannot be read
-    (not parquet, mid-write, no pyarrow), falls back to ``count()``."""
+    A filter or join over a scan lists the same input files with other
+    rows, so only a plan that is one file relation is answered from
+    footers. A non-local file, or a footer that cannot be read (not
+    parquet, mid-write, no pyarrow), gives None."""
     plan = df._jdf.queryExecution().analyzed()
     if (
         plan.getClass().getSimpleName() == "LogicalRelation"
@@ -78,10 +78,45 @@ def scan_num_rows(df: DataFrame) -> int:
 
             paths = [urlparse(u) for u in df.inputFiles()]
             if all(u.scheme in ("", "file") for u in paths):
-                return sum(pq.read_metadata(unquote(u.path)).num_rows for u in paths)
+                return [pq.read_metadata(unquote(u.path)) for u in paths]
         except (OSError, ImportError, ValueError):
             pass
-    return df.count()
+    return None
+
+
+def scan_num_rows(df: DataFrame) -> int:
+    """Row count of ``df``: from the parquet footers of its input files
+    when the plan is a bare file scan (no Spark job), else ``count()``."""
+    footers = _scan_footers(df)
+    if footers is None:
+        return df.count()
+    return sum(m.num_rows for m in footers)
+
+
+def scan_min(df: DataFrame, column: str):
+    """Minimum of ``column`` over a bare file scan, from the min
+    statistics of every non-empty row group in its parquet footers (no
+    Spark job). None when the footers cannot be read, when a row group
+    lacks the column or its statistics, or when the table is empty: the
+    caller then has no bound and must compute."""
+    low = None
+    for meta in _scan_footers(df) or ():
+        for g in range(meta.num_row_groups):
+            rg = meta.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            stats = next(
+                (
+                    rg.column(i).statistics
+                    for i in range(rg.num_columns)
+                    if rg.column(i).path_in_schema == column
+                ),
+                None,
+            )
+            if stats is None or not stats.has_min_max:
+                return None
+            low = stats.min if low is None else min(low, stats.min)
+    return low
 
 
 def read_committed_parquet(spark: SparkSession, path: str) -> DataFrame:

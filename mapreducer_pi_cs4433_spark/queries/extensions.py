@@ -1002,19 +1002,22 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     The assignment is the persisted component artifact
     (dedup.ensure_neardup_components): connected_components over the
     verified-pair artifact, run once per corpus build, so the query
-    function runs no Spark job and the plan is one artifact scan plus the
-    size aggregate. The propagation itself still runs live in
-    er_fuzzy_resolution."""
+    function runs no Spark job. The plan is one artifact scan and
+    cluster_size as count(*) over (partition by comp): one shuffle by
+    cluster, where a size aggregate joined back to the scan needed an
+    aggregate exchange and a broadcast. The propagation itself still runs
+    live in er_fuzzy_resolution."""
+    from pyspark.sql import Window
+
     docs = _t(spark, sf_dir, "documents")
     comp = dedup.ensure_neardup_components(
         spark, docs, sf_dir, k=_SHINGLE_K, num_perm=64, bands=32,
         threshold=_JACCARD_T,
     )
-    sizes = comp.groupBy("comp").agg(F.count("*").alias("cluster_size"))
-    return comp.join(sizes, "comp").select(
+    return comp.select(
         F.col("id").alias("doc_id"),
         F.col("comp").alias("cluster_id"),
-        F.col("cluster_size"),
+        F.count("*").over(Window.partitionBy("comp")).alias("cluster_size"),
     )
 
 
@@ -2586,20 +2589,13 @@ def graph_broadcast_hint(deg: DataFrame):
     return lambda df: df
 
 
-def ensure_pagerank_graph(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Persisted (symmetrized edge list, degree table) of the
-    part-supplier co-purchase graph — the shared starting point of every
-    iterative graph job (PageRank here; any future label propagation /
-    components over the same graph). Built once per corpus via the
-    artifact store; also exposed through `cli.py build-index --kinds
-    graph` as part of the corpus build step."""
+def ensure_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted symmetrized edge list (src, dst) of the part-supplier
+    co-purchase graph, built once per corpus via the artifact store."""
     from ..functions.artifacts import ensure_table
 
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-
     def _build_sym() -> DataFrame:
+        li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
         edges = li.select(
             F.col("l_partkey").alias("a"),
             (F.col("l_suppkey") + 1_000_000).alias("b"),
@@ -2623,14 +2619,35 @@ def ensure_pagerank_graph(
             spark.sparkContext.defaultParallelism, "dst"
         ).sortWithinPartitions("dst")
 
-    sym = ensure_table(spark, sf_dir, "pr_graph_sym", _build_sym)
-    deg = ensure_table(
+    return ensure_table(spark, sf_dir, "pr_graph_sym", _build_sym)
+
+
+def ensure_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted degree table (src, d) of the co-purchase graph. A warm
+    read is the degree table alone: the edge DataFrame is built only when
+    the table itself has to be."""
+    from ..functions.artifacts import ensure_table
+
+    return ensure_table(
         spark,
         sf_dir,
         "pr_graph_deg",
-        lambda: sym.groupBy("src").agg(F.count("*").alias("d")),
+        lambda: ensure_graph_edges(spark, sf_dir)
+        .groupBy("src")
+        .agg(F.count("*").alias("d")),
     )
-    return sym, deg
+
+
+def ensure_pagerank_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Persisted (symmetrized edge list, degree table) of the
+    part-supplier co-purchase graph — the shared starting point of every
+    iterative graph job (PageRank, LPA; k-core reads the two tables
+    separately). Both are built once per corpus via the artifact store;
+    also exposed through `cli.py build-index --kinds graph` as part of
+    the corpus build step."""
+    return ensure_graph_edges(spark, sf_dir), ensure_graph_degree(spark, sf_dir)
 
 
 @query("graph_pagerank_suppliers", oracle=_pagerank_oracle())
@@ -3121,9 +3138,10 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
       -> near-dup removal (drop the higher id of every Jaccard >= 0.5 pair
          among survivors, candidates via banded LSH, verified exactly)
 
-    One lazy plan: gates are scalar codegen predicates evaluated in the
-    scan pass, dedup is a digest-keyed semi join, near-dup reuses the LSH
-    machinery on the already-filtered corpus. The oracle recomputes the
+    Gates are scalar codegen predicates evaluated in the scan pass;
+    exact dedup is one digest-keyed aggregate whose min(struct(doc_id,
+    n_tokens)) carries the winner's row, checkpointed once; near-dup
+    removal reads the persisted pair artifact. The oracle recomputes the
     identical pipeline in SQL with the exact pair join, so the driver
     checks the whole composition, not just the pieces. Thresholds are
     calibrated to the synthetic corpus so every stage actually removes
@@ -3136,23 +3154,13 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         text._marker_count(F.col("text"), text._LANG_MARKERS["en"]).alias("en_score"),
     )
     kept = feats.filter((F.col("n_tokens") >= 25) & (F.col("en_score") >= 1))
-    # exact-dedup winners as agg + left-semi (NOT row_number over digest:
-    # measured 1.7x slower — the window shuffles full text rows by digest,
-    # while the semi-join shuffles only (digest, doc_id) and AQE broadcasts
-    # the winner list back onto the un-shuffled text stream)
-    winners = (
-        kept.groupBy(F.md5("text").alias("digest"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    fe = kept.join(winners, "doc_id", "left_semi")
-    # The filtered+exact-deduped subtree feeds BOTH the LSH pair generator
+    # The filtered+exact-deduped table feeds BOTH the pair restriction
     # and the final anti-join. Relying on ReuseExchange to share it is
     # fragile (the two consumers reshape it differently, so the gate +
-    # semi-join work ran twice — the whole suite's largest cost at r2);
+    # dedup work ran twice — the whole suite's largest cost at r2);
     # localCheckpoint materializes it once and truncates lineage. At 100 TB
     # this intermediate is a persisted table between pipeline stages.
-    fe = fe.localCheckpoint()
+    fe = _exact_dedup(kept).localCheckpoint()
     # Near-dup pairs among the SURVIVORS come straight from the persisted
     # verified pair artifact restricted to both endpoints surviving: LSH
     # banding is per-doc content-determined, so a pair of survivors is a
@@ -3166,7 +3174,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost at sf0.1); the pair table was already a build artifact for the
     # clustering/keeper/contamination consumers, so reading it here is the
     # same move dedup_ngram_jaccard made in r4 (12.8 s -> 0.1 s).
-    fe_ids = fe.select(F.col("doc_id").alias("id"))
     pairs = dedup.ensure_neardup_pairs(
         spark,
         _t(spark, sf_dir, "documents"),
@@ -3176,13 +3183,27 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=32,
         threshold=_JACCARD_T,
     )
-    dup_b = (
-        pairs.join(fe_ids.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
-        .join(fe_ids.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
-        .select(F.col("id_b").alias("doc_id"))
-        .distinct()
+    # Only id_a is restricted to survivors: the anti-join below tests fe's
+    # own rows, so an id_b outside fe, or one listed twice, removes
+    # nothing more — no semi-join on id_b and no distinct.
+    dup_b = pairs.join(
+        fe.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
+    ).select(F.col("id_b").alias("doc_id"))
+    return fe.join(dup_b, "doc_id", "left_anti")
+
+
+def _exact_dedup(kept: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens) of the lowest doc_id per content digest: one
+    aggregate whose min(struct(doc_id, n_tokens)) orders by doc_id first,
+    so it picks the same winner as min(doc_id) joined back to the rows,
+    and n_tokens, a function of the text, comes along. The shuffle
+    carries (digest, doc_id, n_tokens) and never the text; the winners'
+    rows need no second pass over the corpus."""
+    return (
+        kept.groupBy(F.md5("text").alias("digest"))
+        .agg(F.min(F.struct("doc_id", "n_tokens")).alias("w"))
+        .select("w.doc_id", "w.n_tokens")
     )
-    return fe.join(dup_b, "doc_id", "left_anti").select("doc_id", "n_tokens")
 
 
 # ---------------------------------------------------------------------------

@@ -33,12 +33,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import dedup
-from ..functions.artifacts import scan_num_rows
+from ..functions.artifacts import scan_min, scan_num_rows
 from .catalog import _fmt_doc, _t, query
 from .extensions import (
     _SHINGLE_K,
     _ngram_jaccard_oracle,
-    ensure_pagerank_graph,
+    ensure_graph_degree,
+    ensure_graph_edges,
     graph_broadcast_hint,
 )
 
@@ -161,9 +162,15 @@ def _restrict(sym: DataFrame, keep: DataFrame, _hint) -> DataFrame:
 def _kcore_degree_table(
     spark: SparkSession, sf_dir: str, k: int, peels: int
 ) -> DataFrame:
-    """Degree table of the graph after at most `peels` rounds of
-    k-peeling, stopping at the fixpoint — the shared kernel of the census
-    query and the convergence test.
+    """Degree table (src, c) of the graph after at most `peels` rounds
+    of k-peeling, stopping at the fixpoint — the shared kernel of the
+    census query and the convergence test.
+
+    A graph whose minimum degree is at least k is its own k-core: no
+    round peels a node, so the answer is the degree artifact itself.
+    That minimum is read from the min statistics in the `pr_graph_deg`
+    parquet footers (``scan_min``: no Spark job, and no edge DataFrame
+    is built). Without statistics, or below k, the graph is peeled.
 
     Keeper sets are NESTED (keep_i ⊆ keep_{i-1}: a peeled node has no
     rows in the next degree table), so round i restricts the BASE edge
@@ -180,17 +187,24 @@ def _kcore_degree_table(
     which every further round is a no-op. Each keeper's size is an
     Observation on its own checkpoint job, and round 1 compares against
     the node count of the degree artifact, read from its parquet footers
-    (``scan_num_rows``: a ``count()`` when they can't be read). So the
-    loop stops at the fixpoint and returns exactly what `peels` rounds
-    would."""
-    sym, deg = ensure_pagerank_graph(spark, sf_dir)
+    (``scan_num_rows``: a ``count()`` when they can't be read). A keeper
+    carries each node's degree c counted on sym|keep_{i-1}; at the
+    fixpoint that graph IS sym|keep_i, so the last keeper is already the
+    answer and is returned as is. Only when the cap binds is the base
+    artifact restricted once more and its degrees counted. Either way
+    the result is exactly what `peels` rounds would return."""
+    deg = ensure_graph_degree(spark, sf_dir)
+    low = scan_min(deg, "d")
+    if low is not None and low >= k:
+        return deg.select("src", F.col("d").alias("c"))
+    sym = ensure_graph_edges(spark, sf_dir)
     _hint = graph_broadcast_hint(deg)
     # r13 (optimization): degrees aggregate on DST, not src. The edge
     # artifact is symmetric (every undirected edge appears in both
     # directions) and _restrict keeps an edge only when BOTH endpoints
     # survive, so the restricted graph stays symmetric and degree-by-dst
     # == degree-by-src as a (node, count) set. The artifact is CLUSTERED
-    # by dst (ensure_pagerank_graph), so the dst-keyed partial agg
+    # by dst (ensure_graph_edges), so the dst-keyed partial agg
     # reduces each peel's exchange from |E| rows to ~|V| (guide §2.3;
     # measured 2.50 -> 1.94 s at sf0.1). Output keeps the src column
     # name — it is the node id either way.
@@ -199,14 +213,13 @@ def _kcore_degree_table(
     for _ in range(peels):
         edges = sym if keep is None else _restrict(sym, keep, _hint)
         keep, seen = dedup.checkpoint_observed(
-            edges.groupBy("dst")
+            edges.groupBy(F.col("dst").alias("node"))
             .agg(F.count("*").alias("c"))
-            .filter(F.col("c") >= k)
-            .select(F.col("dst").alias("node")),
+            .filter(F.col("c") >= k),
             n=F.count(F.lit(1)),
         )
         if seen["n"] == prev:
-            break
+            return keep.select(F.col("node").alias("src"), "c")
         prev = seen["n"]
     return _restrict(sym, keep, _hint).groupBy(
         F.col("dst").alias("src")
@@ -229,6 +242,17 @@ def graph_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORRECTNESS_NOTES.md). Output: census of the surviving subgraph by
     within-core degree.
 
+    Three plans, each the fewest jobs its input allows:
+    - the graph is already a {k}-core (minimum degree >= {k}, read from
+      the degree artifact's parquet footer statistics): the census is
+      one grouped aggregate of the degree artifact — no checkpoint, no
+      restrict, no edge scan;
+    - the peel reaches its fixpoint: the census aggregates the last
+      keeper checkpoint, which already carries every survivor's
+      within-core degree;
+    - the cap binds: the census restricts the base edges by the last
+      keeper and counts degrees, as each round does.
+
     Scale shape per round — the fourth member of the iterative-graph
     family over the SAME persisted edge artifact: one pass over the
     BASE edges restricted by the latest keeper set (two semi-joins
@@ -237,9 +261,9 @@ def graph_kcore_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree aggregation (r13: dst, not src — the edge artifact is
     clustered by dst, so the map-side partial compresses each peel's
     exchange from |E| to ~|V| rows; degree-by-dst == degree-by-src on a
-    symmetric restricted graph). The keeper is the ONLY state
-    carried between rounds — node-sized, localCheckpointed (it feeds
-    two joins); keeper nesting lets every round restrict the base
+    symmetric restricted graph). The keeper (node, degree) is the ONLY
+    state carried between rounds — node-sized, localCheckpointed (it
+    feeds two joins); keeper nesting lets every round restrict the base
     artifact directly, so the edge-sized stream is never materialized
     and never fans out (the edges-carried-forward form tripled its
     fact-sized lineage per round — a 3^{p} plan explosion, caught and

@@ -22,6 +22,7 @@ from mapreducer_pi_cs4433_spark.functions import dedup, similarity
 from mapreducer_pi_cs4433_spark.functions.artifacts import (
     artifact_dir,
     ensure_table,
+    scan_min,
     scan_num_rows,
 )
 from mapreducer_pi_cs4433_spark.plans.inspect import run_counting_jobs
@@ -54,19 +55,44 @@ from .conftest import SF_SMOKE
 @pytest.mark.parametrize(
     "name, budget",
     [
-        # one keeper checkpoint (2 jobs under AQE): sf0.001 is a 3-core
-        # already, so round 1 matches the footer node count and stops
-        ("graph_kcore_census", 2),
+        # sf0.001 is a 3-core already: the footer minimum degree says so,
+        # and no keeper is checkpointed
+        ("graph_kcore_census", 0),
         # reads the component artifact that set-up builds
         ("dedup_clusters", 0),
         ("dedup_prefix_filter", 0),
         ("dedup_keeper_selection", 0),
+        # the exact-dedup checkpoint: one aggregate (2 jobs under AQE)
+        ("pipeline_clean_corpus", 2),
     ],
 )
 def test_warm_query_function_job_budget(spark, name, budget):
     fn = QUERIES[name]
     fn(spark, SF_SMOKE)  # builds artifacts on a fresh index dir
     _, jobs = run_counting_jobs(spark, lambda: fn(spark, SF_SMOKE))
+    assert jobs <= budget
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        # one grouped aggregate of the degree artifact
+        ("graph_kcore_census", 2),
+        # one window shuffle over the component artifact
+        ("dedup_clusters", 2),
+        # the pair restriction onto the checkpoint, then the anti-join
+        ("pipeline_clean_corpus", 3),
+    ],
+)
+def test_warm_plan_execution_job_budget(spark, name, budget):
+    """The jobs of executing the returned plan (a noop write, as the
+    benchmark runs it): an added exchange or broadcast shows here."""
+    fn = QUERIES[name]
+    fn(spark, SF_SMOKE)  # builds artifacts on a fresh index dir
+    df = fn(spark, SF_SMOKE)
+    _, jobs = run_counting_jobs(
+        spark, lambda: df.write.format("noop").mode("overwrite").save()
+    )
     assert jobs <= budget
 
 
@@ -154,6 +180,23 @@ def test_scan_num_rows_reads_footers_of_a_bare_scan(spark, artifact_sf):
     )
     n, jobs = run_counting_jobs(spark, lambda: scan_num_rows(part))
     assert (n, jobs) == (50, 0)
+
+
+def test_scan_min_reads_footer_statistics(spark, artifact_sf):
+    df = ensure_table(
+        spark,
+        artifact_sf,
+        "t",
+        lambda: spark.range(3, 40).select((F.col("id") * 7 % 31).alias("v"))
+        .repartition(3),
+    )
+    low, jobs = run_counting_jobs(spark, lambda: scan_min(df, "v"))
+    assert (low, jobs) == (df.agg(F.min("v")).first()[0], 0)
+    # not a bare scan, an unknown column, an empty table: no bound
+    assert scan_min(df.filter(F.col("v") > 5), "v") is None
+    assert scan_min(df, "w") is None
+    empty = ensure_table(spark, artifact_sf, "e", lambda: spark.range(0))
+    assert scan_min(empty, "id") is None
 
 
 def test_rebuilt_artifact_serves_new_schema(spark, artifact_sf):

@@ -1012,6 +1012,8 @@ def test_graph_broadcast_gate_modes(spark, monkeypatch):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
+        # k-core joins in its live plan only when it ends on the cap
+        _kcore_peeling(spark, monkeypatch, peels=1)
         for name in (
             "graph_label_propagation",
             "graph_pagerank_suppliers",
@@ -1047,19 +1049,50 @@ def test_prefix_filter_artifact_backed_no_cartesian(spark):
     assert count_exchanges(df) <= 10
 
 
-def test_kcore_linear_plan_and_checkpointed_keepers(spark):
-    """The k-core census's LIVE plan must be the final restrict+census
-    only — the peeling rounds ran eagerly into node-sized checkpoints
-    (keeper nesting restricts the BASE artifact each round). Pins the
-    fix for the 3^peels lineage explosion the edges-carried-forward
-    unroll produced (730 exchanges at 6 peels): the live plan is 2
-    exchanges, 2 size-gated semi-joins, bounded node count."""
-    import re
+def _kcore_peeling(spark, monkeypatch, peels):
+    """Make graph_kcore_census peel the smoke graph, which is already a
+    3-core: k one above its minimum degree, at most `peels` rounds. The
+    smoke graph then loses nodes in round 1 and reaches its fixpoint in
+    round 2, so one round ends on the cap and two end on the fixpoint."""
+    from mapreducer_pi_cs4433_spark.functions.artifacts import scan_min
+    from mapreducer_pi_cs4433_spark.queries import mining
+    from mapreducer_pi_cs4433_spark.queries.extensions import ensure_graph_degree
 
+    low = scan_min(ensure_graph_degree(spark, SF_SMOKE), "d")
+    monkeypatch.setattr(mining, "_KCORE_K", low + 1)
+    monkeypatch.setattr(mining, "_KCORE_PEELS", peels)
+
+
+def test_kcore_linear_plan_and_checkpointed_keepers(spark, monkeypatch):
+    """The k-core census's LIVE plan, in each of its three forms:
+    - already a k-core (the smoke graph at k=3): one aggregate of the
+      degree artifact, 1 exchange and no join;
+    - peeled to the fixpoint: one aggregate of the last keeper, 1
+      exchange and no join;
+    - peeled until the cap binds: the final restrict+census only — the
+      peeling rounds ran eagerly into node-sized checkpoints (keeper
+      nesting restricts the BASE artifact each round). This pins the fix
+      for the 3^peels lineage explosion the edges-carried-forward unroll
+      produced (730 exchanges at 6 peels): 2 exchanges, 2 size-gated
+      semi-joins, bounded node count."""
+    df = QUERIES["graph_kcore_census"](spark, SF_SMOKE)
+    plan = formatted_plan(df)
+    assert count_exchanges(df) == 1
+    assert "Join" not in plan and "pr_graph_sym" not in plan
+
+    _kcore_peeling(spark, monkeypatch, peels=2)
+    df = QUERIES["graph_kcore_census"](spark, SF_SMOKE)
+    plan = formatted_plan(df)
+    assert count_exchanges(df) == 1
+    assert "Join" not in plan and "pr_graph_sym" not in plan
+
+    _kcore_peeling(spark, monkeypatch, peels=1)
     df = QUERIES["graph_kcore_census"](spark, SF_SMOKE)
     plan = formatted_plan(df)
     assert count_exchanges(df) == 2
     assert has_broadcast_join(df)  # default gate mode at smoke scale
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 2
+    assert plan.count("LeftSemi") >= 2
     for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "Window ("):
         assert node not in plan
     # plan-size regression guard: the exploded form printed ~1500 nodes

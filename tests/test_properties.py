@@ -1757,12 +1757,16 @@ def _kcore_chain(n):
         (_kcore_chain(8), [15, 14, 13, 12, 11, 10]),
         # a star dissolves: the last two keepers are empty checkpoints
         ([(1, 1), (1, 2), (1, 3)], [1, 0, 0]),
+        # K(4,4) is its own 3-core: the footer minimum degree (4) says
+        # so, and no keeper is checkpointed
+        ([(p, q) for p in range(1, 5) for q in range(1, 5)], []),
     ],
-    ids=["cascade", "cap_binds", "dissolves"],
+    ids=["cascade", "cap_binds", "dissolves", "already_core"],
 )
 def test_kcore_stops_at_fixpoint(spark, monkeypatch, rows, sizes):
     """The peel loop stops when a keeper is as large as the one before
-    it (round 1 against the footer node count) and never before: each
+    it (round 1 against the footer node count) and never before, and
+    does not start on a graph whose minimum degree is already k: each
     round's keeper size, read from the Observation on its checkpoint, is
     recorded, and the census still equals the fixed-round Python peel."""
     from mapreducer_pi_cs4433_spark.functions import dedup
@@ -1780,6 +1784,43 @@ def test_kcore_stops_at_fixpoint(spark, monkeypatch, rows, sizes):
     monkeypatch.setattr(dedup, "checkpoint_observed", recording)
     assert _kcore_census(spark, rows) == _kcore_census_ref(rows, _KCORE_PEELS)
     assert seen_sizes == sizes
+
+
+# doc_id -> text: unique ids, texts drawn from a small pool so the same
+# text recurs under different ids (token counts differ between texts)
+_dedup_docs = st.dictionaries(
+    st.integers(min_value=0, max_value=300),
+    st.sampled_from(["a b", "a  b", "b a", "c", "the cat sat", ""]),
+    min_size=1,
+    max_size=30,
+)
+
+
+@settings(deadline=None, max_examples=10, suppress_health_check=list(HealthCheck))
+@given(docs=_dedup_docs)
+def test_prop_exact_dedup_aggregate_equals_semi_join(spark, docs):
+    """pipeline_clean_corpus's exact dedup, one min(struct(doc_id,
+    n_tokens)) aggregate per md5(text), keeps the same (doc_id, n_tokens)
+    rows as the min(doc_id) winners joined back by a left-semi join, and
+    as a Python first-id-per-text reference."""
+    from pyspark.sql import functions as F
+
+    from mapreducer_pi_cs4433_spark.queries.extensions import _exact_dedup
+
+    kept = spark.createDataFrame(
+        [(i, t, len(t.split())) for i, t in docs.items()],
+        "doc_id long, text string, n_tokens long",
+    )
+    winners = kept.groupBy(F.md5("text").alias("digest")).agg(
+        F.min("doc_id").alias("doc_id")
+    )
+    semi = kept.join(winners.select("doc_id"), "doc_id", "left_semi")
+    got = sorted(tuple(r) for r in _exact_dedup(kept).collect())
+    assert got == sorted(tuple(r) for r in semi.select("doc_id", "n_tokens").collect())
+    first = {}
+    for i, t in sorted(docs.items()):
+        first.setdefault(t, (i, len(t.split())))
+    assert got == sorted(first.values())
 
 
 _pmi_docs = st.lists(

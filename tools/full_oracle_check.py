@@ -5,7 +5,10 @@ registration order).
 Writes CORRECTNESS_FULL_r{N}.json next to the repo root: one row per
 catalog query with rows/schema/value-hash status against the DuckDB oracle
 at sf0.01 — the committed evidence for queries the driver's 50-entry
-window can't reach. Run:
+window can't reach. Each row also carries `value_hash`, a sha256 of the
+Spark output's sorted column names and canonical rows (the rows the
+oracle comparison sorts and stringifies), so the files of two trees can
+be diffed query by query, the queries without an oracle included. Run:
 
     python tools/full_oracle_check.py [--sf-dir /root/testdata/sf0.01] \
         [--out CORRECTNESS_FULL_r03.json]
@@ -14,6 +17,7 @@ window can't reach. Run:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import os
@@ -84,6 +88,12 @@ def _canon(rows, cols):
     return out
 
 
+def _value_hash(cols, canon_rows) -> str:
+    return hashlib.sha256(
+        json.dumps([sorted(cols), canon_rows]).encode()
+    ).hexdigest()
+
+
 def _default_out() -> str:
     """Derive the current round from the driver's committed
     CORRECTNESS_r{N}.json artifacts so a no-arg run can never clobber a
@@ -142,6 +152,7 @@ def main() -> None:
             "rows_match": None,
             "schema_match": None,
             "hash_match": None,
+            "value_hash": None,
             "spark_rows": None,
             "oracle_rows": None,
             "err": None,
@@ -150,6 +161,8 @@ def main() -> None:
             sdf = fn(spark, args.sf_dir)
             s_rows = [tuple(r) for r in sdf.collect()]
             row["spark_rows"] = len(s_rows)
+            s_canon = _canon(s_rows, sdf.columns)
+            row["value_hash"] = _value_hash(sdf.columns, s_canon)
             if name not in ORACLE:
                 row["err"] = "no_oracle"
             else:
@@ -166,9 +179,7 @@ def main() -> None:
                 row["oracle_rows"] = len(d_rows)
                 row["rows_match"] = len(s_rows) == len(d_rows)
                 row["schema_match"] = sorted(sdf.columns) == sorted(rel.columns)
-                row["hash_match"] = _canon(s_rows, sdf.columns) == _canon(
-                    d_rows, list(rel.columns)
-                )
+                row["hash_match"] = s_canon == _canon(d_rows, list(rel.columns))
                 if not all(
                     (row["rows_match"], row["schema_match"], row["hash_match"])
                 ):

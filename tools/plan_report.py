@@ -91,7 +91,7 @@ _SHOWCASE = [
     ("events_time_to_conversion", "forward as-of: running-min purchase window, joinless, census on top"),
     # round 8: exactness & structure mining band
     ("dedup_prefix_filter", "AllPairs prefix filter: persisted rare-first index, lossless pruned equi-join"),
-    ("graph_kcore_census", "k-core peel: node-sized checkpointed keepers, 2-exchange live plan, size-gated joins"),
+    ("graph_kcore_census", "k-core: footer min-degree short-circuit (1-exchange census of the degree artifact), else node-sized checkpointed keepers, size-gated joins"),
     ("text_collocation_pmi", "PMI collocations: one lead() window, integer lift, TakeOrdered top-K"),
     # round 9: the registered skew remedies + the DPP layout + linear attribution
     ("skew_salted_segment_value", "salted join + two-phase salted agg: hot keys spread over salt buckets, oracle proves salt-invariance"),
