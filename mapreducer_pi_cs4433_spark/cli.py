@@ -22,7 +22,14 @@ import sys
 
 from pyspark.sql import DataFrame
 
+from .functions import dedup as fdedup
+from .functions import hnsw as fhnsw
+from .functions import similarity as fsim
+from .functions.artifacts import scan_num_rows
 from .operators import social
+from .queries import extensions as qext
+from .queries import sketches as qsk
+from .queries.catalog import QUERIES
 from .session import get_spark
 from .sources import loaders
 
@@ -42,200 +49,116 @@ def _write(df: DataFrame, out: str, single_file: bool, output_format: str) -> No
         sinks.write_tsv(df, out)
 
 
+def _docs(spark, sf_dir: str) -> DataFrame:
+    return loaders.load_table(spark, sf_dir, "documents")
+
+
+def _emb(spark, sf_dir: str) -> DataFrame:
+    return loaders.load_table(spark, sf_dir, "embeddings")
+
+
+# The corpus BUILD step, one entry per --kinds name, in build order ("all"
+# runs every entry). Each step returns the (label, table) pairs it built.
+# Canonical build params come FROM the catalog queries (the artifact
+# consumers), so the ops build step and the query path always resolve to
+# the same artifact keys; pinned by tests/test_extensions.py::
+# test_build_index_prebuilds_exactly_what_queries_consume.
+_INDEX_STEPS = {
+    "minhash": lambda s, d: [
+        ("minhash", fdedup.ensure_minhash_signatures(s, _docs(s, d), d, k=qext._SHINGLE_K))
+    ],
+    "postings": lambda s, d: [
+        ("postings", fdedup.ensure_postings(s, _docs(s, d), d, k=qext._SHINGLE_K))
+    ],
+    "posshingle": lambda s, d: [
+        ("posshingle", fdedup.ensure_positional_shingles(s, _docs(s, d), d, k=qext._SPAN_K))
+    ],
+    "pairs": lambda s, d: [
+        ("pairs", fdedup.ensure_neardup_pairs(s, _docs(s, d), d, k=qext._SHINGLE_K))
+    ],
+    "components": lambda s, d: [
+        ("components", fdedup.ensure_neardup_components(s, _docs(s, d), d, k=qext._SHINGLE_K))
+    ],
+    "ivf": lambda s, d: [
+        ("ivf", fsim.ensure_ivf_index(s, _emb(s, d), d, planes=qext._IVF_PLANES))
+    ],
+    "pq": lambda s, d: [
+        (
+            "pq",
+            fsim.ensure_pq_artifacts(
+                s, _emb(s, d), d, m=qext._PQ_M, k=qext._PQ_CODE_K, sample_rows=qext._PQ_SAMPLE
+            )[1],
+        )
+    ],
+    "ivfpq": lambda s, d: [
+        (
+            "ivfpq",
+            fsim.ensure_ivfpq_codes(
+                s, _emb(s, d), d,
+                m=qext._PQ_M, k=qext._PQ_CODE_K, sample_rows=qext._PQ_SAMPLE,
+                planes=qext._IVF_PLANES,
+            ),
+        )
+    ],
+    # the assignment, and the k*d centroid 'model' the streaming assigner
+    # broadcasts (streaming/enrich.py)
+    "semantic": lambda s, d: [
+        ("semantic", fsim.ensure_kmeans_assignment(s, _emb(s, d), d, k=qext._KMEANS_K)),
+        ("semantic_cent", fsim.ensure_kmeans_centroids(s, _emb(s, d), d, k=qext._KMEANS_K)),
+    ],
+    "hnsw": lambda s, d: [("hnsw", fhnsw.ensure_hnsw_index(s, _emb(s, d), d, n_shards=4))],
+    # the edge list and degree table every iterative graph query reads
+    "graph": lambda s, d: [
+        ("graph", qext.ensure_graph_edges(s, d)),
+        ("graph_deg", qext.ensure_graph_degree(s, d)),
+    ],
+    # the supplier support-pair table (graph_triangle_count) and the
+    # (order, brand) basket table (basket_brand_pairs)
+    "cooccur": lambda s, d: [
+        ("cooccur_supp", qext.ensure_cooccur_supp_support(s, d)),
+        ("basket_ob", qext.ensure_basket_order_brand(s, d)),
+    ],
+    # the decontamination pair list; the query entry reads this table
+    "decontam": lambda s, d: [("decontam", qext.decontaminate_training_set(s, d))],
+    # the sketch cell and snapshot tables the sketch queries read
+    "hll_cells": lambda s, d: [("hll_cells", qsk._hll_day_cells(s, d))],
+    "kll_cells": lambda s, d: [("kll_cells", qsk._kll_day_cells(s, d))],
+    "kmv_years": lambda s, d: [("kmv_years", qsk._kmv_year_samples(s, d))],
+    "hll_years": lambda s, d: [("hll_years", qsk._hll_year_regs(s, d))],
+    # running these query functions builds their layout artifacts (the
+    # DPP year-partitioned fact and the two schema_evo generations)
+    "layout": lambda s, d: [
+        ("layout_dpp", QUERIES["layout_partition_pruned_rollup"](s, d)),
+        ("schema_evo", QUERIES["source_schema_evolution"](s, d)),
+    ],
+}
+
+
 def _build_index(spark, sf_dir: str, kinds_csv: str) -> int:
     """Run the corpus BUILD step: materialize every shared artifact table
-    once so interactive/query runs are pure readers. This is the ops
-    surface of the build-once/reuse lifecycle in functions/artifacts.py —
-    at 100 TB these builds are scheduled jobs that run on corpus ingest,
-    not work any query should repeat."""
-    from .functions import dedup as fdedup
-    from .functions import similarity as fsim
-    from .functions.artifacts import scan_num_rows
-
-    # Canonical build params come FROM the catalog queries (the artifact
-    # consumers), so the ops build step and the query path always resolve
-    # to the same artifact keys. Pre-r5 this function used the ensure_*
-    # defaults (minhash/postings/pairs/components k=5, IVF planes=8) while
-    # the catalog consumes k=12 / planes=4 — build-index produced indexes
-    # no query ever read, and every "pure reader" query run still paid a
-    # cold build. Pinned by tests/test_extensions.py::
-    # test_build_index_prebuilds_exactly_what_queries_consume.
-    from .queries.extensions import (
-        _IVF_PLANES,
-        _PQ_CODE_K,
-        _PQ_M,
-        _PQ_SAMPLE,
-        _SHINGLE_K,
-        _SPAN_K,
-    )
-
-    kinds = (
-        {
-            "minhash",
-            "postings",
-            "posshingle",
-            "pairs",
-            "components",
-            "ivf",
-            "pq",
-            "ivfpq",
-            "semantic",
-            "hnsw",
-            "graph",
-            "cooccur",
-            "decontam",
-            "hll_cells",
-            "kll_cells",
-            "kmv_years",
-            "hll_years",
-            "layout",
-        }
-        if kinds_csv == "all"
-        else {k.strip() for k in kinds_csv.split(",") if k.strip()}
-    )
-    docs = loaders.load_table(spark, sf_dir, "documents")
-    built: list[tuple[str, DataFrame]] = []
-    if "minhash" in kinds:
-        built.append(
-            ("minhash", fdedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K))
+    of the named kinds (comma list, or "all") once so interactive/query
+    runs are pure readers. This is the ops surface of the build-once/reuse
+    lifecycle in functions/artifacts.py — at 100 TB these builds are
+    scheduled jobs that run on corpus ingest, not work any query should
+    repeat. An unknown kind builds nothing and returns 2."""
+    if kinds_csv == "all":
+        kinds = set(_INDEX_STEPS)
+    else:
+        kinds = {k.strip() for k in kinds_csv.split(",") if k.strip()}
+    unknown = sorted(kinds - _INDEX_STEPS.keys())
+    if unknown:
+        print(
+            f"build-index: unknown kind(s) {', '.join(unknown)}; valid kinds: "
+            f"all, {', '.join(_INDEX_STEPS)}",
+            file=sys.stderr,
         )
-    if "postings" in kinds:
-        built.append(("postings", fdedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K)))
-    if "posshingle" in kinds:
-        built.append(
-            (
-                "posshingle",
-                fdedup.ensure_positional_shingles(spark, docs, sf_dir, k=_SPAN_K),
-            )
-        )
-    if "pairs" in kinds:
-        built.append(
-            ("pairs", fdedup.ensure_neardup_pairs(spark, docs, sf_dir, k=_SHINGLE_K))
-        )
-    if "components" in kinds:
-        built.append(
-            ("components", fdedup.ensure_neardup_components(spark, docs, sf_dir, k=_SHINGLE_K))
-        )
-    if kinds & {"ivf", "pq", "ivfpq", "semantic", "hnsw"}:
-        emb = loaders.load_table(spark, sf_dir, "embeddings")
-        if "ivf" in kinds:
-            built.append(("ivf", fsim.ensure_ivf_index(spark, emb, sf_dir, planes=_IVF_PLANES)))
-        if "pq" in kinds:
-            _, codes = fsim.ensure_pq_artifacts(
-                spark, emb, sf_dir, m=_PQ_M, k=_PQ_CODE_K, sample_rows=_PQ_SAMPLE
-            )
-            built.append(("pq", codes))
-        if "ivfpq" in kinds:
-            built.append(
-                (
-                    "ivfpq",
-                    fsim.ensure_ivfpq_codes(
-                        spark, emb, sf_dir,
-                        m=_PQ_M, k=_PQ_CODE_K, sample_rows=_PQ_SAMPLE,
-                        planes=_IVF_PLANES,
-                    ),
-                )
-            )
-        if "semantic" in kinds:
-            from .queries.extensions import _KMEANS_K
-
-            built.append(
-                (
-                    "semantic",
-                    fsim.ensure_kmeans_assignment(
-                        spark, emb, sf_dir, k=_KMEANS_K
-                    ),
-                )
-            )
-            # the k*d centroid 'model' the streaming assigner broadcasts
-            # (streaming/enrich.py) — tiny, built alongside the assignment
-            built.append(
-                (
-                    "semantic_cent",
-                    fsim.ensure_kmeans_centroids(
-                        spark, emb, sf_dir, k=_KMEANS_K
-                    ),
-                )
-            )
-        if "hnsw" in kinds:
-            from .functions import hnsw as fhnsw
-
-            built.append(
-                (
-                    "hnsw",
-                    fhnsw.ensure_hnsw_index(spark, emb, sf_dir, n_shards=4),
-                )
-            )
-    if "graph" in kinds:
-        from .queries.extensions import ensure_pagerank_graph
-
-        sym, _deg = ensure_pagerank_graph(spark, sf_dir)
-        built.append(("graph", sym))
-    if "cooccur" in kinds:
-        # co-occurrence build outputs: the supplier support-pair table
-        # (graph_triangle_count) and the (order, brand) basket table
-        # (basket_brand_pairs) — both read their artifact at query time
-        from .queries.extensions import (
-            ensure_basket_order_brand,
-            ensure_cooccur_supp_support,
-        )
-
-        built.append(
-            ("cooccur_supp", ensure_cooccur_supp_support(spark, sf_dir))
-        )
-        built.append(
-            ("basket_ob", ensure_basket_order_brand(spark, sf_dir))
-        )
-    if "decontam" in kinds:
-        # the per-benchmark-release decontamination pair list; the query
-        # entry reads this table (the LSH+verify pipeline is its builder)
-        from .queries.extensions import decontaminate_training_set
-
-        built.append(
-            (
-                "decontam",
-                decontaminate_training_set(spark, sf_dir),
-            )
-        )
-    if "hll_cells" in kinds:
-        # the shared HLL day-cell register table (r10 migration) read by
-        # events_distinct_hll_rollup and events_distinct_hll_sliding
-        from .queries.sketches import _hll_day_cells
-
-        built.append(("hll_cells", _hll_day_cells(spark, sf_dir)))
-    if "kll_cells" in kinds:
-        # the per-(type, day) KLL cell item table (r11 migration) read
-        # by events_quantile_rollup_kll
-        from .queries.sketches import _kll_day_cells
-
-        built.append(("kll_cells", _kll_day_cells(spark, sf_dir)))
-    if "kmv_years" in kinds:
-        # the per-year KMV k-min samples (r11) read by the KMV
-        # set-difference pair (orders_kmv_set_difference /
-        # orders_kmv_diff_from_snapshots)
-        from .queries.sketches import _kmv_year_samples
-
-        built.append(("kmv_years", _kmv_year_samples(spark, sf_dir)))
-    if "hll_years" in kinds:
-        # the per-year HLL register snapshots (r11) read by the HLL
-        # set-algebra pair (orders_hll_set_algebra /
-        # orders_hll_union_from_snapshots)
-        from .queries.sketches import _hll_year_regs
-
-        built.append(("hll_years", _hll_year_regs(spark, sf_dir)))
-    if "layout" in kinds:
-        # the partitioned/evolved layout artifacts: running the query
-        # functions triggers their ensure_table builds (the returned
-        # plans are readers over them) — the DPP year-partitioned fact
-        # and the two schema_evo generations
-        from .queries.catalog import QUERIES as _Q
-
-        built.append(
-            ("layout_dpp", _Q["layout_partition_pruned_rollup"](spark, sf_dir))
-        )
-        built.append(
-            ("schema_evo", _Q["source_schema_evolution"](spark, sf_dir))
-        )
+        return 2
+    built = [
+        pair
+        for kind, step in _INDEX_STEPS.items()
+        if kind in kinds
+        for pair in step(spark, sf_dir)
+    ]
     for kind, df in built:
         print(f"build-index: {kind} ready ({scan_num_rows(df)} rows)")
     return 0
@@ -295,8 +218,7 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument(
         "--kinds",
         default="all",
-        help="comma list from: minhash,postings,posshingle,pairs,components,"
-        "ivf,pq,graph (default: all)",
+        help=f"comma list from: {', '.join(_INDEX_STEPS)} (default: all)",
     )
 
     sp = sub.add_parser(
@@ -344,8 +266,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.task == "query" and args.name == "list":
         # no session needed to enumerate — keep `query list` instant
-        from .queries.catalog import QUERIES
-
         for name in QUERIES:
             print(name)
         return 0
@@ -365,15 +285,13 @@ def main(argv: list[str] | None = None) -> int:
         if args.task == "sql":
             loaders.register_views(spark, args.sf_dir)
             df = spark.sql(args.statement)
+        elif args.name not in QUERIES:
+            print(
+                f"query: unknown name {args.name!r} (try 'query list')",
+                file=sys.stderr,
+            )
+            return 2
         else:
-            from .queries.catalog import QUERIES
-
-            if args.name not in QUERIES:
-                print(
-                    f"query: unknown name {args.name!r} (try 'query list')",
-                    file=sys.stderr,
-                )
-                return 2
             df = QUERIES[args.name](spark, args.sf_dir)
         if args.out:
             _write(df, args.out, args.single_file, args.output_format)

@@ -55,9 +55,7 @@ def md5_hash64(col: str | Column) -> Column:
     ).cast("long")
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """One representative (minimum id) per distinct content digest.
 
     Grouping on md5(text) rather than the raw text keeps shuffle rows at
@@ -67,7 +65,7 @@ def exact_dedup(
     """
     return (
         df.select(
-            F.md5(F.col(text_col)).alias("digest"), F.col(id_col).alias("_id")
+            F.md5(F.col("text")).alias("digest"), F.col("doc_id").alias("_id")
         )
         .groupBy("digest")
         .agg(
@@ -92,8 +90,6 @@ def _hashed_postings(
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
     threshold: float = 0.5,
 ) -> DataFrame:
@@ -116,7 +112,7 @@ def ngram_jaccard_pairs(
     sf0.01, caching was ~5% *slower* (InMemoryRelation breaks codegen
     fusion) and leaked storage across invocations (round-1 finding).
     """
-    posting = _hashed_postings(df, text_col, id_col, k)
+    posting = _hashed_postings(df, "text", "doc_id", k)
     sizes = posting.groupBy("id").agg(F.count("*").alias("n_sh"))
     a = posting.select(F.col("h"), F.col("id").alias("id_a"))
     b = posting.select(F.col("h").alias("h_b"), F.col("id").alias("id_b"))
@@ -242,8 +238,6 @@ def ensure_prefix_index(
     spark,
     df: DataFrame,
     sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
     threshold: float = 0.5,
     posting: DataFrame | None = None,
@@ -263,7 +257,7 @@ def ensure_prefix_index(
         lambda: _prefix_index(
             posting
             if posting is not None
-            else ensure_postings(spark, df, sf_dir, text_col, id_col, k),
+            else ensure_postings(spark, df, sf_dir, k=k),
             threshold,
         ),
     )
@@ -271,8 +265,6 @@ def ensure_prefix_index(
 
 def prefix_filter_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
     threshold: float = 0.5,
     posting: DataFrame | None = None,
@@ -315,7 +307,7 @@ def prefix_filter_jaccard_pairs(
     artifacts.
     """
     if posting is None:
-        posting = _hashed_postings(df, text_col, id_col, k)
+        posting = _hashed_postings(df, "text", "doc_id", k)
     if prefix is None:
         prefix = _prefix_index(posting, threshold)
     ranked = prefix
@@ -417,8 +409,6 @@ def _banded_keys(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
 def cross_containment_pairs(
     left: DataFrame,
     right: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
     threshold: float = 0.5,
     num_perm: int = 64,
@@ -457,9 +447,9 @@ def cross_containment_pairs(
     """
     rows_per_band = num_perm // bands
     if sigs_left is None:
-        sigs_left = minhash_signatures(left, text_col, id_col, k, num_perm)
+        sigs_left = minhash_signatures(left, k=k, num_perm=num_perm)
     if sigs_right is None:
-        sigs_right = minhash_signatures(right, text_col, id_col, k, num_perm)
+        sigs_right = minhash_signatures(right, k=k, num_perm=num_perm)
     lb = _banded_keys(sigs_left, bands, rows_per_band).select(
         "band", "bkey", F.col("id").alias("id_l")
     )
@@ -495,12 +485,12 @@ def cross_containment_pairs(
     pl = (
         posting_left
         if posting_left is not None
-        else _hashed_postings(left, text_col, id_col, k)
+        else _hashed_postings(left, "text", "doc_id", k)
     )
     pr = (
         posting_right
         if posting_right is not None
-        else _hashed_postings(right, text_col, id_col, k)
+        else _hashed_postings(right, "text", "doc_id", k)
     )
     sz = pl.groupBy("id").agg(F.count("*").alias("n_l"))
     inter = (
@@ -749,11 +739,14 @@ def checkpoint_observed(
     return observed.localCheckpoint(eager=True), obs.get
 
 
+# superstep cap for connected_components; near-dup graphs converge in 2-3
+_CC_MAX_SUPERSTEPS = 25
+
+
 def connected_components(
     edges: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected edge list by iterative
     min-label propagation: comp(v) <- min(comp(v), min over neighbors u of
@@ -770,13 +763,13 @@ def connected_components(
     iteration (without truncation the fixpoint loop re-executes every
     prior superstep and analysis cost grows quadratically). Convergence
     needs O(diameter) supersteps; near-dup graphs are overwhelmingly
-    pairs/stars (diameter 1-2), so 2-3 supersteps in practice. For
-    adversarial long-chain graphs use connected_components_star (the
-    O(log n)-round alternating-star contraction, implemented below);
-    propagation is the catalog default because a superstep is cheaper
-    than a star round (one shuffle join and one grouped MIN against two
-    of each plus a distinct), which wins whenever the diameter is small —
-    the near-dup regime.
+    pairs/stars (diameter 1-2), so 2-3 supersteps in practice; the loop
+    stops after _CC_MAX_SUPERSTEPS. Adversarial long chains would want an
+    O(log n)-round alternating large-star/small-star contraction (Kiveris
+    et al.), but a superstep (one shuffle join and one grouped MIN) is
+    cheaper than a star round (two of each plus a distinct), which wins
+    whenever the diameter is small — the near-dup regime. A node whose
+    only edge is a self-loop keeps its own id as its label.
 
     This is deliberately an iterative driver-side loop — the one operator
     family (transitive closure) that a single declarative plan cannot
@@ -802,7 +795,7 @@ def connected_components(
         ),
         changed=F.count(F.when(F.col("comp") < F.col("id"), 1)),
     )
-    for _ in range(max_iter - 1):
+    for _ in range(_CC_MAX_SUPERSTEPS - 1):
         if seen["changed"] == 0:
             break
         nbr_min = (
@@ -829,103 +822,8 @@ def connected_components(
     return labels
 
 
-def connected_components_star(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"): converges in O(log n) rounds on ANY graph — including the
-    long-chain adversarial cases where per-step min-label propagation
-    (connected_components) needs O(diameter) rounds.
-
-    Per round, with m(u) = min of u's closed neighborhood:
-      large-star: for every edge (u, v) with v > u, rewire to (v, m(u));
-      small-star: direct every edge large->small, group by the large end,
-        rewire each smaller neighbor (and u itself) to (?, m(u)).
-    Both operations preserve connectivity and strictly flatten the graph
-    toward stars rooted at component minima; at the fixed point every edge
-    is (member, root). Each operation is one shuffle (groupBy the pivot
-    node) plus a broadcast-size min table; the edge set is checkpointed per
-    round to truncate lineage, and convergence is an exact edge-set
-    equality check: the edge counts (Observations on the checkpoints, no
-    job of their own) and, only when they agree, one left_anti count.
-    Returns (id, comp) like connected_components — equality between the
-    two algorithms is property-tested against a classical union-find.
-    """
-    e, seen = checkpoint_observed(
-        edges.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("s"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .filter(F.col("s") != F.col("b"))
-        .distinct(),
-        n=F.count(F.lit(1)),
-    )  # canonical undirected edges (s < b)
-    n_e = seen["n"]
-
-    def _canon(df: DataFrame) -> DataFrame:
-        return (
-            df.select(
-                F.least(F.col("x"), F.col("y")).alias("s"),
-                F.greatest(F.col("x"), F.col("y")).alias("b"),
-            )
-            .filter(F.col("s") != F.col("b"))
-            .distinct()
-        )
-
-    for _ in range(max_iter):
-        # ---- large-star ---------------------------------------------------
-        sym = e.select(F.col("s").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("s").alias("v"))
-        )
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = _canon(
-            sym.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("x"), F.col("m").alias("y"))
-        )
-        # ---- small-star ---------------------------------------------------
-        directed = large.select(
-            F.col("b").alias("u"), F.col("s").alias("v")
-        )  # large -> small
-        m2 = directed.groupBy("u").agg(F.min("v").alias("m"))
-        small = _canon(
-            directed.join(m2, "u")
-            .select(F.col("v").alias("x"), F.col("m").alias("y"))
-            .unionByName(
-                m2.select(F.col("u").alias("x"), F.col("m").alias("y"))
-            )
-        )
-        new_e, seen = checkpoint_observed(small, n=F.count(F.lit(1)))
-        n_new = seen["n"]
-        changed = (
-            new_e.join(e, ["s", "b"], "left_anti").count()
-            if n_new == n_e
-            else 1
-        )
-        e, n_e = new_e, n_new
-        if changed == 0:
-            break
-    # fixed point: every edge is (root=s, member=b); roots label themselves
-    members = e.select(F.col("b").alias("id"), F.col("s").alias("comp"))
-    roots = (
-        e.select(F.col("s").alias("id"))
-        .distinct()
-        .join(members.select("id"), "id", "left_anti")
-        .select("id", F.col("id").alias("comp"))
-    )
-    return members.unionByName(roots)
-
-
 def simhash64(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 5,
 ) -> DataFrame:
     """64-bit SimHash per document: sign-sum of shingle hash bits.
@@ -944,7 +842,7 @@ def simhash64(
     DuckDB reproduces bit for bit, so the catalog entry is hash-checked.
 
     Returns (id, simhash)."""
-    sh = exploded_shingles(df, text_col, id_col, k)
+    sh = exploded_shingles(df, "text", "doc_id", k)
     posting = sh.select("id", md5_hash64("shingle").alias("h"))
     # r12 (optimization): TWO bit-votes per SUM, packed in 32-bit lanes.
     # The 64 independent `sum((h >> b) & 1)` aggregates were the
@@ -984,11 +882,8 @@ def simhash64(
 
 def embedding_neardup_pairs(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     threshold: float = 0.95,
     planes: int | str = 8,
-    target_bucket_rows: int = 4096,
     bucketings: int = 1,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine >= threshold.
@@ -1019,12 +914,12 @@ def embedding_neardup_pairs(
     from .similarity import auto_planes, pair_dot, sign_bucket, unit_vector
 
     if planes == "auto":
-        planes = auto_planes(df.count(), target_bucket_rows)
+        planes = auto_planes(df.count())
     if bucketings == 1:
         vecs = df.select(
-            F.col(id_col).alias("id"),
-            unit_vector(vec_col).alias("u"),
-            sign_bucket(vec_col, planes).alias("bucket"),
+            F.col("vec_id").alias("id"),
+            unit_vector("embedding").alias("u"),
+            sign_bucket("embedding", planes).alias("bucket"),
         )
         a = vecs.select("bucket", F.col("id").alias("id_a"), F.col("u").alias("u_a"))
         b_ = vecs.select(
@@ -1040,7 +935,7 @@ def embedding_neardup_pairs(
         )
     # multi-draw: thin candidate pairs per draw, distinct across draws,
     # then one join-back for the unit vectors and one scoring pass
-    ids = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
+    ids = df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("__v"))
     cand = None
     for r in range(bucketings):
         br = ids.select("id", sign_bucket("__v", planes, draw=r).alias("bk"))
@@ -1051,7 +946,7 @@ def embedding_neardup_pairs(
         ).select("id_a", "id_b")
         cand = pairs_r if cand is None else cand.unionByName(pairs_r)
     cand = cand.distinct()
-    units = df.select(F.col(id_col).alias("id"), unit_vector(vec_col).alias("u"))
+    units = df.select(F.col("vec_id").alias("id"), unit_vector("embedding").alias("u"))
     ua = units.select(F.col("id").alias("id_a"), F.col("u").alias("u_a"))
     ub = units.select(F.col("id").alias("id_b"), F.col("u").alias("u_b"))
     return (
@@ -1113,8 +1008,6 @@ def ensure_positional_shingles(
     spark,
     df: DataFrame,
     sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
 ) -> DataFrame:
     """Persisted positional shingle table (_id, pos, h) — the substring-
@@ -1130,7 +1023,7 @@ def ensure_positional_shingles(
         spark,
         sf_dir,
         f"posshingle_k{k}",
-        lambda: _positional_token_shingles(df, text_col, id_col, k),
+        lambda: _positional_token_shingles(df, "text", "doc_id", k),
     )
 
 

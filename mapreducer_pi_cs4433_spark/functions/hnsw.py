@@ -66,6 +66,8 @@ _cloudpickle.register_pickle_by_value(sys.modules[__name__])
 # while the 64-dim test corpora stay >=0.9 recall at ef_search=96.
 _M = 16
 _EF_CONSTRUCTION = 64
+# shard size when neither n_shards nor a caller's target sets it
+_TARGET_SHARD_ROWS = 4096
 
 INDEX_SCHEMA = StructType(
     [
@@ -90,12 +92,12 @@ SEARCH_SCHEMA = StructType(
 )
 
 
-def _node_level(node_id: int, m: int = _M) -> int:
+def _node_level(node_id: int) -> int:
     """Deterministic HNSW level: the standard floor(-ln(u)/ln(M)) draw with
     u derived from md5(id) — no RNG, so rebuilds are byte-identical."""
     h = hashlib.md5(str(int(node_id)).encode()).digest()
     u = (int.from_bytes(h[:8], "big") + 1) / float(1 << 64)  # u in (0, 1]
-    return int(-math.log(u) / math.log(m))
+    return int(-math.log(u) / math.log(_M))
 
 
 def _normalize(x: np.ndarray) -> np.ndarray:
@@ -145,15 +147,13 @@ def _search_layer(
     return sorted((-nd, n) for nd, n in best)
 
 
-def _build_shard_graph(
-    ids: np.ndarray, x: np.ndarray, m: int = _M, ef_construction: int = _EF_CONSTRUCTION
-) -> tuple[list[int], list[list[list[int]]]]:
+def _build_shard_graph(ids: np.ndarray, x: np.ndarray) -> tuple[list[int], list[list[list[int]]]]:
     """Build one shard's HNSW graph. Returns (levels, adjacency) where
     adjacency[i][l] lists the level-l neighbor POSITIONS of node i.
     Deterministic: ascending-id insertion, md5-derived levels, id
     tie-breaks in every ordering."""
     n = len(ids)
-    levels = [_node_level(int(i), m) for i in ids]
+    levels = [_node_level(int(i)) for i in ids]
     adj: list[list[list[int]]] = [[[] for _ in range(levels[i] + 1)] for i in range(n)]
     if n == 0:
         return levels, adj
@@ -176,9 +176,9 @@ def _build_shard_graph(
             eps = [_search_layer(x, [a[layer] if layer < len(a) else [] for a in adj], q, eps, 1)[0][1]]
         for layer in range(min(lv, max_level), -1, -1):
             layer_adj = [a[layer] if layer < len(a) else [] for a in adj]
-            w = _search_layer(x, layer_adj, q, eps, ef_construction)
-            cap = 2 * m if layer == 0 else m
-            nbrs = [node for _, node in w[:m]]
+            w = _search_layer(x, layer_adj, q, eps, _EF_CONSTRUCTION)
+            cap = 2 * _M if layer == 0 else _M
+            nbrs = [node for _, node in w[:_M]]
             adj[i][layer] = list(nbrs)
             for j in nbrs:
                 connect(i, j, layer, cap)
@@ -201,12 +201,8 @@ def _flatten(adj_i: list[list[int]], ids: np.ndarray) -> tuple[list[int], list[i
 
 def build_hnsw_index(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_shards: int | None = None,
-    target_shard_rows: int = 4096,
-    m: int = _M,
-    ef_construction: int = _EF_CONSTRUCTION,
+    target_shard_rows: int = _TARGET_SHARD_ROWS,
 ) -> DataFrame:
     """Shard the corpus and build one HNSW graph per shard via a grouped
     map. ONE shuffle (the shard groupBy); each Python worker sees exactly
@@ -221,7 +217,7 @@ def build_hnsw_index(
         order = np.argsort(pdf["id"].to_numpy())
         ids = pdf["id"].to_numpy()[order]
         x = _normalize(np.stack(pdf["vec"].to_numpy()[order]).astype(np.float64))
-        levels, adj = _build_shard_graph(ids, x, m, ef_construction)
+        levels, adj = _build_shard_graph(ids, x)
         flat_nbrs, flat_offs = zip(*(_flatten(adj[i], ids) for i in range(len(ids))))
         return pd.DataFrame(
             {
@@ -235,9 +231,9 @@ def build_hnsw_index(
         )
 
     shards = df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int").alias("shard"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_shards)).cast("int").alias("shard"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("vec"),
     )
     return shards.groupBy("shard").applyInPandas(build, schema=INDEX_SCHEMA)
 
@@ -246,25 +242,18 @@ def ensure_hnsw_index(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_shards: int | None = None,
-    target_shard_rows: int = 4096,
-    m: int = _M,
-    ef_construction: int = _EF_CONSTRUCTION,
 ) -> DataFrame:
     """Build-once/reuse HNSW artifact, persisted as parquet partitioned by
     shard (the same lifecycle as the MinHash/IVF/PQ artifacts — see
     functions/artifacts.py). On a cluster the table would additionally be
     BUCKETED by shard so the search-time groupBy is exchange-free."""
-    kind = f"hnsw_m{m}_efc{ef_construction}_s{n_shards or 'auto'}_t{target_shard_rows}"
+    kind = f"hnsw_m{_M}_efc{_EF_CONSTRUCTION}_s{n_shards or 'auto'}_t{_TARGET_SHARD_ROWS}"
     return ensure_table(
         spark,
         sf_dir,
         kind,
-        lambda: build_hnsw_index(
-            df, vec_col, id_col, n_shards, target_shard_rows, m, ef_construction
-        ),
+        lambda: build_hnsw_index(df, n_shards),
         partition_by="shard",
     )
 
@@ -357,15 +346,11 @@ def hnsw_topk(
 def init_hnsw_index(
     df: DataFrame,
     path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    target_shard_rows: int = 4096,
-    m: int = _M,
-    ef_construction: int = _EF_CONSTRUCTION,
+    target_shard_rows: int = _TARGET_SHARD_ROWS,
 ) -> None:
     """Create the index directory from the initial corpus (overwrites)."""
     build_hnsw_index(
-        df, vec_col, id_col, None, target_shard_rows, m, ef_construction
+        df, target_shard_rows=target_shard_rows
     ).write.mode("overwrite").partitionBy("shard").parquet(path)
 
 
@@ -373,11 +358,7 @@ def append_hnsw_delta(
     spark: SparkSession,
     new_df: DataFrame,
     path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    target_shard_rows: int = 4096,
-    m: int = _M,
-    ef_construction: int = _EF_CONSTRUCTION,
+    target_shard_rows: int = _TARGET_SHARD_ROWS,
 ) -> int:
     """Admit a batch of NEW vectors as fresh segment(s); returns the first
     new segment id. Base segments are untouched — the admission cost is
@@ -387,7 +368,7 @@ def append_hnsw_delta(
     existing = spark.read.parquet(path)
     base = existing.agg(F.max("shard")).head()[0] + 1
     delta = build_hnsw_index(
-        new_df, vec_col, id_col, None, target_shard_rows, m, ef_construction
+        new_df, target_shard_rows=target_shard_rows
     ).withColumn("shard", (F.col("shard") + F.lit(base)).cast("int"))
     delta.write.mode("append").partitionBy("shard").parquet(path)
     return int(base)
@@ -396,9 +377,7 @@ def append_hnsw_delta(
 def compact_hnsw_index(
     spark: SparkSession,
     path: str,
-    target_shard_rows: int = 4096,
-    m: int = _M,
-    ef_construction: int = _EF_CONSTRUCTION,
+    target_shard_rows: int = _TARGET_SHARD_ROWS,
 ) -> int:
     """Re-shard the whole index back to target-sized segments (the Lucene
     merge): read every segment's vectors, rebuild hash-sharded graphs, and
@@ -412,7 +391,7 @@ def compact_hnsw_index(
     )
     tmp = path.rstrip("/") + ".compact.tmp"
     build_hnsw_index(
-        live, "embedding", "vec_id", None, target_shard_rows, m, ef_construction
+        live, target_shard_rows=target_shard_rows
     ).write.mode("overwrite").partitionBy("shard").parquet(tmp)
     old = path.rstrip("/") + ".compact.old"
     shutil.rmtree(old, ignore_errors=True)

@@ -162,11 +162,11 @@ def restore(levels, values, parity, n: int, cap: int) -> dict:
     return sk
 
 
-def quantile(sk: dict, q_num: int, q_den: int = 1000) -> float | None:
+def quantile(sk: dict, q_num: int) -> float | None:
     """Smallest sketched value whose cumulative weight reaches
-    ceil(W * q_num / q_den) — the same discrete-selection convention as
+    ceil(W * q_num / 1000) — the same discrete-selection convention as
     the exact rank tables it is banded against. The quantile arrives as
-    an integer rational (never a float: ``int(0.95 * 1000)`` is 949 on
+    integer thousandths (never a float: ``int(0.95 * 1000)`` is 949 on
     IEEE doubles, the off-by-one that integer quantile plumbing exists
     to prevent)."""
     weighted = sorted(
@@ -175,7 +175,7 @@ def quantile(sk: dict, q_num: int, q_den: int = 1000) -> float | None:
     w_total = sum(w for _, w in weighted)
     if w_total == 0:
         return None
-    target = -(-q_num * w_total // q_den)  # ceil
+    target = -(-q_num * w_total // 1000)  # ceil
     cum = 0
     for v, w in weighted:
         cum += w

@@ -52,8 +52,6 @@ def write_zordered(
     col_a: str,
     col_b: str,
     n_files: int = 16,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Write `df` as parquet clustered on the (col_a, col_b) Morton curve:
     range-partition by the z-key into `n_files` output partitions, sort
@@ -63,11 +61,11 @@ def write_zordered(
     evens out file sizes under key skew (hash partitioning would scatter
     the curve)."""
     (
-        df.withColumn("__z", zorder_key(col_a, col_b, bits))
+        df.withColumn("__z", zorder_key(col_a, col_b))
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -77,7 +75,6 @@ def write_with_bloom_filters(
     path: str,
     bloom_cols: list[str],
     ndv: int = 100_000,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet with per-column BLOOM FILTERS for the named columns —
     the point-lookup complement to z-order's range clustering. Min/max
@@ -89,7 +86,7 @@ def write_with_bloom_filters(
     (expected distinct values per row group; ~1% false-positive rate at
     the parquet default bits-per-value). Readers use the filters
     transparently via Spark's parquet filter pushdown."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     for c in bloom_cols:
         w = w.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
             f"parquet.bloom.filter.expected.ndv#{c}", str(ndv)

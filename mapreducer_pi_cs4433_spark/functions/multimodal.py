@@ -58,18 +58,16 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def attach_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_payload(df: DataFrame) -> DataFrame:
     """Build a media table from a text corpus for plumbing tests: payload =
     UTF-8 bytes of the text (a stand-in for image bytes), metadata derived
     JVM-side. At ingest time a real pipeline computes the same struct from
     the container format headers."""
     return df.select(
-        F.col(id_col).alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("payload"),
+        F.col("doc_id").alias("media_id"),
+        F.encode(F.col("text"), "UTF-8").alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
-        F.length(F.encode(F.col(text_col), "UTF-8")).cast("long").alias("n_bytes"),
+        F.length(F.encode(F.col("text"), "UTF-8")).cast("long").alias("n_bytes"),
     )
 
 
@@ -202,9 +200,7 @@ def fake_decode_image(payload: bytes) -> tuple[int, int]:
     return (w, h)
 
 
-def extract_features(
-    media: DataFrame, decoder=None, batch_hint: int | None = None
-) -> DataFrame:
+def extract_features(media: DataFrame, decoder=None) -> DataFrame:
     """Per-item media features via mapInPandas (Arrow batches).
 
     The pandas iterator shape means one Python invocation per columnar
@@ -257,15 +253,12 @@ _PPM_DELTA_STEP = 3  # per-variant uniform brightness shift
 
 def synthesize_ppm_corpus(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    side: int = PPM_SIDE,
-    group_every: int = _PPM_GROUP_EVERY,
-    delta_step: int = _PPM_DELTA_STEP,
 ) -> DataFrame:
     """Deterministic REAL-image corpus: one binary P6 PPM payload per doc,
-    with planted perceptual near-dups — every ``group_every`` consecutive
-    doc_ids share one md5-derived base image, and each member is shifted
-    by a uniform brightness delta (``(doc_id % group_every) * delta_step``)
+    with planted perceptual near-dups — every ``_PPM_GROUP_EVERY``
+    consecutive doc_ids share one md5-derived base image, and each member
+    is shifted by a uniform brightness delta
+    (``(doc_id % _PPM_GROUP_EVERY) * _PPM_DELTA_STEP``)
     so the group's payloads are byte-DIFFERENT but perceptually identical.
     Pixel math is engine-neutral by construction (md5 of a decimal string,
     byte % 200 keeps every shifted value < 255, so no clamp ever breaks
@@ -280,21 +273,18 @@ def synthesize_ppm_corpus(
     ``ahash_features``, never by re-running this formula."""
     import pandas as pd
 
-    if side > 16 or side % 8:
-        raise ValueError("side must be a multiple of 8, at most 16 (one md5 per row)")
-
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import hashlib
 
-        header = f"P6\n{side} {side}\n255\n".encode()
+        header = f"P6\n{PPM_SIDE} {PPM_SIDE}\n255\n".encode()
 
         def one(doc_id: int) -> bytes:
-            grp = doc_id // group_every
-            delta = (doc_id % group_every) * delta_step
+            grp = doc_id // _PPM_GROUP_EVERY
+            delta = (doc_id % _PPM_GROUP_EVERY) * _PPM_DELTA_STEP
             rgb = bytearray()
-            for y in range(side):
+            for y in range(PPM_SIDE):
                 dig = hashlib.md5(f"{grp}:{y}".encode()).digest()
-                for b in dig[:side]:
+                for b in dig[:PPM_SIDE]:
                     g = (b % 200) + delta
                     rgb += bytes((g, g, g))
             return header + bytes(rgb)
@@ -302,12 +292,12 @@ def synthesize_ppm_corpus(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "payload": pdf[id_col].map(lambda d: one(int(d))),
+                    "media_id": pdf["doc_id"].astype("int64"),
+                    "payload": pdf["doc_id"].map(lambda d: one(int(d))),
                 }
             )
 
-    return docs.select(id_col).mapInPandas(
+    return docs.select("doc_id").mapInPandas(
         run, schema="media_id long, payload binary"
     )
 

@@ -45,30 +45,32 @@ from pyspark.sql import functions as F
 from .artifacts import artifact_dir, ensure_table
 
 _HYPERPLANE_SEED = 0x51AB5  # fixed: buckets must be stable across jobs/runs
+# auto_planes sizes buckets to hold about this many rows each
+_TARGET_BUCKET_ROWS = 4096
+# Lloyd iterations of the exact integer k-means (part of the artifact keys)
+_KMEANS_ITERS = 2
 
 
-def _sign_matrix(planes: int, dim: int, draw: int = 0) -> np.ndarray:
+def _sign_matrix(planes: int, dim: int) -> np.ndarray:
     """Deterministic (planes, dim) ±1 hyperplane matrix. Row-major draw from
     a fixed seed, so smaller `planes` is a prefix of larger — re-indexing
-    with more planes refines buckets without reshuffling their prefix.
-    `draw` selects an independent hyperplane family (seed offset) for
-    multi-bucketing recall unions."""
-    rng = np.random.default_rng(_HYPERPLANE_SEED + draw)
+    with more planes refines buckets without reshuffling their prefix."""
+    rng = np.random.default_rng(_HYPERPLANE_SEED)
     return (rng.integers(0, 2, size=(planes, dim)) * 2 - 1).astype(np.float64)
 
 
-def _np_buckets(mat: np.ndarray, planes: int, draw: int = 0) -> np.ndarray:
+def _np_buckets(mat: np.ndarray, planes: int) -> np.ndarray:
     """Bucket ids (int64) for a (n, dim) batch: bit p = sign of the
     projection onto hyperplane p."""
-    proj = mat @ _sign_matrix(planes, mat.shape[1], draw).T  # (n, planes)
+    proj = mat @ _sign_matrix(planes, mat.shape[1]).T  # (n, planes)
     bits = (proj >= 0).astype(np.int64)
     return bits @ (1 << np.arange(planes, dtype=np.int64))
 
 
-def query_bucket(query_vec: list[float], planes: int, draw: int = 0) -> int:
+def query_bucket(query_vec: list[float], planes: int) -> int:
     """Driver-side bucket of a query vector — same hyperplanes as the UDF."""
     q = np.asarray([float(x) for x in query_vec], dtype=np.float64)
-    return int(_np_buckets(q[None, :], planes, draw)[0])
+    return int(_np_buckets(q[None, :], planes)[0])
 
 
 def cosine_to_query(vec_col: str | Column, query_vec: list[float]) -> Column:
@@ -158,22 +160,17 @@ def sign_bucket(vec_col: str | Column, planes: int = 8, draw: int = 0) -> Column
     return _bucket(vec_col if isinstance(vec_col, Column) else F.col(vec_col))
 
 
-def auto_planes(
-    n_rows: int,
-    target_bucket_rows: int = 4096,
-    min_planes: int = 4,
-    max_planes: int = 24,
-) -> int:
-    """Scale-adaptive plane count: enough hyperplanes that the *expected*
-    bucket population stays near `target_bucket_rows`, bounding the
-    within-bucket quadratic of near-dup joins as the corpus grows (2^planes
-    buckets ~ n / target). Fixed planes (round 1) let within-bucket pair
-    counts re-explode at 100 TB; planes = log2(n / target) keeps
-    per-bucket work flat while recall is re-bought with multi-probe
-    (ivf_topk probe_hamming) or multiple bucketings."""
+def auto_planes(n_rows: int) -> int:
+    """Scale-adaptive plane count in [4, 24]: enough hyperplanes that the
+    *expected* bucket population stays near _TARGET_BUCKET_ROWS, bounding
+    the within-bucket quadratic of near-dup joins as the corpus grows
+    (2^planes buckets ~ n / target). Fixed planes (round 1) let
+    within-bucket pair counts re-explode at 100 TB; planes = log2(n /
+    target) keeps per-bucket work flat while recall is re-bought with
+    multi-probe (ivf_topk probe_hamming) or multiple bucketings."""
     if n_rows <= 0:
-        return min_planes
-    return max(min_planes, min(max_planes, math.ceil(math.log2(max(n_rows / target_bucket_rows, 1.0)))))
+        return 4
+    return max(4, min(24, math.ceil(math.log2(max(n_rows / _TARGET_BUCKET_ROWS, 1.0)))))
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -189,8 +186,6 @@ def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact top-k by cosine to a query vector.
 
@@ -202,8 +197,8 @@ def brute_force_topk(
     """
     return (
         df.select(
-            F.col(id_col).alias("id"),
-            F.round(cosine_to_query(vec_col, query_vec), 9).alias("cosine_sim"),
+            F.col("vec_id").alias("id"),
+            F.round(cosine_to_query("embedding", query_vec), 9).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("id"))
         .limit(k)
@@ -212,23 +207,20 @@ def brute_force_topk(
 
 def build_ivf_index(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     planes: int | str = 8,
-    target_bucket_rows: int = 4096,
 ) -> DataFrame:
     """Materializable index: (id, vec, bucket). Write partitioned/bucketed
     by `bucket` so probes prune partitions at the source.
 
     planes="auto" sizes the bucket count to the corpus (one count() job)
-    via auto_planes(), keeping expected bucket population ~target_bucket_rows
+    via auto_planes(), keeping expected bucket population ~_TARGET_BUCKET_ROWS
     at any scale."""
     if planes == "auto":
-        planes = auto_planes(df.count(), target_bucket_rows)
+        planes = auto_planes(df.count())
     return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        sign_bucket(vec_col, planes).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        sign_bucket("embedding", planes).alias("bucket"),
     )
 
 
@@ -236,8 +228,6 @@ def ensure_ivf_index(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     planes: int = 8,
 ) -> DataFrame:
     """Build-once/reuse IVF index: the (id, vec, bucket) table PERSISTED as
@@ -251,7 +241,7 @@ def ensure_ivf_index(
         spark,
         sf_dir,
         f"ivf_p{planes}",
-        lambda: build_ivf_index(df, vec_col, id_col, planes),
+        lambda: build_ivf_index(df, planes=planes),
         partition_by="bucket",
     )
 
@@ -260,8 +250,6 @@ def ensure_pq_artifacts(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 8,
     k: int = 256,
     sample_rows: int = 10_000,
@@ -286,12 +274,12 @@ def ensure_pq_artifacts(
     books_file = os.path.join(artifact_dir(sf_dir, kind), "codebooks.npy")
 
     def build() -> DataFrame:
-        books = train_pq_codebooks(df, vec_col, m=m, k=k, sample_rows=sample_rows)
+        books = train_pq_codebooks(df, m=m, k=k, sample_rows=sample_rows)
         os.makedirs(os.path.dirname(books_file), exist_ok=True)
         tmp = books_file + ".tmp.npy"
         np.save(tmp, books)
         os.replace(tmp, books_file)
-        return encode_pq(df, books, vec_col, id_col)
+        return encode_pq(df, books)
 
     codes = ensure_table(spark, sf_dir, f"{kind}/codes", build)
     return np.load(books_file), codes
@@ -301,8 +289,6 @@ def ensure_ivfpq_codes(
     spark: SparkSession,
     df: DataFrame,
     sf_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     m: int = 8,
     k: int = 256,
     sample_rows: int = 10_000,
@@ -321,9 +307,9 @@ def ensure_ivfpq_codes(
 
     def build() -> DataFrame:
         _, codes = ensure_pq_artifacts(
-            spark, df, sf_dir, vec_col, id_col, m, k, sample_rows
+            spark, df, sf_dir, m=m, k=k, sample_rows=sample_rows
         )
-        index = ensure_ivf_index(spark, df, sf_dir, vec_col, id_col, planes)
+        index = ensure_ivf_index(spark, df, sf_dir, planes=planes)
         return codes.join(index.select("id", "bucket"), "id")
 
     return ensure_table(
@@ -338,9 +324,6 @@ def ensure_ivfpq_codes(
 def kmeans_assignment(
     df: DataFrame,
     k: int,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_id, cl, d): each vector's cluster under the exact integer
     Lloyd system (md5-seeded starts, floor-quantized micro-unit
@@ -354,10 +337,10 @@ def kmeans_assignment(
 
     Scale shape: centroids (k x 64 rows) BROADCAST per iteration; the
     data-sized exchanges are partial-aggregated integer shuffles. The
-    quantized component stream is localCheckpoint-ed once — 2*iters + 2
+    quantized component stream is localCheckpoint-ed once — 2*_KMEANS_ITERS + 2
     plan references otherwise re-explode the corpus each time."""
-    q, cent = _kmeans_plan(df, k, iters, vec_col, id_col)
-    return _assign_against(q, cent, id_col)
+    q, cent = _kmeans_plan(df, k, _KMEANS_ITERS, "embedding", "vec_id")
+    return _assign_against(q, cent, "vec_id")
 
 
 def _assign_against(q: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
@@ -444,14 +427,11 @@ def _kmeans_plan(
 def kmeans_centroids(
     df: DataFrame,
     k: int,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """The FINAL centroid table (cl, dim, cd) of the exact integer Lloyd
     system — the 'model' a stream-time assigner broadcasts to score new
     vectors onto the same clusters the persisted assignment uses."""
-    return _kmeans_plan(df, k, iters, vec_col, id_col)[1].select(
+    return _kmeans_plan(df, k, _KMEANS_ITERS, "embedding", "vec_id")[1].select(
         "cl", "dim", "cd"
     )
 
@@ -461,9 +441,6 @@ def ensure_kmeans_assignment(
     df: DataFrame,
     sf_dir: str,
     k: int,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Build-once/reuse semantic-cluster assignment: the (vec_id, cl, d)
     table persisted per (corpus, k, iters). Clustering is a corpus-level
@@ -477,20 +454,18 @@ def ensure_kmeans_assignment(
     Lloyd chain, not two."""
 
     def build() -> DataFrame:
-        cent = ensure_kmeans_centroids(
-            spark, df, sf_dir, k, iters, vec_col, id_col
-        )
-        emb = df.filter(F.col(vec_col).isNotNull())
-        q = emb.select(id_col, F.posexplode(vec_col).alias("pos", "v")).select(
-            F.col(id_col).alias("vid"),
+        cent = ensure_kmeans_centroids(spark, df, sf_dir, k)
+        emb = df.filter(F.col("embedding").isNotNull())
+        q = emb.select("vec_id", F.posexplode("embedding").alias("pos", "v")).select(
+            F.col("vec_id").alias("vid"),
             (F.col("pos") + 1).alias("dim"),
             F.floor(F.col("v").cast("double") * 1_000_000)
             .cast("long")
             .alias("vq"),
         )
-        return _assign_against(q, cent, id_col)
+        return _assign_against(q, cent, "vec_id")
 
-    return ensure_table(spark, sf_dir, f"kmeans_k{k}_i{iters}", build)
+    return ensure_table(spark, sf_dir, f"kmeans_k{k}_i{_KMEANS_ITERS}", build)
 
 
 def ensure_kmeans_centroids(
@@ -498,9 +473,6 @@ def ensure_kmeans_centroids(
     df: DataFrame,
     sf_dir: str,
     k: int,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Build-once/reuse FINAL centroid table (cl, dim, cd) — k x d rows,
     the scoring 'model' for stream-time cluster assignment
@@ -510,8 +482,8 @@ def ensure_kmeans_centroids(
     return ensure_table(
         spark,
         sf_dir,
-        f"kmeans_cent_k{k}_i{iters}",
-        lambda: kmeans_centroids(df, k, iters, vec_col, id_col),
+        f"kmeans_cent_k{k}_i{_KMEANS_ITERS}",
+        lambda: kmeans_centroids(df, k),
     )
 
 
@@ -528,11 +500,9 @@ def hamming_ball(bucket: int, planes: int, radius: int) -> list[int]:
 
 def train_pq_codebooks(
     df: DataFrame,
-    vec_col: str = "embedding",
     m: int = 8,
     k: int = 256,
     sample_rows: int = 10_000,
-    kmeans_iters: int = 10,
 ) -> "np.ndarray":
     """Train product-quantization codebooks: (m, k, d/m) centroids.
 
@@ -547,7 +517,7 @@ def train_pq_codebooks(
     Vectors are L2-normalized before training so PQ inner products
     approximate cosine.
     """
-    rows = df.select(vec_col).limit(sample_rows).collect()
+    rows = df.select("embedding").limit(sample_rows).collect()
     mat = np.vstack([np.asarray(r[0], dtype=np.float64) for r in rows])
     nrm = np.sqrt((mat * mat).sum(axis=1, keepdims=True))
     np.divide(mat, nrm, out=mat, where=nrm > 0)
@@ -561,7 +531,7 @@ def train_pq_codebooks(
         sub = mat[:, mi * dsub : (mi + 1) * dsub]
         # deterministic init: evenly spaced points of the (stable) sample
         cent = sub[np.linspace(0, n - 1, k_eff).astype(np.int64)].copy()
-        for _ in range(kmeans_iters):
+        for _ in range(10):
             # assign to nearest centroid by squared L2
             d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
@@ -576,8 +546,6 @@ def train_pq_codebooks(
 def encode_pq(
     index_df: DataFrame,
     codebooks: "np.ndarray",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, codes array<int>[m]) — each vector L2-normalized and quantized
     to its nearest centroid per subspace. At d=64/m=8 this is a 32×
@@ -609,7 +577,7 @@ def encode_pq(
         return pd.Series([row.astype("int32") for row in codes])
 
     return index_df.select(
-        F.col(id_col).alias("id"), _encode(vec_col).alias("codes")
+        F.col("vec_id").alias("id"), _encode("embedding").alias("codes")
     )
 
 
@@ -620,8 +588,6 @@ def pq_topk(
     k: int = 10,
     rerank: DataFrame | None = None,
     rerank_factor: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k by PQ asymmetric distance, optionally re-ranked.
 
@@ -671,12 +637,12 @@ def pq_topk(
     return (
         rerank.join(
             F.broadcast(cands.select("id")),
-            rerank[id_col] == F.col("id"),
+            rerank["vec_id"] == F.col("id"),
             "inner",
         )
         .select(
             F.col("id"),
-            F.round(cosine_to_query(vec_col, qlist), 9).alias("cosine_sim"),
+            F.round(cosine_to_query("embedding", qlist), 9).alias("cosine_sim"),
         )
         .orderBy(F.desc("cosine_sim"), F.asc("id"))
         .limit(k)
@@ -690,10 +656,7 @@ def pq_topk_multi(
     k: int = 10,
     rerank: DataFrame | None = None,
     rerank_factor: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     bucket_probes: list[list[int]] | None = None,
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """PQ asymmetric-distance top-k for SEVERAL queries in ONE pass over
     the code table (r3/r4 carried ask: kills similarity_topk_pq's
@@ -749,7 +712,7 @@ def pq_topk_multi(
     )
     if probe_list is not None:
         union = sorted({b for bs in probe_list for b in bs})
-        encoded = encoded.filter(F.col(bucket_col).isin(union))
+        encoded = encoded.filter(F.col("bucket").isin(union))
 
     def _local_topk(batches):
         import numpy as np
@@ -764,7 +727,7 @@ def pq_topk_multi(
             cm = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
             ids = pdf["id"].to_numpy()
             bks = (
-                pdf[bucket_col].to_numpy() if probe_list is not None else None
+                pdf["bucket"].to_numpy() if probe_list is not None else None
             )
             frames = []
             for qi in range(nq):
@@ -812,7 +775,7 @@ def pq_topk_multi(
         ]
     )
     rer = (
-        rerank.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
+        rerank.select(F.col("vec_id").alias("id"), F.col("embedding").alias("__v"))
         .join(F.broadcast(cands.select("qi", "id")), "id")
         .select(
             "qi",

@@ -73,7 +73,7 @@ def _marker_count(col: Column, markers: tuple[str, ...]) -> Column:
     return F.regexp_count(padded, F.lit(rf"\s({alt})(?=\s)"))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality signals per document.
 
     Ratios are int/int divisions so the doubles are bit-identical across
@@ -85,7 +85,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     is the count of non-space runs, total token chars is the non-whitespace
     character count, stopword hits are whole-token regex matches.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n_tokens = token_count(c)
     n_chars = F.length(c)
     n_token_chars = F.length(F.regexp_replace(c, r"\s", ""))
@@ -108,7 +108,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Marker-word language ID: count marker hits per language over the
     lowercased token array, argmax with deterministic tie-break on language
     code. Adds `lang_pred` + one `score_<lang>` per language.
@@ -122,7 +122,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     out = df
     for lang, markers in _LANG_MARKERS.items():
         out = out.withColumn(
-            f"score_{lang}", _marker_count(F.col(text_col), markers)
+            f"score_{lang}", _marker_count(F.col("text"), markers)
         )
     # argmax via greatest + chained when (deterministic tie-break: first in
     # sorted language order wins)
@@ -146,21 +146,21 @@ _PII_PATTERNS: dict[str, str] = {
 }
 
 
-def scrub_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii(df: DataFrame) -> DataFrame:
     """Redact email / URL / phone / IPv4 patterns, replacing each match
     with a typed token (`<EMAIL>`, `<URL>`, ...), and count per-kind hits.
 
-    Adds `{text_col}_scrubbed` plus one `n_<kind>` column per pattern.
+    Adds `text_scrubbed` plus one `n_<kind>` column per pattern.
     Pure scalar regexp_replace/regexp_count chain — zero shuffles, whole
     Spark-side codegen; order matters (emails before phones, so digits
     inside a redacted email aren't re-matched) and is fixed."""
-    c = F.col(text_col)
+    c = F.col("text")
     out_cols: dict[str, Column] = {}
     scrubbed = c
     for kind, pat in _PII_PATTERNS.items():
         out_cols[f"n_{kind}"] = F.regexp_count(c, F.lit(pat)).cast("long")
         scrubbed = F.regexp_replace(scrubbed, pat, f"<{kind.upper()}>")
-    return df.withColumns({f"{text_col}_scrubbed": scrubbed, **out_cols})
+    return df.withColumns({"text_scrubbed": scrubbed, **out_cols})
 
 
 def exploded_shingles(
@@ -204,15 +204,13 @@ def exploded_shingles(
     ).select("id", F.col("_norm").substr(F.col("_i"), F.lit(k)).alias("shingle"))
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 8
-) -> DataFrame:
+def fingerprint(df: DataFrame, k: int = 8) -> DataFrame:
     """Winnowing-style document fingerprint: MD5 each k-char shingle, keep
     the minimum digest (a 1-permutation MinHash). MD5 is standardized, so
     DuckDB computes the identical fingerprint — unlike engine-private hash
     functions. Relational min-aggregate over the exploded shingle stream
-    (codegen path). Returns (id_col, fingerprint hex string)."""
-    sh = exploded_shingles(df, text_col, id_col, k)
-    return sh.groupBy(F.col("id").alias(id_col)).agg(
+    (codegen path). Returns (doc_id, fingerprint hex string)."""
+    sh = exploded_shingles(df, "text", "doc_id", k)
+    return sh.groupBy(F.col("id").alias("doc_id")).agg(
         F.min(F.md5("shingle")).alias("fingerprint")
     )

@@ -65,16 +65,16 @@ def salted_join(
     return out.drop("_salt")
 
 
-def skewed_count_per_key(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
+def skewed_count_per_key(df: DataFrame, key: str) -> DataFrame:
     """Two-phase count for skewed group keys: partial count per (key, salt)
-    then final sum per key. Spark's partial aggregation already does this
+    over 16 salts, then final sum per key. Spark's partial aggregation already does this
     for count/sum; the explicit form matters for aggregates without partial
     pushdown (e.g. collect_list-like states) and documents the pattern."""
     return (
         df.withColumn(
             "_salt",
             F.pmod(
-                F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)
+                F.xxhash64(F.monotonically_increasing_id()), F.lit(16)
             ).cast("int"),
         )
         .groupBy(key, "_salt")

@@ -169,11 +169,9 @@ def unvisited_friend_owners(
 # ---------------------------------------------------------------------------
 # Task G — stale-or-never-accessed people (TaskG.java, 2-job chain)
 # ---------------------------------------------------------------------------
-def stale_or_disconnected(
-    pages: DataFrame, access_logs: DataFrame, days: int = 14
-) -> DataFrame:
+def stale_or_disconnected(pages: DataFrame, access_logs: DataFrame) -> DataFrame:
     """(PersonID, Name, LastAccess) for people never accessing, or whose last
-    access is >= `days` full 24h periods before the dataset's max timestamp.
+    access is >= 14 full 24h periods before the dataset's max timestamp.
 
     The reference runs two jobs plus a driver-side scalar readback
     (TaskG.java:162-186, SURVEY §2.9 C2); here the global max is a 1-row
@@ -191,7 +189,7 @@ def stale_or_disconnected(
         pages.select("PersonID", "Name")
         .join(last, pages["PersonID"] == last["ByWho"], "left")
         .crossJoin(F.broadcast(ref))
-        .filter(F.col("LastAccess").isNull() | (age_days >= days))
+        .filter(F.col("LastAccess").isNull() | (age_days >= 14))
         .select("PersonID", "Name", "LastAccess")
     )
 

@@ -417,6 +417,25 @@ def text_token_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMB_BLOCKS = 8
 
 
+def _emb_block_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """Blocked-GEMM tiling shared by the exact all-pairs embedding
+    queries: each row of `emb` gets its block blk = vec_id mod
+    _EMB_BLOCKS and is replicated once into every unordered block pair
+    (gi, gj) containing blk, via a broadcast join. Grouping the result by
+    (gi, gj) gives one task per block pair, and each unordered vector pair
+    meets in exactly one of them (its sorted block-id pair)."""
+    pairs = [
+        (i, j, m)
+        for i in range(_EMB_BLOCKS)
+        for j in range(i, _EMB_BLOCKS)
+        for m in ({i, j})
+    ]
+    pdf = spark.createDataFrame(pairs, "gi INT, gj INT, member INT")
+    return emb.withColumn(
+        "blk", F.pmod("vec_id", F.lit(_EMB_BLOCKS)).cast("int")
+    ).join(F.broadcast(pdf), F.col("blk") == F.col("member"))
+
+
 @query(
     "dedup_embedding_exact_pairs",
     oracle="""
@@ -465,16 +484,7 @@ def dedup_embedding_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    pairs = [
-        (i, j, m)
-        for i in range(_EMB_BLOCKS)
-        for j in range(i, _EMB_BLOCKS)
-        for m in ({i, j})
-    ]
-    pdf = spark.createDataFrame(pairs, "gi INT, gj INT, member INT")
-    tagged = emb.withColumn(
-        "blk", F.pmod("vec_id", F.lit(_EMB_BLOCKS)).cast("int")
-    ).join(F.broadcast(pdf), F.col("blk") == F.col("member"))
+    tagged = _emb_block_pairs(spark, emb)
 
     def gram(pdf_: "pd.DataFrame") -> "pd.DataFrame":
         gi, gj = int(pdf_["gi"].iloc[0]), int(pdf_["gj"].iloc[0])
@@ -1953,8 +1963,8 @@ def _kmeans_ctes(iters: int = 2) -> tuple[list[str], str]:
     return ctes, prev
 
 
-def _kmeans_oracle(iters: int = 2) -> str:
-    ctes, prev = _kmeans_ctes(iters)
+def _kmeans_oracle() -> str:
+    ctes, prev = _kmeans_ctes(2)
     return (
         "WITH "
         + ", ".join(ctes)
@@ -2301,16 +2311,7 @@ def _blocked_knn(
 
     from pyspark.sql import Window
 
-    pairs = [
-        (i, j, m)
-        for i in range(_EMB_BLOCKS)
-        for j in range(i, _EMB_BLOCKS)
-        for m in ({i, j})
-    ]
-    pdf = spark.createDataFrame(pairs, "gi INT, gj INT, member INT")
-    tagged = emb.withColumn(
-        "blk", F.pmod("vec_id", F.lit(_EMB_BLOCKS)).cast("int")
-    ).join(F.broadcast(pdf), F.col("blk") == F.col("member"))
+    tagged = _emb_block_pairs(spark, emb)
     by_label = exclude == "same_label"
 
     def local_topk(pdf_: "pd.DataFrame") -> "pd.DataFrame":
@@ -2591,7 +2592,10 @@ def graph_broadcast_hint(deg: DataFrame):
 
 def ensure_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted symmetrized edge list (src, dst) of the part-supplier
-    co-purchase graph, built once per corpus via the artifact store."""
+    co-purchase graph, built once per corpus via the artifact store. With
+    ensure_graph_degree it is the shared starting point of every iterative
+    graph job (PageRank, LPA, k-core); `cli.py build-index --kinds graph`
+    builds both as part of the corpus build step."""
     from ..functions.artifacts import ensure_table
 
     def _build_sym() -> DataFrame:
@@ -2638,18 +2642,6 @@ def ensure_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ensure_pagerank_graph(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Persisted (symmetrized edge list, degree table) of the
-    part-supplier co-purchase graph — the shared starting point of every
-    iterative graph job (PageRank, LPA; k-core reads the two tables
-    separately). Both are built once per corpus via the artifact store;
-    also exposed through `cli.py build-index --kinds graph` as part of
-    the corpus build step."""
-    return ensure_graph_edges(spark, sf_dir), ensure_graph_degree(spark, sf_dir)
-
-
 @query("graph_pagerank_suppliers", oracle=_pagerank_oracle())
 def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the (part)-(supplier) co-purchase graph — the graph-
@@ -2678,7 +2670,8 @@ def graph_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact store (r3 used per-invocation localCheckpoint — that stopped
     # the per-iteration lineitem re-scans, but still rebuilt the
     # distinct+union ETL on every query run).
-    sym, deg = ensure_pagerank_graph(spark, sf_dir)
+    sym = ensure_graph_edges(spark, sf_dir)
+    deg = ensure_graph_degree(spark, sf_dir)
     # size-gated hint (r8): force the broadcast only while the node table
     # fits — see graph_broadcast_hint for the 100x rationale
     _hint = graph_broadcast_hint(deg)

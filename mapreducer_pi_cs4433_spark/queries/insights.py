@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from .catalog import _fmt_doc, _t, query
 from .extensions import (
     ensure_basket_order_brand,
-    ensure_pagerank_graph,
+    ensure_graph_degree,
+    ensure_graph_edges,
     graph_broadcast_hint,
 )
 
@@ -113,7 +114,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unrolling keeps all {I} iterations in ONE Catalyst plan.
     Labels/nodes are int64; the oracle's row_number SQL selects the
     identical plurality winner — no ordering ambiguity anywhere."""
-    sym, deg = ensure_pagerank_graph(spark, sf_dir)
+    sym = ensure_graph_edges(spark, sf_dir)
+    deg = ensure_graph_degree(spark, sf_dir)
     # size-gated hint (r8), shared with the PageRank sibling: force the
     # label-table broadcast only while the node count (free from the
     # degree artifact's parquet footers) fits; above the crossover the

@@ -33,20 +33,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def get_spark(
-    app_name: str = "mapreducer-pi-cs4433-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "mapreducer-pi-cs4433-spark") -> SparkSession:
     """Build (or fetch) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (defaults to all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (defaults to all cores)
+    and ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` the shuffle partition count.
     On a real cluster the ``master`` setting is supplied externally and the
     local[] default is ignored via spark-submit.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    sp = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    sp = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -16,7 +16,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
     max_partitions: int | None = 10_000,
 ) -> None:
     """Hive-style partitioned parquet: readers filtering on partition_cols
@@ -52,7 +51,7 @@ def write_partitioned(
                 "an explicit higher max_partitions if the layout is "
                 "intentional."
             )
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed_table(
@@ -60,52 +59,36 @@ def write_bucketed_table(
     table: str,
     bucket_col: str,
     num_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: rows are hash-bucketed by bucket_col at write
     time, so equi-joins and aggregations on that column read co-located
     buckets with NO exchange (the 100 TB answer to repeated joins on the
     same key). Requires saveAsTable (bucket metadata lives in the catalog)."""
-    w = df.write.mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(num_buckets, bucket_col).saveAsTable(table)
 
 
-def write_tsv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Reference-style TSV output (part-* files). single_file mirrors the
-    reference's setNumReduceTasks(1) for small results only."""
-    if single_file:
-        df = df.coalesce(1)
+def write_tsv(df: DataFrame, path: str) -> None:
+    """Reference-style TSV output (part-* files)."""
     # timestampFormat matches the reference's rendering (TaskG.java:123)
     df.write.mode("overwrite").option("sep", "\t").option(
         "timestampFormat", "yyyy-MM-dd HH:mm:ss"
     ).csv(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (zlib default): the other columnar interchange format —
     same pushdown/pruning/partitioning behavior as parquet in Spark's
     native vectorized reader, preferred by Hive-lineage warehouses.
     Round-trip is schema-exact (tested); read back with
     spark.read.orc(path)."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
+    df.write.mode("overwrite").orc(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """JSON-lines sink (one object per line, gzip-friendly, the lingua
     franca of corpus interchange). Timestamps serialize second-truncated so
     re-ingestion through load_jsonl round-trips values exactly."""
-    df.write.mode(mode).option(
+    df.write.mode("overwrite").option(
         "timestampFormat", "yyyy-MM-dd HH:mm:ss"
     ).json(path)
 
@@ -235,8 +218,6 @@ def export_shards(
     path: str,
     id_col: str,
     n_shards: int = 16,
-    max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
 ) -> None:
     """Training-data export: hash-sharded, reproducibly ordered parquet.
 
@@ -252,8 +233,8 @@ def export_shards(
     (
         out.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", id_col)
-        .write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_file)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 1_000_000)
         .partitionBy("shard")
         .parquet(path)
     )

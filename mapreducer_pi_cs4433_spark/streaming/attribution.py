@@ -66,6 +66,9 @@ ATTRIBUTION_SCHEMA = StructType(
     ]
 )
 
+# the batch twin's _ATTR_WINDOW_S
+_LOOKBACK_S = 7 * 86_400
+
 _ATTR_STATE_SCHEMA = StructType(
     [
         StructField("touch_s", ArrayType(LongType()), True),
@@ -76,20 +79,12 @@ _ATTR_STATE_SCHEMA = StructType(
 )
 
 
-def attribution_stateful(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
-    lookback_seconds: int = 7 * 86_400,
-    watermark: str = "1 second",
-) -> DataFrame:
+def attribution_stateful(stream: DataFrame, watermark: str = "1 second") -> DataFrame:
     """Last-touch attribution over a streaming event feed; see module
     docstring for the watermark-gated as-of contract."""
     import pandas as pd
 
-    lb = int(lookback_seconds)
+    lb = _LOOKBACK_S
 
     def update(key, pdf_iter, state: GroupState):
         (user,) = key
@@ -162,11 +157,11 @@ def attribution_stateful(
                 }
             )
 
-    prepared = stream.withWatermark(ts_col, watermark).select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("__ts"),
-        F.col(id_col).cast("long").alias("__id"),
-        F.col(type_col).alias("__type"),
+    prepared = stream.withWatermark("ts", watermark).select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").cast("long").alias("__id"),
+        F.col("event_type").alias("__type"),
     )
     return prepared.groupBy("user_id").applyInPandasWithState(
         update,

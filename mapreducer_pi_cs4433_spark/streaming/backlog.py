@@ -75,12 +75,7 @@ _BACKLOG_STATE_SCHEMA = StructType(
 )
 
 
-def day_grain_deltas(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    delta_col: str = "delta",
-    watermark: str = "1 second",
-) -> DataFrame:
+def day_grain_deltas(stream: DataFrame) -> DataFrame:
     """Distributed day-grain pre-aggregation for the sweep (ADVICE r5).
 
     An ordinary windowed streaming aggregation: fact-sized endpoint rows
@@ -94,19 +89,14 @@ def day_grain_deltas(
     ``backlog_sweep_stateful(read_from(sink))`` verbatim.
     """
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, "1 day").alias("__w"))
-        .agg(F.sum(F.col(delta_col).cast("long")).alias("delta"))
+        stream.withWatermark("ts", "1 second")
+        .groupBy(F.window("ts", "1 day").alias("__w"))
+        .agg(F.sum(F.col("delta").cast("long")).alias("delta"))
         .select(F.col("__w.start").alias("ts"), "delta")
     )
 
 
-def backlog_sweep_stateful(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    delta_col: str = "delta",
-    watermark: str = "1 second",
-) -> DataFrame:
+def backlog_sweep_stateful(stream: DataFrame) -> DataFrame:
     """Sweep-line over a streaming (event-time, delta) endpoint stream.
 
     Emits one append-mode row per FINALIZED change day — a day is final
@@ -159,11 +149,11 @@ def backlog_sweep_stateful(
             )
 
     prepared = (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("ts", "1 second")
         .select(
             F.lit(0).cast("int").alias("__g"),
-            F.col(ts_col).alias("__ts"),
-            F.col(delta_col).cast("long").alias("__delta"),
+            F.col("ts").alias("__ts"),
+            F.col("delta").cast("long").alias("__delta"),
         )
     )
     return prepared.groupBy("__g").applyInPandasWithState(

@@ -29,13 +29,7 @@ from pyspark.sql import functions as F
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def cdc_latest_state_stream(
-    changes: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    version_col: str = "event_id",
-    watermark: str = "1 day",
-) -> DataFrame:
+def cdc_latest_state_stream(changes: DataFrame, watermark: str = "1 day") -> DataFrame:
     """Maintain the current snapshot of a keyed change log as a streaming
     aggregation (update output mode: each micro-batch emits the keys whose
     snapshot row changed).
@@ -45,10 +39,10 @@ def cdc_latest_state_stream(
     n_changes, first_ts — value in exact int64 centi-units, timestamps
     second-formatted.
     """
-    log = changes.withWatermark(ts_col, watermark).select(
-        F.col(key_col).alias("user_id"),
-        F.col(ts_col).alias("ts"),
-        F.col(version_col).alias("event_id"),
+    log = changes.withWatermark("ts", watermark).select(
+        F.col("user_id").alias("user_id"),
+        F.col("ts").alias("ts"),
+        F.col("event_id").alias("event_id"),
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("v"),
     )

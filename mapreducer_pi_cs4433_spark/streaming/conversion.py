@@ -88,10 +88,6 @@ _CONV_STATE_SCHEMA = StructType(
 
 def conversion_stateful(
     stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    type_col: str = "event_type",
     window_seconds: int = 7 * 86_400,
     watermark: str = "1 second",
 ) -> DataFrame:
@@ -180,11 +176,11 @@ def conversion_stateful(
                 }
             )
 
-    prepared = stream.withWatermark(ts_col, watermark).select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("__ts"),
-        F.col(id_col).cast("long").alias("__id"),
-        F.col(type_col).alias("__type"),
+    prepared = stream.withWatermark("ts", watermark).select(
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").cast("long").alias("__id"),
+        F.col("event_type").alias("__type"),
     )
     return prepared.groupBy("user_id").applyInPandasWithState(
         update,

@@ -69,13 +69,7 @@ _DECAY_STATE_SCHEMA = StructType(
 )
 
 
-def decayed_scores_stateful(
-    stream: DataFrame,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    horizon_days: int = 30,
-    watermark: str = "1 second",
-) -> DataFrame:
+def decayed_scores_stateful(stream: DataFrame, horizon_days: int = 30) -> DataFrame:
     """Per-type decayed-popularity snapshots over a streaming event feed.
 
     Emits append-mode rows (event_type, as_of_day, n_events,
@@ -162,8 +156,8 @@ def decayed_scores_stateful(
         if out is not None:
             yield out
 
-    prepared = stream.withWatermark(ts_col, watermark).select(
-        F.col(type_col).alias("event_type"), F.col(ts_col).alias("__ts")
+    prepared = stream.withWatermark("ts", "1 second").select(
+        F.col("event_type").alias("event_type"), F.col("ts").alias("__ts")
     )
     return prepared.groupBy("event_type").applyInPandasWithState(
         update,

@@ -21,13 +21,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 from pyspark.sql.window import Window
 
+# admit_new_documents' near-dup screen: word 12-shingles, 64 MinHash
+# permutations in 32 bands, containment threshold 0.5
+_SHINGLE_K = 12
+_NUM_PERM = 64
+_BANDS = 32
+_THRESHOLD = 0.5
 
-def exact_dedup_stream(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+
+def exact_dedup_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Admit only the first document per content digest within the
     watermark horizon. Output keeps the original columns plus `digest`.
 
@@ -36,8 +38,8 @@ def exact_dedup_stream(
     document rate, not stream lifetime.
     """
     return (
-        stream.withColumn("digest", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
+        stream.withColumn("digest", F.md5(F.col("text")))
+        .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["digest"])
     )
 
@@ -46,8 +48,6 @@ def merge_into_digest_table(
     spark: SparkSession,
     new_docs: DataFrame,
     digest_table_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Incremental exact-dedup merge: admit only documents whose content
     digest has never been seen, and persist the new digests.
@@ -80,11 +80,11 @@ def merge_into_digest_table(
     appended files periodically (sinks.compact_small_files).
     """
     candidates = (
-        new_docs.withColumn("digest", F.md5(F.col(text_col)))
+        new_docs.withColumn("digest", F.md5(F.col("text")))
         .withColumn(
             "__rn",
             F.row_number().over(
-                Window.partitionBy("digest").orderBy(F.col(id_col).asc())
+                Window.partitionBy("digest").orderBy(F.col("doc_id").asc())
             ),
         )
         .filter(F.col("__rn") == 1)
@@ -103,7 +103,7 @@ def merge_into_digest_table(
     )
     (
         admitted.select(
-            "digest", F.col(id_col).cast("long").alias("keep_id")
+            "digest", F.col("doc_id").cast("long").alias("keep_id")
         ).write.mode("append").parquet(digest_table_path)
     )
     return admitted
@@ -113,12 +113,6 @@ def admit_new_documents(
     spark: SparkSession,
     new_docs: DataFrame,
     store_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 12,
-    threshold: float = 0.5,
-    num_perm: int = 64,
-    bands: int = 32,
 ) -> DataFrame:
     """Full incremental corpus admission — the production refresh loop that
     merge_into_digest_table is the first stage of:
@@ -127,7 +121,7 @@ def admit_new_documents(
          state — merge_into_digest_table).
       2. NEAR-DUP screen vs the EXISTING corpus: banded-LSH candidates +
          exact n-gram containment (reject new docs whose shingles are
-         >= threshold contained in any historical doc). The historical
+         >= 0.5 contained in any historical doc). The historical
          side is served ENTIRELY from the store's persisted signature and
          posting tables — admission never re-shingles the corpus, so the
          per-batch cost is O(batch) + candidate joins, independent of
@@ -156,13 +150,11 @@ def admit_new_documents(
     sigs_path = f"{store_dir}/sigs"
     postings_path = f"{store_dir}/postings"
 
-    exact_ok = merge_into_digest_table(
-        spark, new_docs, digests, text_col, id_col
-    ).localCheckpoint()
+    exact_ok = merge_into_digest_table(spark, new_docs, digests).localCheckpoint()
     sigs_new = minhash_signatures(
-        exact_ok, text_col, id_col, k, num_perm
+        exact_ok, k=_SHINGLE_K, num_perm=_NUM_PERM
     ).localCheckpoint()
-    postings_new = _hashed_postings(exact_ok, text_col, id_col, k).localCheckpoint()
+    postings_new = _hashed_postings(exact_ok, "text", "doc_id", _SHINGLE_K).localCheckpoint()
 
     try:
         sigs_old = spark.read.parquet(sigs_path)
@@ -176,12 +168,10 @@ def admit_new_documents(
         vs_history = cross_containment_pairs(
             exact_ok,
             exact_ok,  # placeholders: all four index inputs are supplied
-            text_col,
-            id_col,
-            k=k,
-            threshold=threshold,
-            num_perm=num_perm,
-            bands=bands,
+            k=_SHINGLE_K,
+            threshold=_THRESHOLD,
+            num_perm=_NUM_PERM,
+            bands=_BANDS,
             sigs_left=sigs_new,
             sigs_right=sigs_old,
             posting_left=postings_new,
@@ -190,21 +180,19 @@ def admit_new_documents(
         rejected = vs_history.select(F.col("id_l").alias("_rid")).distinct()
     in_batch = minhash_lsh_pairs(
         exact_ok,
-        text_col,
-        id_col,
-        k=k,
-        num_perm=num_perm,
-        bands=bands,
-        threshold=threshold,
+        k=_SHINGLE_K,
+        num_perm=_NUM_PERM,
+        bands=_BANDS,
+        threshold=_THRESHOLD,
         sigs=sigs_new,
         posting=postings_new,
     ).select(F.col("id_b").alias("_rid")).distinct()
     rejected = in_batch if rejected is None else rejected.unionByName(in_batch).distinct()
 
     admitted = exact_ok.join(
-        rejected, exact_ok[id_col] == rejected["_rid"], "left_anti"
+        rejected, exact_ok["doc_id"] == rejected["_rid"], "left_anti"
     ).localCheckpoint()
-    keep_ids = admitted.select(F.col(id_col).alias("id"))
+    keep_ids = admitted.select(F.col("doc_id").alias("id"))
 
     admitted.write.mode("append").parquet(corpus)
     sigs_new.join(keep_ids, "id", "left_semi").write.mode("append").parquet(sigs_path)

@@ -70,8 +70,6 @@ _STATE_SCHEMA = StructType(
 
 def hll_distinct_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    id_col: str = "user_id",
 ) -> DataFrame:
     """Per-key running distinct-count snapshots over an id stream.
 
@@ -120,11 +118,11 @@ def hll_distinct_stream(
 
     pre = (
         stream.filter(
-            F.col(key_col).isNotNull() & F.col(id_col).isNotNull()
+            F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
         ).select(
-            F.col(key_col).alias("event_type"),
-            hll.idx_col(F.col(id_col)).alias("idx"),
-            hll.rho_col(F.col(id_col)).alias("rho"),
+            F.col("event_type").alias("event_type"),
+            hll.idx_col(F.col("user_id")).alias("idx"),
+            hll.rho_col(F.col("user_id")).alias("rho"),
         )
     )
     return pre.groupBy("event_type").applyInPandasWithState(

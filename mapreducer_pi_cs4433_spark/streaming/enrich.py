@@ -33,8 +33,6 @@ from pyspark.sql import DataFrame
 def cluster_assign_stream(
     stream: DataFrame,
     centroids: list[tuple[int, list[int]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Assign each streamed vector to its nearest centroid (exact int64
     squared distance on the micro-unit grid, ties to the lower cluster
@@ -60,14 +58,14 @@ def cluster_assign_stream(
         )
         cn = (cmat * cmat).sum(axis=1)
         for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
+            pdf = pdf[pdf["embedding"].notna()]
             if not len(pdf):
                 continue
             m = np.stack(
                 [
                     np.floor(np.asarray(v, dtype=np.float64) * 1_000_000)
                     .astype(np.int64)
-                    for v in pdf[vec_col]
+                    for v in pdf["embedding"]
                 ]
             )
             d2 = (
@@ -78,7 +76,7 @@ def cluster_assign_stream(
             idx = d2.argmin(axis=1)  # first minimum = lowest cl on ties
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf[id_col].to_numpy(),
+                    "vec_id": pdf["vec_id"].to_numpy(),
                     "cl": cls[idx],
                     "d": d2[np.arange(len(idx)), idx],
                 }

@@ -67,20 +67,19 @@ _FUNNEL_STATE_SCHEMA = StructType(
 
 _KINDS = {"view": 0, "click": 1, "purchase": 2}
 
+# a stage counts only within one day of the stage before it
+_WINDOW_S = 86_400
+
 
 def funnel_stateful(
     stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    window_seconds: int = 86_400,
     watermark: str = "1 second",
 ) -> DataFrame:
     """Stage-anchored funnel over a streaming event feed; see module
     docstring for the ordered-replay contract."""
     import pandas as pd
 
-    w = int(window_seconds)
+    w = _WINDOW_S
 
     def update(key, pdf_iter, state: GroupState):
         (user,) = key
@@ -148,12 +147,12 @@ def funnel_stateful(
         *[x for k, v in _KINDS.items() for x in (F.lit(k), F.lit(v))]
     )
     prepared = (
-        stream.withWatermark(ts_col, watermark)
-        .filter(F.col(type_col).isin(*_KINDS))
+        stream.withWatermark("ts", watermark)
+        .filter(F.col("event_type").isin(*_KINDS))
         .select(
-            F.col(user_col).cast("long").alias("user_id"),
-            F.col(ts_col).alias("__ts"),
-            kind_map[F.col(type_col)].cast("int").alias("__kind"),
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("ts").alias("__ts"),
+            kind_map[F.col("event_type")].cast("int").alias("__kind"),
         )
     )
     return prepared.groupBy("user_id").applyInPandasWithState(

@@ -81,9 +81,6 @@ CELL_ROWS_SCHEMA = StructType(
 
 def hll_day_cell_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    id_col: str = "user_id",
-    ts_col: str = "ts",
     watermark: str = "2 days",
 ) -> DataFrame:
     """Per-(event_type, day) HLL register cells, emitted ONCE per cell
@@ -93,20 +90,20 @@ def hll_day_cell_stream(
     have a row, as in the batch twin."""
     pre = (
         stream.filter(
-            F.col(key_col).isNotNull()
-            & F.col(id_col).isNotNull()
-            & F.col(ts_col).isNotNull()
+            F.col("event_type").isNotNull()
+            & F.col("user_id").isNotNull()
+            & F.col("ts").isNotNull()
         )
         .select(
-            F.col(ts_col).alias("__ts"),
-            F.col(key_col).alias("event_type"),
+            F.col("ts").alias("__ts"),
+            F.col("event_type").alias("event_type"),
             # UTC epoch day — shares the watermark's clock exactly
             F.date_from_unix_date(
-                F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400))
+                F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400))
                 .cast("int")
             ).alias("day"),
-            hll.idx_col(F.col(id_col)).alias("idx"),
-            hll.rho_col(F.col(id_col)).alias("rho"),
+            hll.idx_col(F.col("user_id")).alias("idx"),
+            hll.rho_col(F.col("user_id")).alias("rho"),
         )
         .withWatermark("__ts", watermark)
     )

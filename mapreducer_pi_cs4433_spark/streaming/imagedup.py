@@ -62,8 +62,6 @@ def match_and_register_batch(
     batch_media: DataFrame,
     state_path: str,
     batch_id: int,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> None:
     """Fold one image batch into the hash index and append the pairs it
     forms (within itself and against all prior batches). Idempotent per
@@ -76,8 +74,8 @@ def match_and_register_batch(
     # the first-writer-wins rule the cross-batch guard applies between
     # batches. Without it, two payloads under one id would register two
     # hash rows and every later match against that id would double.
-    batch_media = batch_media.groupBy(id_col).agg(
-        F.expr(f"min_by({payload_col}, md5({payload_col}))").alias(payload_col)
+    batch_media = batch_media.groupBy("media_id").agg(
+        F.expr("min_by(payload, md5(payload))").alias("payload")
     )
 
     hist = partstore.read_parts(spark, state_path, "hashes", batch_id)
@@ -85,18 +83,14 @@ def match_and_register_batch(
         # first-writer-wins id guard: an id already committed (a
         # re-crawl past the digest horizon, or the same id re-sent with
         # changed bytes) must not register a second hash row
-        batch_ids = batch_media.select(F.col(id_col).alias("media_id")).distinct()
+        batch_ids = batch_media.select("media_id").distinct()
         colliding = hist.select("media_id").join(F.broadcast(batch_ids), "media_id")
         batch_media = batch_media.join(
-            F.broadcast(colliding.withColumnRenamed("media_id", id_col)),
-            id_col,
-            "left_anti",
+            F.broadcast(colliding), "media_id", "left_anti"
         )
 
     hashed = ahash_features(
-        batch_media.select(
-            F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
-        )
+        batch_media.select("media_id", "payload")
     ).localCheckpoint()  # three consumers below: within-join x2 + write
 
     # within-batch pairs: the batch operator's OWN pair join (shared
@@ -137,27 +131,18 @@ def match_and_register_batch(
     )
 
 
-def compact_index(
-    spark: SparkSession, state_path: str, target_partitions: int = 4
-) -> int:
+def compact_index(spark: SparkSession, state_path: str) -> int:
     """Fold committed batches below the newest into one segment per
     kind — ``partstore.compact`` with this store's layout."""
-    return partstore.compact(
-        spark, state_path, _KINDS, "pairs", target_partitions
-    )
+    return partstore.compact(spark, state_path, _KINDS, "pairs", 4)
 
 
 def image_ingest_stream(
     stream: DataFrame,
     state_path: str,
     checkpoint: str,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    ts_col: str = "ts",
     watermark: str = "1 hour",
-    drop_exact_dups: bool = True,
     compact_every: int | None = None,
-    compact_target_partitions: int = 4,
 ):
     """Wire an image stream into the near-dup ingest sink; returns the
     started StreamingQuery (caller owns trigger/termination). Options
@@ -166,34 +151,23 @@ def image_ingest_stream(
     ``compact_every=N`` auto-folds the index once more than N live
     per-batch parts accumulate."""
     os.makedirs(state_path, exist_ok=True)
-    prepared = stream
-    if drop_exact_dups:
-        prepared = (
-            prepared.withColumn("__digest", F.md5(F.col(payload_col)))
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["__digest"])
-            .drop("__digest")
-        )
+    prepared = (
+        stream.withColumn("__digest", F.md5(F.col("payload")))
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(["__digest"])
+        .drop("__digest")
+    )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         match_and_register_batch(
-            batch_df.sparkSession,
-            batch_df,
-            state_path,
-            batch_id,
-            id_col=id_col,
-            payload_col=payload_col,
+            batch_df.sparkSession, batch_df, state_path, batch_id
         )
         if compact_every is not None and partstore.auto_compact_due(
             state_path, "pairs", compact_every
         ):
-            compact_index(
-                batch_df.sparkSession,
-                state_path,
-                target_partitions=compact_target_partitions,
-            )
+            compact_index(batch_df.sparkSession, state_path)
 
     return (
         prepared.writeStream.foreachBatch(_sink)

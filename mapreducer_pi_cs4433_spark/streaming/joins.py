@@ -24,11 +24,8 @@ def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     span_seconds: int = 3600,
     watermark: str = "1 hour",
-    how: str = "inner",
 ) -> DataFrame:
     """Join two STREAMING DataFrames on `key` where the right event falls
     within ± span_seconds of the left event's time.
@@ -42,20 +39,17 @@ def interval_join_streams(
     both sides, the engine drops left state older than W + span and right
     state older than W + span. Without the range condition a stream-stream
     join is unbounded-state and Spark (correctly) refuses append mode.
-
-    how: 'inner' | 'leftOuter' — outer rows emit only after the watermark
-    passes their eviction bound (that delay is inherent to streaming outer
-    joins, not an implementation choice).
+    Both sides carry their event time in ``ts``.
     """
-    lw = left.withWatermark(left_ts, watermark)
+    lw = left.withWatermark("ts", watermark)
     renamed = right.select(
         *[F.col(c).alias(f"r_{c}") for c in right.columns]
     )
-    rw = renamed.withWatermark(f"r_{right_ts}", watermark)
+    rw = renamed.withWatermark("r_ts", watermark)
     span = F.expr(f"INTERVAL {int(span_seconds)} SECONDS")
     cond = (
         (F.col(key) == F.col(f"r_{key}"))
-        & (F.col(f"r_{right_ts}") >= F.col(left_ts) - span)
-        & (F.col(f"r_{right_ts}") <= F.col(left_ts) + span)
+        & (F.col("r_ts") >= F.col("ts") - span)
+        & (F.col("r_ts") <= F.col("ts") + span)
     )
-    return lw.join(rw, cond, how)
+    return lw.join(rw, cond, "inner")

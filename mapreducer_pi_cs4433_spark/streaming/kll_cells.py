@@ -80,9 +80,6 @@ _STATE_SCHEMA = StructType(
 
 def kll_day_cell_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    id_ts_col: str = "ts",
-    value_col: str = "value",
     watermark: str = "2 days",
     cap: int = kll.DEFAULT_CAP,
 ) -> DataFrame:
@@ -114,7 +111,7 @@ def kll_day_cell_stream(
             return
         sk = kll.restore(*state.get, cap=cap) if state.exists else kll.new_sketch()
         for pdf in pdf_iter:
-            kll.add_many(sk, pdf[value_col].to_numpy(), cap=cap)
+            kll.add_many(sk, pdf["value"].to_numpy(), cap=cap)
         state.update(kll.to_state(sk))
         # closure = watermark reaching the first instant AFTER day d;
         # always legal: delivered d-rows have ts < (d+1)-midnight, so
@@ -123,18 +120,18 @@ def kll_day_cell_stream(
 
     pre = (
         stream.filter(
-            F.col(key_col).isNotNull()
-            & F.col(value_col).isNotNull()
-            & F.col(id_ts_col).isNotNull()
+            F.col("event_type").isNotNull()
+            & F.col("value").isNotNull()
+            & F.col("ts").isNotNull()
         )
         .select(
-            F.col(id_ts_col).alias("__ts"),
-            F.col(key_col).alias("event_type"),
+            F.col("ts").alias("__ts"),
+            F.col("event_type").alias("event_type"),
             # UTC epoch day — shares the watermark's clock exactly
-            F.floor(F.unix_timestamp(F.col(id_ts_col)) / F.lit(86400))
+            F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400))
             .cast("int")
             .alias("day"),
-            F.col(value_col).cast("double").alias(value_col),
+            F.col("value").cast("double").alias("value"),
         )
         .withWatermark("__ts", watermark)
     )

@@ -74,8 +74,6 @@ _STATE_SCHEMA = StructType(
 
 def kmv_distinct_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    id_col: str = "user_id",
     k: int = kmv.K,
 ) -> DataFrame:
     """Per-key running KMV snapshots over an id stream (SNAPSHOT_SCHEMA,
@@ -120,10 +118,10 @@ def kmv_distinct_stream(
         )
 
     pre = stream.filter(
-        F.col(key_col).isNotNull() & F.col(id_col).isNotNull()
+        F.col("event_type").isNotNull() & F.col("user_id").isNotNull()
     ).select(
-        F.col(key_col).alias("event_type"),
-        kmv.h_col(F.col(id_col)).alias("h"),
+        F.col("event_type").alias("event_type"),
+        kmv.h_col(F.col("user_id")).alias("h"),
     )
     return pre.groupBy("event_type").applyInPandasWithState(
         update,

@@ -72,15 +72,11 @@ def _band(late_s: int) -> str:
 
 def late_arrival_tagger(
     stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    watermark: str = "30 days",
 ) -> DataFrame:
     """Tag every event with its lateness (seconds + band) against the
     per-user running event-time max in arrival order; append-mode.
 
-    The generous default watermark reflects the operator's purpose: it
+    The generous 30-day watermark reflects the operator's purpose: it
     MEASURES lateness rather than enforcing a tolerance, so it must see
     the late events a tighter watermark would drop (the census built on
     its output is precisely how that tighter watermark gets chosen).
@@ -112,12 +108,12 @@ def late_arrival_tagger(
         if cur is not None:
             state.update((cur,))
 
-    prepared = stream.withWatermark(ts_col, watermark).select(
+    prepared = stream.withWatermark("ts", "30 days").select(
         # cast like the attribution/conversion siblings: an int32 id
         # column would otherwise Arrow-mismatch LATENESS_SCHEMA's longs
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("__ts"),
-        F.col(id_col).cast("long").alias("__id"),
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("ts").alias("__ts"),
+        F.col("event_id").cast("long").alias("__id"),
         "event_type",
     )
     return prepared.groupBy("user_id").applyInPandasWithState(

@@ -96,9 +96,6 @@ def merge_cdc_batch(
     spark: SparkSession,
     batch: DataFrame,
     state_path: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    version_col: str = "event_id",
     batch_id: int | None = None,
 ) -> int:
     """Fold one batch of change rows into the state table; returns the new
@@ -117,10 +114,10 @@ def merge_cdc_batch(
         return latest_version(state_path)  # crash-replay: already folded
     compact = (
         batch.select(
-            F.col(key_col).alias("k"),
+            F.col("user_id").alias("k"),
             F.struct(
-                F.col(ts_col).alias("ts"),
-                F.col(version_col).alias("vid"),
+                F.col("ts").alias("ts"),
+                F.col("event_id").alias("vid"),
                 F.col("event_type"),
                 F.round(F.col("value") * 100).cast("long").alias("v_centi"),
             ).alias("cur"),
@@ -166,9 +163,6 @@ def apply_cdc_stream(
     stream: DataFrame,
     state_path: str,
     checkpoint: str,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    version_col: str = "event_id",
 ):
     """Wire a change stream into the merge sink; returns the started
     StreamingQuery (caller owns trigger/termination)."""
@@ -178,13 +172,7 @@ def apply_cdc_stream(
         if batch_df.isEmpty():
             return
         merge_cdc_batch(
-            batch_df.sparkSession,
-            batch_df,
-            state_path,
-            key_col=key_col,
-            ts_col=ts_col,
-            version_col=version_col,
-            batch_id=batch_id,
+            batch_df.sparkSession, batch_df, state_path, batch_id=batch_id
         )
 
     return (

@@ -86,13 +86,17 @@ from ..functions.dedup import (
 
 _PAIR_SCHEMA = "id_a long, id_b long, jaccard double"
 
+# word 12-shingles, 64 MinHash permutations in 16 bands, Jaccard >= 0.5
+_SHINGLE_K = 12
+_NUM_PERM = 64
+_BANDS = 16
+_THRESHOLD = 0.5
+
 # the index tables this module keeps in its partstore directory
 _INDEX_KINDS = ("pairs", "sigs", "banded", "postings")
 
 
-def compact_index(
-    spark: SparkSession, state_path: str, target_partitions: int = 8
-) -> int:
+def compact_index(spark: SparkSession, state_path: str) -> int:
     """Compact the per-batch index parts into one segment per state
     table — the maintenance task the module header prescribes (small
     per-batch files accumulate exactly like any streaming sink's; the
@@ -100,9 +104,7 @@ def compact_index(
     batch probes it once). Protocol and crash-window analysis:
     ``partstore.compact``. Reads _INDEX_KINDS at call time (the
     crash-between-kinds tests monkeypatch it)."""
-    return partstore.compact(
-        spark, state_path, _INDEX_KINDS, "pairs", target_partitions
-    )
+    return partstore.compact(spark, state_path, _INDEX_KINDS, "pairs", 8)
 
 
 def read_emitted_pairs(spark: SparkSession, state_path: str) -> DataFrame:
@@ -120,12 +122,6 @@ def match_and_register_batch(
     batch_docs: DataFrame,
     state_path: str,
     batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 12,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
 ) -> None:
     """Fold one document batch into the near-dup index and append the
     verified pairs it forms (within itself and against all prior
@@ -140,18 +136,18 @@ def match_and_register_batch(
     # committed batch is a restarted query pointed at an old state dir,
     # never a crash-replay — enforced by the shared store protocol.
     partstore.check_lineage(state_path, "pairs", batch_id)
-    rows_per_band = num_perm // bands
+    rows_per_band = _NUM_PERM // _BANDS
 
-    # WITHIN-batch id uniqueness: two rows with the same
-    # doc_id in ONE batch (drop_exact_dups=False, or distinct texts under
-    # one id) would otherwise slip past the committed-index guard below
-    # and register a MERGED union-document — _hashed_postings would pool
+    # WITHIN-batch id uniqueness: two rows with the same doc_id in ONE
+    # batch (distinct texts under one id) would otherwise slip past the
+    # committed-index guard below and register a MERGED union-document
+    # — _hashed_postings would pool
     # both texts' shingles under the id, so every later jaccard against
     # it matches neither version. Pick one deterministically (min text
     # digest: stable under retries and partitioning), matching the
     # first-writer-wins semantics of the cross-batch guard.
-    batch_docs = batch_docs.groupBy(id_col).agg(
-        F.expr(f"min_by({text_col}, md5({text_col}))").alias(text_col)
+    batch_docs = batch_docs.groupBy("doc_id").agg(
+        F.expr("min_by(text, md5(text))").alias("text")
     )
 
     hist_banded = partstore.read_parts(spark, state_path, "banded", batch_id)
@@ -161,9 +157,9 @@ def match_and_register_batch(
     if hist_sigs is not None:
         # First-writer-wins id guard: a doc_id already in the
         # committed index (a byte-identical re-crawl arriving past the
-        # digest layer's watermark horizon, drop_exact_dups=False, or the
-        # same id re-sent with changed text) must NOT register a second
-        # sigs/postings copy — duplicate posting rows inflate
+        # digest layer's watermark horizon, or the same id re-sent with
+        # changed text) must NOT register a second sigs/postings copy —
+        # duplicate posting rows inflate
         # verify_exact_jaccard's n_common and size counts, silently
         # corrupting every later jaccard involving that doc and breaking
         # the batch-equivalence contract. doc_ids are a table's identity
@@ -173,21 +169,21 @@ def match_and_register_batch(
         # semi-joined against the BROADCAST batch ids (batch-sized
         # output), then a broadcast anti-join back onto the batch — the
         # corpus side is never shuffled.
-        batch_ids = batch_docs.select(F.col(id_col).alias("id")).distinct()
+        batch_ids = batch_docs.select(F.col("doc_id").alias("id")).distinct()
         colliding = hist_sigs.select("id").join(F.broadcast(batch_ids), "id")
         batch_docs = batch_docs.join(
-            F.broadcast(colliding.select(F.col("id").alias(id_col))),
-            id_col,
+            F.broadcast(colliding.select(F.col("id").alias("doc_id"))),
+            "doc_id",
             "left_anti",
         )
 
     # batch-sized derived tables, each consumed by several joins below:
     # materialize once (localCheckpoint) — the multi-consumer invariant
     sigs_b = minhash_signatures(
-        batch_docs, text_col, id_col, k, num_perm
+        batch_docs, k=_SHINGLE_K, num_perm=_NUM_PERM
     ).localCheckpoint()
-    post_b = _hashed_postings(batch_docs, text_col, id_col, k).localCheckpoint()
-    banded_b = _banded_keys(sigs_b, bands, rows_per_band).localCheckpoint()
+    post_b = _hashed_postings(batch_docs, "text", "doc_id", _SHINGLE_K).localCheckpoint()
+    banded_b = _banded_keys(sigs_b, _BANDS, rows_per_band).localCheckpoint()
 
     # candidates WITHIN the batch: the batch operator's banded self-join
     lb = banded_b.select("band", "bkey", F.col("id").alias("id_a"))
@@ -236,18 +232,18 @@ def match_and_register_batch(
     # agreement floor, 64-term codegen sum (no array HOF)
     est_floor = max(
         0.0,
-        threshold - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
+        _THRESHOLD - 4.0 * math.sqrt(_THRESHOLD * (1.0 - _THRESHOLD) / _NUM_PERM),
     )
     agree = sum(
         F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-        for i in range(num_perm)
+        for i in range(_NUM_PERM)
     )
     ga = all_sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     gb = all_sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     candidates = (
         candidates.join(ga, "id_a")
         .join(gb, "id_b")
-        .filter(agree >= math.ceil(est_floor * num_perm))
+        .filter(agree >= math.ceil(est_floor * _NUM_PERM))
         .select("id_a", "id_b")
     )
 
@@ -255,7 +251,7 @@ def match_and_register_batch(
     # math via the SHARED helper (one definition of the "same math as
     # ngram_jaccard_pairs" contract), restricted to this batch's
     # candidates
-    pairs = verify_exact_jaccard(candidates, all_post, threshold)
+    pairs = verify_exact_jaccard(candidates, all_post, _THRESHOLD)
 
     # pairs first, then the index parts: a crash anywhere re-runs the
     # whole batch and overwrites every directory identically
@@ -277,25 +273,16 @@ def neardup_ingest_stream(
     stream: DataFrame,
     state_path: str,
     checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ts_col: str = "ts",
     watermark: str = "1 hour",
-    k: int = 12,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    drop_exact_dups: bool = True,
     compact_every: int | None = None,
-    compact_target_partitions: int = 8,
 ):
     """Wire a document stream into the near-dup ingest sink; returns the
     started StreamingQuery (caller owns trigger/termination).
 
-    ``drop_exact_dups`` turns on the watermark-bounded digest layer:
-    byte-identical re-arrivals inside the horizon are suppressed BEFORE
-    the MinHash path (they are exact dups, not near-dups — the batch
-    twin of that layer is dedup_exact / merge_into_digest_table).
+    The watermark-bounded digest layer suppresses byte-identical
+    re-arrivals inside the horizon BEFORE the MinHash path (they are
+    exact dups, not near-dups — the batch twin of that layer is
+    dedup_exact / merge_into_digest_table).
 
     ``compact_every=N`` turns on auto-compaction: once more than N
     committed per-batch parts sit above the current segment's coverage,
@@ -303,44 +290,28 @@ def neardup_ingest_stream(
     commit. The trigger counts LIVE parts (not batch ids), so empty
     batches and replays don't skew the cadence, and the steady-state
     part count per state table is bounded at N per-batch dirs plus one
-    segment of ``compact_target_partitions`` files. The hook inherits
-    the compactor's whole crash protocol — a crash mid-hook replays the
-    batch, whose re-run excludes its own dirs and finishes straggler
-    kinds — because the hook IS the offline call, just scheduled at the
+    compacted segment. The hook inherits the compactor's whole crash
+    protocol — a crash mid-hook replays the batch, whose re-run excludes
+    its own dirs and finishes straggler kinds — because the hook IS the offline call, just scheduled at the
     one point in a trigger cycle with no concurrent history reader."""
     os.makedirs(state_path, exist_ok=True)
-    prepared = stream
-    if drop_exact_dups:
-        prepared = (
-            prepared.withColumn("__digest", F.md5(F.col(text_col)))
-            .withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["__digest"])
-            .drop("__digest")
-        )
+    prepared = (
+        stream.withColumn("__digest", F.md5(F.col("text")))
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(["__digest"])
+        .drop("__digest")
+    )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         match_and_register_batch(
-            batch_df.sparkSession,
-            batch_df,
-            state_path,
-            batch_id,
-            text_col=text_col,
-            id_col=id_col,
-            k=k,
-            num_perm=num_perm,
-            bands=bands,
-            threshold=threshold,
+            batch_df.sparkSession, batch_df, state_path, batch_id
         )
         if compact_every is not None and partstore.auto_compact_due(
             state_path, "pairs", compact_every
         ):
-            compact_index(
-                batch_df.sparkSession,
-                state_path,
-                target_partitions=compact_target_partitions,
-            )
+            compact_index(batch_df.sparkSession, state_path)
 
     return (
         prepared.writeStream.foreachBatch(_sink)

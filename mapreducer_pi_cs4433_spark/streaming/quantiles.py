@@ -66,8 +66,6 @@ _STATE_SCHEMA = StructType(
 
 def kll_quantile_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
     cap: int = kll.DEFAULT_CAP,
 ) -> DataFrame:
     """Per-key running quantile snapshots over a value stream.
@@ -84,7 +82,7 @@ def kll_quantile_stream(
         sk = kll.restore(*state.get, cap=cap) if state.exists else kll.new_sketch()
         got = 0
         for pdf in pdf_iter:
-            vals = pdf[value_col].to_numpy()
+            vals = pdf["value"].to_numpy()
             got += len(vals)
             kll.add_many(sk, vals, cap=cap)
         if not got:
@@ -109,10 +107,10 @@ def kll_quantile_stream(
     # key and value, matching the batch twin (events_quantile_sketch_kll
     # filters event_type IS NOT NULL) and sibling hll_distinct_stream
     pre = stream.filter(
-        F.col(value_col).isNotNull() & F.col(key_col).isNotNull()
+        F.col("value").isNotNull() & F.col("event_type").isNotNull()
     ).select(
-        F.col(key_col).alias("event_type"),
-        F.col(value_col).cast("double").alias(value_col),
+        F.col("event_type").alias("event_type"),
+        F.col("value").cast("double").alias("value"),
     )
     return pre.groupBy("event_type").applyInPandasWithState(
         update,

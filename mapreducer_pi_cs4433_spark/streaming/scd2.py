@@ -69,10 +69,6 @@ _SCD2_STATE_SCHEMA = StructType(
 
 def scd2_history_stream(
     changes: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    version_col: str = "event_id",
-    state_col: str = "event_type",
     watermark: str = "1 second",
 ) -> DataFrame:
     """Closed SCD2 validity intervals from a streaming change log; see
@@ -142,12 +138,12 @@ def scd2_history_stream(
             )
 
     prepared = (
-        changes.withWatermark(ts_col, watermark)
+        changes.withWatermark("ts", watermark)
         .select(
-            F.col(key_col).cast("long").alias("user_id"),
-            F.col(ts_col).alias("__ts"),
-            F.col(version_col).cast("long").alias("__eid"),
-            F.col(state_col).cast("string").alias("__state"),
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("ts").alias("__ts"),
+            F.col("event_id").cast("long").alias("__eid"),
+            F.col("event_type").cast("string").alias("__state"),
         )
     )
     return prepared.groupBy("user_id").applyInPandasWithState(

@@ -47,8 +47,6 @@ _STATE_SCHEMA = StructType(
 
 def sessionize(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap: str = "30 minutes",
 ) -> DataFrame:
     """Gap-based sessions via the built-in session window (batch or
@@ -56,8 +54,8 @@ def sessionize(
     SESSION_SCHEMA plus nothing else — downstream joins stay narrow."""
     return (
         events.groupBy(
-            F.col(user_col).alias("user_id"),
-            F.session_window(F.col(ts_col), gap).alias("w"),
+            F.col("user_id").alias("user_id"),
+            F.session_window(F.col("ts"), gap).alias("w"),
         )
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -71,8 +69,6 @@ def sessionize(
 
 def sessionize_stateful(
     stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_seconds: int = 1800,
     flush_timeout_seconds: int | None = None,
 ) -> DataFrame:
@@ -144,8 +140,8 @@ def sessionize_stateful(
             )
 
     prepared = stream.select(
-        F.col(user_col).cast("long").alias("user_id"),
-        F.col(ts_col).alias("__ts"),
+        F.col("user_id").cast("long").alias("user_id"),
+        F.col("ts").alias("__ts"),
     )
     return prepared.groupBy("user_id").applyInPandasWithState(
         update,

@@ -108,9 +108,6 @@ def _load_cells(days, regs):
 
 def hll_sliding_distinct_stream(
     stream: DataFrame,
-    key_col: str = "event_type",
-    id_col: str = "user_id",
-    ts_col: str = "ts",
     win_days: int = 7,
     watermark: str = "2 days",
     max_future_skew: str | None = None,
@@ -236,32 +233,32 @@ def hll_sliding_distinct_stream(
         # BEFORE withWatermark: a dropped row must never have advanced
         # the watermark it is being judged against
         stream = stream.filter(
-            F.col(ts_col)
+            F.col("ts")
             <= F.expr(f"current_timestamp() + interval {max_future_skew}")
         )
     pre = (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("ts", watermark)
         .filter(
-            F.col(key_col).isNotNull()
-            & F.col(id_col).isNotNull()
-            & F.col(ts_col).isNotNull()
+            F.col("event_type").isNotNull()
+            & F.col("user_id").isNotNull()
+            & F.col("ts").isNotNull()
         )
         .select(
-            F.col(key_col).alias("event_type"),
+            F.col("event_type").alias("event_type"),
             # day MUST share the watermark's clock: getCurrentWatermarkMs
             # is UTC epoch ms, so the cell day is the UTC epoch day
             # (unix_timestamp of an instant is session-tz-independent).
             # A to_date()-derived day drifts one day off in non-UTC
             # sessions and breaks the eviction invariant exactly at the
             # window edge.
-            F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400))
+            F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400))
             .cast("int")
             .alias("day"),
-            hll.idx_col(F.col(id_col)).alias("idx"),
-            hll.rho_col(F.col(id_col)).alias("rho"),
+            hll.idx_col(F.col("user_id")).alias("idx"),
+            hll.rho_col(F.col("user_id")).alias("rho"),
             # the watermarked column must reach the stateful operator or
             # Spark rejects EventTimeTimeout; update() never reads it
-            F.col(ts_col).alias("__ts"),
+            F.col("ts").alias("__ts"),
         )
     )
     return pre.groupBy("event_type").applyInPandasWithState(

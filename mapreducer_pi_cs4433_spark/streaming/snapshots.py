@@ -103,8 +103,6 @@ def _year_end_ms(y: int) -> int:
 
 def hll_year_snapshot_stream(
     stream: DataFrame,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
     watermark: str = "30 days",
     shards: int = 8,
 ) -> DataFrame:
@@ -177,13 +175,13 @@ def hll_year_snapshot_stream(
 
     pre = (
         stream.filter(
-            F.col(key_col).isNotNull() & F.col(date_col).isNotNull()
+            F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull()
         )
         .select(
-            F.col(date_col).cast("timestamp").alias("__ts"),
-            F.year(F.col(date_col)).alias("y"),
-            hll.idx_col(F.col(key_col)).alias("idx"),
-            hll.rho_col(F.col(key_col)).alias("rho"),
+            F.col("o_orderdate").cast("timestamp").alias("__ts"),
+            F.year(F.col("o_orderdate")).alias("y"),
+            hll.idx_col(F.col("o_custkey")).alias("idx"),
+            hll.rho_col(F.col("o_custkey")).alias("rho"),
         )
         .withColumn("shard", F.pmod(F.col("idx"), F.lit(int(shards))))
         .withWatermark("__ts", watermark)
@@ -238,8 +236,6 @@ def write_year_snapshots(batch_df: DataFrame, path: str) -> None:
 def repair_hll_year_snapshots(
     late_df: DataFrame,
     path: str,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
 ) -> None:
     """Batch BACKFILL for the writers' watermark trade: rows later than
     ``watermark`` past their period's end are discarded before the
@@ -258,12 +254,12 @@ def repair_hll_year_snapshots(
     spark = late_df.sparkSession
     late = (
         late_df.filter(
-            F.col(key_col).isNotNull() & F.col(date_col).isNotNull()
+            F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull()
         )
         .select(
-            F.year(F.col(date_col)).alias("y"),
-            hll.idx_col(F.col(key_col)).alias("idx"),
-            hll.rho_col(F.col(key_col)).alias("rho"),
+            F.year(F.col("o_orderdate")).alias("y"),
+            hll.idx_col(F.col("o_custkey")).alias("idx"),
+            hll.rho_col(F.col("o_custkey")).alias("rho"),
         )
         .groupBy("y", "idx")
         .agg(F.max("rho").alias("reg"))
@@ -327,8 +323,6 @@ _KMV_STATE_SCHEMA = StructType(
 
 def kmv_year_snapshot_stream(
     stream: DataFrame,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
     watermark: str = "30 days",
     k: int = kmv.K,
     shards: int = 8,
@@ -375,12 +369,12 @@ def kmv_year_snapshot_stream(
 
     pre = (
         stream.filter(
-            F.col(key_col).isNotNull() & F.col(date_col).isNotNull()
+            F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull()
         )
         .select(
-            F.col(date_col).cast("timestamp").alias("__ts"),
-            F.year(F.col(date_col)).alias("y"),
-            kmv.h_col(F.col(key_col)).alias("h"),
+            F.col("o_orderdate").cast("timestamp").alias("__ts"),
+            F.year(F.col("o_orderdate")).alias("y"),
+            kmv.h_col(F.col("o_custkey")).alias("h"),
         )
         .withColumn("shard", F.pmod(F.col("h"), F.lit(int(shards))))
         .withWatermark("__ts", watermark)
@@ -433,8 +427,6 @@ def read_kmv_year_samples(spark, path: str) -> DataFrame:
 def repair_kmv_year_samples(
     late_df: DataFrame,
     path: str,
-    key_col: str = "o_custkey",
-    date_col: str = "o_orderdate",
     k: int = kmv.K,
 ) -> None:
     """KMV twin of repair_hll_year_snapshots: fold late rows' hashes
@@ -445,11 +437,11 @@ def repair_kmv_year_samples(
     spark = late_df.sparkSession
     late = (
         late_df.filter(
-            F.col(key_col).isNotNull() & F.col(date_col).isNotNull()
+            F.col("o_custkey").isNotNull() & F.col("o_orderdate").isNotNull()
         )
         .select(
-            F.year(F.col(date_col)).alias("y"),
-            kmv.h_col(F.col(key_col)).alias("h"),
+            F.year(F.col("o_orderdate")).alias("y"),
+            kmv.h_col(F.col("o_custkey")).alias("h"),
         )
         .distinct()
     )

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 def windowed_rollup(
     events: DataFrame,
-    ts_col: str = "ts",
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
@@ -37,8 +36,8 @@ def windowed_rollup(
     aggregate exact, as in the batch twin.
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("win"), "event_type")
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("win"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)"))
@@ -56,8 +55,6 @@ def windowed_rollup(
 
 def last_access_state(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     watermark: str = "1 day",
 ) -> DataFrame:
     """Per-user running max event time (Task G job 1, unbounded).
@@ -67,9 +64,9 @@ def last_access_state(
     tolerance instead of keeping unbounded reorder buffers.
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.col(user_col).alias("user_id"))
-        .agg(F.max(ts_col).alias("last_ts"))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.col("user_id").alias("user_id"))
+        .agg(F.max("ts").alias("last_ts"))
     )
 
 
@@ -78,7 +75,6 @@ def stale_users_snapshot(
     last_state: DataFrame,
     ref_ts,
     days: int = 14,
-    user_key: str = "c_custkey",
 ) -> DataFrame:
     """Apply Task G's staleness predicate (SURVEY traps #3/#4: truncating
     day arithmetic; never-seen users pass) to a materialized last-access
@@ -90,7 +86,7 @@ def stale_users_snapshot(
     )
     return (
         users.join(
-            last_state, users[user_key] == last_state["user_id"], "left"
+            last_state, users["c_custkey"] == last_state["user_id"], "left"
         )
         .filter(F.col("last_ts").isNull() | (age_days >= days))
         .drop("user_id")

@@ -10,7 +10,7 @@ import tempfile
 
 import pytest
 
-from .conftest import REFERENCE_DATA
+from .conftest import REFERENCE_DATA, SF_SMOKE
 
 needs_reference_data = pytest.mark.skipif(
     not os.path.isdir(REFERENCE_DATA), reason="reference data not mounted"
@@ -130,6 +130,24 @@ def test_cli_build_index(tmp_path):
     assert "hnsw ready (500 rows)" in r.stdout
     r2 = run()  # idempotent reuse: same report, no rebuild error
     assert r2.returncode == 0 and "minhash ready (500 rows)" in r2.stdout
+
+
+def test_cli_build_index_rejects_unknown_kind(tmp_path):
+    """A misspelled kind exits 2 naming the valid kinds, and builds
+    nothing — not even the valid kinds listed beside it."""
+    idx = tmp_path / "idx"
+    r = subprocess.run(
+        [sys.executable, "-m", "mapreducer_pi_cs4433_spark.cli",
+         "build-index", SF_SMOKE, "--kinds", "minhash,grpah"],
+        capture_output=True, text=True, timeout=300, cwd=REPO,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2", "PYTHONPATH": REPO,
+             "SPARK_GRAFT_INDEX_DIR": str(idx)},
+    )
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert "unknown kind(s) grpah" in r.stderr
+    assert "minhash" in r.stderr and "layout" in r.stderr
+    assert "ready" not in r.stdout
+    assert not idx.exists() or not any(idx.iterdir())
 
 
 def test_cli_build_index_missing_dir():

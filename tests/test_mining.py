@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from mapreducer_pi_cs4433_spark.functions import dedup
 from mapreducer_pi_cs4433_spark.queries.catalog import QUERIES
-from mapreducer_pi_cs4433_spark.queries.extensions import ensure_pagerank_graph
+from mapreducer_pi_cs4433_spark.queries.extensions import ensure_graph_edges
 from mapreducer_pi_cs4433_spark.queries.mining import (
     _KCORE_K,
     _KCORE_PEELS,
@@ -46,7 +46,7 @@ def test_kcore_peels_converged_on_corpus(spark, sf_dir):
     decomposition, not a truncated approximation."""
     from collections import defaultdict
 
-    sym, _ = ensure_pagerank_graph(spark, sf_dir)
+    sym = ensure_graph_edges(spark, sf_dir)
     adj = defaultdict(set)
     for r in sym.collect():
         adj[r.src].add(r.dst)

@@ -1640,11 +1640,9 @@ def test_kcore_degree_by_dst_equals_degree_by_src(spark):
     symmetrized edge artifact (and any both-endpoint restriction of it)
     yields identical (node, degree) sets grouped by either endpoint —
     the property that made the clustered-layout switch value-safe."""
-    from mapreducer_pi_cs4433_spark.queries.extensions import (
-        ensure_pagerank_graph,
-    )
+    from mapreducer_pi_cs4433_spark.queries.extensions import ensure_graph_edges
 
-    sym, _ = ensure_pagerank_graph(spark, SF_SMOKE)
+    sym = ensure_graph_edges(spark, SF_SMOKE)
     by_src = {
         (r[0], r[1])
         for r in sym.groupBy(F.col("src").alias("n"))

@@ -211,32 +211,6 @@ def test_prop_connected_components_match_union_find(spark, edges):
     assert got == want
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(edges=_cc_edges)
-def test_prop_star_contraction_matches_union_find(spark, edges):
-    """Alternating large-star/small-star contraction must produce the same
-    components as union-find — including on chains, where it converges in
-    O(log n) rounds rather than O(diameter)."""
-    from mapreducer_pi_cs4433_spark.functions.dedup import (
-        connected_components_star,
-    )
-
-    non_loop = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "id_a int, id_b int")
-    got = {(r.id, r.comp) for r in connected_components_star(df).collect()}
-    want = {
-        (n, c)
-        for n, c in _union_find_components(non_loop).items()
-    } if non_loop else set()
-    # star contraction drops isolated self-loop-only nodes (no real edges);
-    # union-find reference restricted to real edges accordingly
-    assert got == want
-
-
 # --- sequence packing invariants over random corpora -------------------------
 _pack_rows = st.lists(
     st.tuples(

@@ -302,7 +302,7 @@ def test_neardup_rejects_foreign_checkpoint_lineage(spark):
 
 def test_neardup_within_batch_duplicate_id_registers_one_doc(spark):
     """Self-review r9: two rows with the SAME doc_id inside one batch
-    (distinct texts, drop_exact_dups=False regime) must not register a
+    (distinct texts under one id) must not register a
     merged union-document — exactly one deterministically-chosen text is
     signed, so the module's id-uniqueness invariant holds within a batch
     too, and the surviving pairs still match the batch operator run on
