@@ -28,6 +28,7 @@ from .functions import similarity as fsim
 from .functions.artifacts import scan_num_rows
 from .operators import social
 from .queries import extensions as qext
+from .queries import mining as qmin
 from .queries import sketches as qsk
 from .queries.catalog import QUERIES
 from .session import get_spark
@@ -69,6 +70,20 @@ _INDEX_STEPS = {
     ],
     "postings": lambda s, d: [
         ("postings", fdedup.ensure_postings(s, _docs(s, d), d, k=qext._SHINGLE_K))
+    ],
+    # the AllPairs prefix index dedup_prefix_filter reads, ranked from
+    # the postings artifact
+    "prefix": lambda s, d: [
+        (
+            "prefix",
+            fdedup.ensure_prefix_index(
+                s,
+                d,
+                fdedup.ensure_postings(s, _docs(s, d), d, k=qext._SHINGLE_K),
+                k=qext._SHINGLE_K,
+                threshold=qmin._PF_THRESHOLD,
+            ),
+        )
     ],
     "posshingle": lambda s, d: [
         ("posshingle", fdedup.ensure_positional_shingles(s, _docs(s, d), d, k=qext._SPAN_K))

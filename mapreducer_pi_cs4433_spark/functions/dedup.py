@@ -10,7 +10,11 @@ Five strategies, each scale-shaped differently:
   only within shingle buckets.
 - minhash_lsh_pairs: MinHash signatures + banded LSH — the *candidate
   generation* layer; candidate pairs are then verified with exact Jaccard,
-  so output precision is exact while cost stays near-linear.
+  so output precision is exact while cost stays near-linear. The LSH
+  operators (this, cross_containment_pairs and the streaming near-dup
+  ingest) take the persisted signature/posting tables and share one
+  candidate generator (_lsh_candidates: band join + signature-agreement
+  gate) and one exact overlap count (_overlap_counts).
 - simhash64: 64-bit SimHash fingerprints; near-dups differ in few bits.
 - embedding_neardup_pairs: cosine >= tau over embedding vectors, bucketed by
   random-hyperplane LSH so the pair join never goes all-pairs.
@@ -75,16 +79,14 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def _hashed_postings(
-    df: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
+def _hashed_postings(df: DataFrame, k: int) -> DataFrame:
     """(id, h) — xxhash64 of each distinct shingle per doc. Hashing BEFORE
     the distinct means the dedup shuffle carries fixed 16-byte (id, h) rows
     instead of (id, k-char string) — ~2x less shuffle volume at k=12, more
     at larger k — and joins compare 8-byte longs; a 64-bit collision would
     perturb one intersection count with probability ~(n_distinct^2)/2^65 —
     negligible."""
-    sh = exploded_shingles(df, text_col, id_col, k)
+    sh = exploded_shingles(df, "text", "doc_id", k)
     return sh.select("id", F.xxhash64("shingle").alias("h")).distinct()
 
 
@@ -112,7 +114,7 @@ def ngram_jaccard_pairs(
     sf0.01, caching was ~5% *slower* (InMemoryRelation breaks codegen
     fusion) and leaked storage across invocations (round-1 finding).
     """
-    posting = _hashed_postings(df, "text", "doc_id", k)
+    posting = _hashed_postings(df, k)
     sizes = posting.groupBy("id").agg(F.count("*").alias("n_sh"))
     a = posting.select(F.col("h"), F.col("id").alias("id_a"))
     b = posting.select(F.col("h").alias("h_b"), F.col("id").alias("id_b"))
@@ -135,29 +137,29 @@ def ngram_jaccard_pairs(
     )
 
 
-def verify_exact_jaccard(
-    candidates: DataFrame, posting: DataFrame, threshold: float
+def _overlap_counts(
+    candidates: DataFrame, posting_a: DataFrame, posting_b: DataFrame
 ) -> DataFrame:
-    """Exact posting-intersection verification of (id_a, id_b) candidate
-    pairs -> (id_a, id_b, jaccard >= threshold). The shared tail of every
-    candidate generator that is NOT the full inverted-index join: the
-    prefix-filter operator and the streaming near-dup ingest both call
-    this (r8 self-review: each had carried its own copy), so the "same
-    exact math as ngram_jaccard_pairs" equivalence the oracles rely on
-    has one definition.
+    """(id_a, id_b, n_common, n_a, n_b) for (id_a, id_b) candidate pairs:
+    the sizes of each doc's distinct shingle-hash set (id_a's from
+    `posting_a`, id_b's from `posting_b`) and of their intersection,
+    keeping only pairs that share a hash. The one exact overlap every
+    candidate generator verifies with: Jaccard (verify_exact_jaccard)
+    and containment (cross_containment_pairs) are int/int divisions of
+    these counts.
 
     r12 (optimization): intersection by per-doc HASH ARRAYS, not posting
     joins. The old shape joined every candidate against the full posting
     stream twice and paid a candidate x posting-list exploded
     intermediate (~16 M rows for 58k candidates at sf0.1) plus its pair
     re-aggregation — measured 7.9 s at sf0.1 where the array form runs
-    the SAME exact math (|A ∩ B| over the distinct-hash sets; one int/int
-    IEEE division) in 0.5 s: postings collapse once to (id, array<h>)
-    rows, each candidate attaches the two arrays by equi-join, and
-    array_intersect sizes the overlap inside the row — no exploded
-    intermediate, no pair re-shuffle. n_common > 0 is kept explicit so a
-    threshold-0 caller still gets only genuinely overlapping pairs, as
-    the join form produced.
+    the SAME exact math (|A ∩ B| over the distinct-hash sets) in 0.5 s:
+    postings collapse once to (id, array<h>) rows, each candidate
+    attaches the two arrays by equi-join, and array_intersect sizes the
+    overlap inside the row — no exploded intermediate, no pair
+    re-shuffle. n_common > 0 is kept explicit so a threshold-0 caller
+    still gets only genuinely overlapping pairs, as the join form
+    produced.
 
     The candidate stream is hash-repartitioned to the session
     parallelism before the arrays attach: the per-row intersection is
@@ -168,13 +170,17 @@ def verify_exact_jaccard(
     (guide §2: scale-adaptive partitioning; deterministic keyed
     repartition, so no sort-before-repartition pass and retry-safe
     placement)."""
-    # collect_set, not collect_list (ADVICE r12): every current caller
-    # feeds a distinct-(id, h) posting, but a duplicate h would inflate
-    # size(hs) while array_intersect dedups — the set form makes the
-    # helper's jaccard robust to that at identical cost.
-    arrs = posting.groupBy("id").agg(F.collect_set("h").alias("hs"))
-    aa = arrs.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"))
-    bb = arrs.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"))
+
+    # collect_set, not collect_list (ADVICE r12): a duplicate h would
+    # inflate size(hs) while array_intersect dedups — the set form keeps
+    # the counts exact whatever the posting feeds, at identical cost.
+    def hash_sets(posting: DataFrame, side: str) -> DataFrame:
+        return (
+            posting.groupBy("id")
+            .agg(F.collect_set("h").alias("hs"))
+            .select(F.col("id").alias(f"id_{side}"), F.col("hs").alias(f"hs_{side}"))
+        )
+
     target = candidates.sparkSession.sparkContext.defaultParallelism
     # spread on BOTH pair columns (ADVICE r12: an id_a hub document would
     # concentrate the per-row intersections on one partition) — via
@@ -184,8 +190,8 @@ def verify_exact_jaccard(
     # is deterministic, so placement is retry-safe (guide §2.5).
     return (
         candidates.repartition(target, F.xxhash64("id_a", "id_b"))
-        .join(aa, "id_a")
-        .join(bb, "id_b")
+        .join(hash_sets(posting_a, "a"), "id_a")
+        .join(hash_sets(posting_b, "b"), "id_b")
         .select(
             "id_a",
             "id_b",
@@ -194,6 +200,20 @@ def verify_exact_jaccard(
             F.size("hs_b").alias("n_b"),
         )
         .filter(F.col("n_common") > 0)
+    )
+
+
+def verify_exact_jaccard(
+    candidates: DataFrame, posting: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verification of (id_a, id_b) candidate pairs -> (id_a, id_b,
+    jaccard >= threshold). The shared tail of every candidate generator
+    that is NOT the full inverted-index join (LSH banding, the prefix
+    filter, the streaming near-dup ingest), so the "same exact math as
+    ngram_jaccard_pairs" equivalence the oracles rely on has one
+    definition; jaccard is one int/int IEEE division."""
+    return (
+        _overlap_counts(candidates, posting, posting)
         .withColumn(
             "jaccard",
             F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
@@ -235,31 +255,21 @@ def _prefix_index(posting: DataFrame, threshold: float) -> DataFrame:
 
 
 def ensure_prefix_index(
-    spark,
-    df: DataFrame,
-    sf_dir: str,
-    k: int = 5,
-    threshold: float = 0.5,
-    posting: DataFrame | None = None,
+    spark, sf_dir: str, posting: DataFrame, k: int, threshold: float
 ) -> DataFrame:
     """Persisted AllPairs prefix index — build-once sibling of
     ensure_postings (the threshold is part of the key: the prefix cut
-    depends on it). Builds FROM the postings artifact (built here if the
-    caller doesn't pass it): the ranking needs only (id, h), so
-    re-shingling the raw corpus for it would be a duplicated full-corpus
-    pass at build time (r8 self-review)."""
+    depends on it). Builds FROM the k-shingle postings artifact
+    `posting`: the ranking needs only (id, h), so re-shingling the raw
+    corpus for it would be a duplicated full-corpus pass at build time
+    (r8 self-review)."""
     from .artifacts import ensure_table
 
     return ensure_table(
         spark,
         sf_dir,
         f"pf_prefix_k{k}_t{threshold}",
-        lambda: _prefix_index(
-            posting
-            if posting is not None
-            else ensure_postings(spark, df, sf_dir, k=k),
-            threshold,
-        ),
+        lambda: _prefix_index(posting, threshold),
     )
 
 
@@ -307,7 +317,7 @@ def prefix_filter_jaccard_pairs(
     artifacts.
     """
     if posting is None:
-        posting = _hashed_postings(df, "text", "doc_id", k)
+        posting = _hashed_postings(df, k)
     if prefix is None:
         prefix = _prefix_index(posting, threshold)
     ranked = prefix
@@ -358,20 +368,22 @@ def prefix_filter_jaccard_pairs(
     return verify_exact_jaccard(candidates, posting, threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 64,
-) -> DataFrame:
+# dedup_minhash_lsh's banding, which the streaming near-dup ingest shares
+# so that the pairs it emits equal the batch operator's: 64 MinHash
+# permutations in 16 bands of 4 rows, verified at Jaccard >= 0.5.
+LSH_NUM_PERM = 64
+LSH_BANDS = 16
+LSH_THRESHOLD = 0.5
+
+
+def minhash_signatures(df: DataFrame, k: int, num_perm: int) -> DataFrame:
     """(id, sig: array<bigint>[num_perm]) MinHash signatures over k-char
     shingles. Permutation i is min over shingles of xxhash64(h, seed=i)
     where h is the shingle's base hash — num_perm grouped MIN aggregates
     over the exploded posting stream (whole-stage codegen), one shuffle
     keyed by doc id. Duplicate shingles don't affect MIN, so the stream
     skips the distinct pass."""
-    posting = exploded_shingles(df, text_col, id_col, k).select(
+    posting = exploded_shingles(df, "text", "doc_id", k).select(
         "id", F.xxhash64("shingle").alias("h")
     )
     sigs = posting.groupBy("id").agg(
@@ -406,118 +418,119 @@ def _banded_keys(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("id", "bk.band", "bk.bkey")
 
 
+def _lsh_candidates(
+    banded_a: DataFrame,
+    banded_b: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    num_perm: int,
+    jaccard: float,
+    *,
+    ordered: bool,
+) -> DataFrame:
+    """(id_a, id_b) MinHash-LSH candidates: distinct pairs of an a-side
+    and a b-side doc that share a (band, bkey) (_banded_keys), kept only
+    when their signatures agree in at least jaccard - 4 sigma of the
+    num_perm positions. `ordered` restricts a self-join (the same table
+    on both sides) to id_a < id_b; without it every a x b match counts.
+    The one candidate generator of the batch self-join, the
+    decontamination cross join and the streaming ingest's within-batch
+    and batch-vs-history probes.
+
+    The agreement gate matters on high-df corpora with aggressive
+    banding: at r=2/b=32 this corpus yields ~34k candidates for ~256 true
+    pairs at sf0.1, and exact verification pays per candidate.
+    Signature agreement is already computed data and discards ~97% of
+    candidates first. The 4-sigma margin keeps the gate's per-true-pair
+    miss probability (~3e-5 at the threshold boundary, n=64) below the
+    banding miss floor, so overall recall is unchanged."""
+    a = banded_a.select("band", "bkey", F.col("id").alias("id_a"))
+    b = banded_b.select(
+        F.col("band").alias("band_b"),
+        F.col("bkey").alias("bkey_b"),
+        F.col("id").alias("id_b"),
+    )
+    on = (a["band"] == b["band_b"]) & (a["bkey"] == b["bkey_b"])
+    if ordered:
+        on = on & (a["id_a"] < b["id_b"])
+    candidates = a.join(b, on).select("id_a", "id_b").distinct()
+    est_floor = max(
+        0.0, jaccard - 4.0 * math.sqrt(jaccard * (1.0 - jaccard) / num_perm)
+    )
+    # agreement count as an explicit num_perm-term codegen sum (array
+    # getItem + equality — NOT an array HOF, NOT a Python kernel: at 34k
+    # candidate rows the Arrow round-trip costs more than it saves).
+    # Plain equi-joins on id: AQE broadcasts the signature side when it
+    # fits (it does locally); at corpus scale both sides shuffle on id,
+    # which is the right co-location anyway (signatures are ~520 bytes
+    # per doc — never driver-collected, never forced broadcast).
+    agree = sum(
+        F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
+        for i in range(num_perm)
+    )
+    ga = sigs_a.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+    gb = sigs_b.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+    return (
+        candidates.join(ga, "id_a")
+        .join(gb, "id_b")
+        .filter(agree >= math.ceil(est_floor * num_perm))
+        .select("id_a", "id_b")
+    )
+
+
 def cross_containment_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 5,
-    threshold: float = 0.5,
-    num_perm: int = 64,
-    bands: int = 32,
-    sigs_left: DataFrame | None = None,
-    sigs_right: DataFrame | None = None,
-    posting_left: DataFrame | None = None,
-    posting_right: DataFrame | None = None,
+    sigs_l: DataFrame,
+    sigs_r: DataFrame,
+    posting_l: DataFrame,
+    posting_r: DataFrame,
+    threshold: float,
+    num_perm: int,
+    bands: int,
 ) -> DataFrame:
     """Directional near-copy pairs ACROSS two corpora: (id_l, id_r,
     containment) with containment = |shingles(L) ∩ shingles(R)| /
     |shingles(L)| >= threshold — the decontamination kernel (left = training
-    corpus, right = benchmark set).
+    corpus, right = benchmark set). Each side is given by its signature
+    and posting tables (ensure_minhash_signatures / ensure_postings, or a
+    slice of them).
 
-    Candidate generation is banded MinHash LSH across the two sides (each
-    side signs its own documents; the band join only ever crosses sides),
-    then candidates are exact-verified by posting intersection, so output
-    precision is exact. The direct cross posting join costs
-    sum_s df_left(s)*df_right(s) — quadratic in document frequency and
-    ~43 M intermediate rows on this high-df corpus at sf0.1 — while the
-    banded path is linear in corpus size plus candidate count. Recall: a
-    containment-τ pair of similarly-sized documents has Jaccard ≳ τ/(2-τ)
-    (≥ 1/3 at τ=0.5), missed by r=2/b=32 banding with p ≤ (1-j²)^32
-    (≤ 2.6% at the j=1/3 boundary, ~1e-14 for the near-identical copies
-    decontamination targets); equality with the exhaustive DuckDB oracle
-    is re-checked at every driver round.
-
-    The same signature-agreement gate as minhash_lsh_pairs runs before
-    exact verification, floored at the SAME
-    similar-size Jaccard bound the banding recall model already assumes
-    (j ≳ τ/(2-τ), minus 4σ at num_perm): on this high-df corpus banding
-    emits ~46k cross candidates for ~100 true pairs at sf0.1, and each
-    candidate explodes by its posting list in the verify join — the
-    agreement gate discards the bulk for one broadcast-sized join over
-    already-persisted signatures, leaving recall at the banding floor.
+    Candidate generation is banded MinHash LSH across the two sides (the
+    band join only ever crosses sides), then candidates are exact-verified
+    by hash-set intersection (_overlap_counts), so output precision is
+    exact. The direct cross posting join costs sum_s df_left(s)*df_right(s)
+    — quadratic in document frequency and ~43 M intermediate rows on this
+    high-df corpus at sf0.1 — while the banded path is linear in corpus
+    size plus candidate count. Recall: a containment-τ pair of
+    similarly-sized documents has Jaccard ≳ τ/(2-τ) (≥ 1/3 at τ=0.5),
+    missed by r=2/b=32 banding with p ≤ (1-j²)^32 (≤ 2.6% at the j=1/3
+    boundary, ~1e-14 for the near-identical copies decontamination
+    targets); equality with the exhaustive DuckDB oracle is re-checked by
+    tools/full_oracle_check.py. The signature-agreement gate is floored at that
+    same similar-size Jaccard bound, so it leaves recall at the banding
+    floor.
     """
     rows_per_band = num_perm // bands
-    if sigs_left is None:
-        sigs_left = minhash_signatures(left, k=k, num_perm=num_perm)
-    if sigs_right is None:
-        sigs_right = minhash_signatures(right, k=k, num_perm=num_perm)
-    lb = _banded_keys(sigs_left, bands, rows_per_band).select(
-        "band", "bkey", F.col("id").alias("id_l")
-    )
-    rb = _banded_keys(sigs_right, bands, rows_per_band).select(
-        F.col("band").alias("band_r"),
-        F.col("bkey").alias("bkey_r"),
-        F.col("id").alias("id_r"),
-    )
-    cand = (
-        lb.join(
-            rb,
-            (lb["band"] == rb["band_r"]) & (lb["bkey"] == rb["bkey_r"]),
-        )
-        .select("id_l", "id_r")
-        .distinct()
-    )
-    j_bound = threshold / (2.0 - threshold)
-    est_floor = max(
-        0.0, j_bound - 4.0 * math.sqrt(j_bound * (1.0 - j_bound) / num_perm)
-    )
-    agree = sum(
-        F.when(F.col("sig_l")[i] == F.col("sig_r")[i], 1).otherwise(0)
-        for i in range(num_perm)
-    )
-    gl = sigs_left.select(F.col("id").alias("id_l"), F.col("sig").alias("sig_l"))
-    gr = sigs_right.select(F.col("id").alias("id_r"), F.col("sig").alias("sig_r"))
-    cand = (
-        cand.join(gl, "id_l")
-        .join(gr, "id_r")
-        .filter(agree >= math.ceil(est_floor * num_perm))
-        .select("id_l", "id_r")
-    )
-    pl = (
-        posting_left
-        if posting_left is not None
-        else _hashed_postings(left, "text", "doc_id", k)
-    )
-    pr = (
-        posting_right
-        if posting_right is not None
-        else _hashed_postings(right, "text", "doc_id", k)
-    )
-    sz = pl.groupBy("id").agg(F.count("*").alias("n_l"))
-    inter = (
-        cand.join(pl.select(F.col("id").alias("id_l"), "h"), "id_l")
-        .join(
-            pr.select(F.col("id").alias("_idr"), F.col("h").alias("h_r")),
-            (F.col("id_r") == F.col("_idr")) & (F.col("h") == F.col("h_r")),
-        )
-        .groupBy("id_l", "id_r")
-        .agg(F.count("*").alias("c"))
+    candidates = _lsh_candidates(
+        _banded_keys(sigs_l, bands, rows_per_band),
+        _banded_keys(sigs_r, bands, rows_per_band),
+        sigs_l,
+        sigs_r,
+        num_perm,
+        threshold / (2.0 - threshold),
+        ordered=False,
     )
     return (
-        inter.join(sz.select(F.col("id").alias("id_l"), "n_l"), "id_l")
-        .withColumn("containment", F.col("c") / F.col("n_l"))
+        _overlap_counts(candidates, posting_l, posting_r)
+        .withColumn("containment", F.col("n_common") / F.col("n_a"))
         .filter(F.col("containment") >= threshold)
-        .select("id_l", "id_r", "containment")
+        .select(
+            F.col("id_a").alias("id_l"), F.col("id_b").alias("id_r"), "containment"
+        )
     )
 
 
 def ensure_minhash_signatures(
-    spark,
-    df: DataFrame,
-    sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 64,
+    spark, df: DataFrame, sf_dir: str, k: int, num_perm: int = 64
 ) -> DataFrame:
     """Persisted MinHash signature table (id, sig) for a corpus — built
     once per (corpus, k, num_perm), then a ~520 B/doc parquet read. Every
@@ -530,28 +543,18 @@ def ensure_minhash_signatures(
         spark,
         sf_dir,
         f"minhash_k{k}_p{num_perm}",
-        lambda: minhash_signatures(df, text_col, id_col, k, num_perm),
+        lambda: minhash_signatures(df, k, num_perm),
     )
 
 
-def ensure_postings(
-    spark,
-    df: DataFrame,
-    sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
+def ensure_postings(spark, df: DataFrame, sf_dir: str, k: int) -> DataFrame:
     """Persisted distinct shingle-hash postings (id, h) — the inverted
     index that exact Jaccard verification joins on. Build-once twin of
     ensure_minhash_signatures."""
     from .artifacts import ensure_table
 
     return ensure_table(
-        spark,
-        sf_dir,
-        f"postings_k{k}",
-        lambda: _hashed_postings(df, text_col, id_col, k),
+        spark, sf_dir, f"postings_k{k}", lambda: _hashed_postings(df, k)
     )
 
 
@@ -559,9 +562,7 @@ def ensure_neardup_pairs(
     spark,
     df: DataFrame,
     sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
+    k: int,
     num_perm: int = 64,
     bands: int = 32,
     threshold: float = 0.5,
@@ -584,17 +585,11 @@ def ensure_neardup_pairs(
         sf_dir,
         f"neardup_pairs_k{k}_p{num_perm}_b{bands}_t{threshold}",
         lambda: minhash_lsh_pairs(
-            df,
-            text_col,
-            id_col,
-            k,
+            ensure_minhash_signatures(spark, df, sf_dir, k, num_perm),
+            ensure_postings(spark, df, sf_dir, k),
             num_perm,
             bands,
             threshold,
-            sigs=ensure_minhash_signatures(
-                spark, df, sf_dir, text_col, id_col, k, num_perm
-            ),
-            posting=ensure_postings(spark, df, sf_dir, text_col, id_col, k),
         ),
     )
 
@@ -603,9 +598,7 @@ def ensure_neardup_components(
     spark,
     df: DataFrame,
     sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
+    k: int,
     num_perm: int = 64,
     bands: int = 32,
     threshold: float = 0.5,
@@ -622,43 +615,29 @@ def ensure_neardup_components(
         sf_dir,
         f"neardup_comp_k{k}_p{num_perm}_b{bands}_t{threshold}",
         lambda: connected_components(
-            ensure_neardup_pairs(
-                spark, df, sf_dir, text_col, id_col, k, num_perm, bands, threshold
-            )
+            ensure_neardup_pairs(spark, df, sf_dir, k, num_perm, bands, threshold)
         ),
     )
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    sigs: DataFrame | None = None,
-    posting: DataFrame | None = None,
+    sigs: DataFrame,
+    posting: DataFrame,
+    num_perm: int,
+    bands: int,
+    threshold: float,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + banded LSH, verified exactly.
 
-    1. Signatures (one shuffle). 2. Explode into `bands` band-keys; docs
-    sharing any band key become candidates (equi-join on the band key — its
-    key space is uniform by construction). 3. Candidates whose estimated
-    Jaccard (signature agreement fraction) clears threshold - 4 sigma are
-    4. verified with exact shingle-intersection Jaccard, so the output has
-    no false positives; LSH parameters control only recall/cost.
+    1. Explode the signatures into `bands` band-keys; docs sharing any
+    band key become candidates (equi-join on the band key — its key space
+    is uniform by construction). 2. Candidates whose estimated Jaccard
+    (signature agreement fraction) clears threshold - 4 sigma
+    (_lsh_candidates) are 3. verified with exact shingle-intersection
+    Jaccard (verify_exact_jaccard), so the output has no false positives;
+    LSH parameters control only recall/cost.
 
-    The step-3 prefilter matters on high-df corpora with aggressive
-    banding: at r=2/b=32 this corpus yields ~34k candidates for ~256 true
-    pairs at sf0.1, and exact verification explodes each candidate by its
-    full posting list (~10M join rows). Signature agreement is already
-    computed data — one broadcast join + numpy batch kernel — and discards
-    ~97% of candidates first. The 4-sigma margin keeps the prefilter's
-    per-true-pair miss probability (~3e-5 at the threshold boundary,
-    n=64) below the banding miss floor, so overall recall is unchanged.
-
-    `sigs` / `posting` accept the PERSISTED artifact tables
+    `sigs` / `posting` are the PERSISTED artifact tables
     (ensure_minhash_signatures / ensure_postings), optionally pre-filtered
     to a subset of ids — signatures and postings are per-doc,
     content-determined values, so a subset slice of the corpus artifact
@@ -666,64 +645,12 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard).
     """
-    rows_per_band = num_perm // bands
-    if sigs is None:
-        sigs = minhash_signatures(df, text_col, id_col, k, num_perm)
-        # inline signatures feed BOTH band-key generation and the
-        # agreement prefilter; materialize once (~520 B/doc) instead of
-        # re-running the shingle scan + 64-min aggregation per consumer
-        # (persisted-artifact callers skip this: parquet reads are
-        # already materialized)
-        sigs = sigs.localCheckpoint()
-    banded = _banded_keys(sigs, bands, rows_per_band)
-    left = banded.select("band", "bkey", F.col("id").alias("id_a"))
-    right = banded.select(
-        F.col("band").alias("band_b"),
-        F.col("bkey").alias("bkey_b"),
-        F.col("id").alias("id_b"),
+    banded = _banded_keys(sigs, bands, num_perm // bands)
+    candidates = _lsh_candidates(
+        banded, banded, sigs, sigs, num_perm, threshold, ordered=True
     )
-    candidates = (
-        left.join(
-            right,
-            (left["band"] == right["band_b"])
-            & (left["bkey"] == right["bkey_b"])
-            & (left["id_a"] < right["id_b"]),
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    est_floor = max(
-        0.0,
-        threshold - 4.0 * math.sqrt(threshold * (1.0 - threshold) / num_perm),
-    )
-    # agreement count as an explicit 64-term codegen sum (array getItem
-    # + equality — NOT an array HOF, NOT a Python kernel: at 34k
-    # candidate rows the Arrow round-trip costs more than it saves).
-    # Plain equi-joins on id: AQE broadcasts the signature side when it
-    # fits (it does locally); at corpus scale both sides shuffle on id,
-    # which is the right co-location anyway (signatures are ~520 bytes
-    # per doc — never driver-collected, never forced broadcast).
-    agree = sum(
-        F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-        for i in range(num_perm)
-    )
-    ga = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    gb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    candidates = (
-        candidates.join(ga, "id_a")
-        .join(gb, "id_b")
-        .filter(agree >= math.ceil(est_floor * num_perm))
-        .select("id_a", "id_b")
-    )
-    # exact verification of candidates only, via the ONE shared tail
-    # (verify_exact_jaccard) the prefix-filter and streaming ingest paths
-    # already use — r9 advice: this highest-traffic path had kept its own
-    # inline copy of the identical sizes/inter/jaccard math, re-creating
-    # the drift risk the helper was introduced to eliminate.
     # No .cache() on the posting stream: ReuseExchange shares the shuffle
     # across branches, and caching measured slower + leaked storage.
-    if posting is None:
-        posting = _hashed_postings(df, text_col, id_col, k)
     return verify_exact_jaccard(candidates, posting, threshold)
 
 
@@ -1004,12 +931,7 @@ def _positional_token_shingles(
     )
 
 
-def ensure_positional_shingles(
-    spark,
-    df: DataFrame,
-    sf_dir: str,
-    k: int = 8,
-) -> DataFrame:
+def ensure_positional_shingles(spark, df: DataFrame, sf_dir: str, k: int) -> DataFrame:
     """Persisted positional shingle table (_id, pos, h) — the substring-
     dedup twin of ensure_postings (which is position-less). All three
     span entries (spans / coverage / redact) consume it, so the corpus is

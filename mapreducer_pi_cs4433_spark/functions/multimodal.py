@@ -14,9 +14,10 @@ self-describing container formats whose dimensions live at fixed or
 trivially-tokenized offsets (BMP, PNM/PPM, PNG, GIF) — so the real-decode
 branch executes in CI on real generated images — and NotImplementedError
 only for containers neither layer understands (JPEG et al. genuinely need
-a codec). ``fake_decode_image`` remains the deterministic stand-in that
-exercises the identical Spark-side plumbing — schema contract, batch
-iteration, partition behavior — which is the part this engine owns.
+a codec). ``extract_features``' default decoder is a deterministic
+stand-in that exercises the identical Spark-side plumbing — schema
+contract, batch iteration, partition behavior — which is the part this
+engine owns.
 """
 
 from __future__ import annotations
@@ -171,7 +172,7 @@ def decode_image(payload: bytes) -> tuple[int, int]:
        and the real-decode branch runs in CI;
     3. else NotImplementedError: the container format genuinely needs a
        codec library (e.g. JPEG) — plumbing tests fall back to
-       ``fake_decode_image``.
+       ``extract_features``' default stand-in decoder.
     """
     Image = _pil_image_module()
     if Image is None:
@@ -181,23 +182,12 @@ def decode_image(payload: bytes) -> tuple[int, int]:
         raise NotImplementedError(
             "this container format needs a codec library (e.g. PIL); "
             "only BMP/PNM/PNG/GIF headers decode dependency-free — "
-            "use fake_decode_image for plumbing tests"
+            "use extract_features' default decoder for plumbing tests"
         )
     import io
 
     with Image.open(io.BytesIO(payload)) as im:
         return (int(im.width), int(im.height))
-
-
-def fake_decode_image(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in decoder: derives a fake (width, height) from
-    the payload bytes so tests exercise real batch plumbing with stable
-    outputs."""
-    if not payload:
-        return (0, 0)
-    w = 64 + (payload[0] % 192)
-    h = 64 + (payload[-1] % 192)
-    return (w, h)
 
 
 def extract_features(media: DataFrame, decoder=None) -> DataFrame:
@@ -220,8 +210,9 @@ def extract_features(media: DataFrame, decoder=None) -> DataFrame:
     if decoder is None:
 
         def decoder(payload: bytes) -> tuple[int, int]:
-            # local twin of fake_decode_image: pickled by value, no import
-            # of this package needed on the executor side
+            # deterministic stand-in (width, height) from the payload
+            # bytes; local, so pickled by value with no import of this
+            # package needed on the executor side
             if not payload:
                 return (0, 0)
             return (64 + (payload[0] % 192), 64 + (payload[-1] % 192))

@@ -321,28 +321,6 @@ def ensure_ivfpq_codes(
     )
 
 
-def kmeans_assignment(
-    df: DataFrame,
-    k: int,
-) -> DataFrame:
-    """(vec_id, cl, d): each vector's cluster under the exact integer
-    Lloyd system (md5-seeded starts, floor-quantized micro-unit
-    components, pmod-then-truncate centroid floor division, argmin ties
-    to the lower cluster id) plus its exact squared distance to the FINAL
-    centroid — the clustering primitive behind SemDeDup-style semantic
-    dedup. Deterministic by construction: every quantity is int64, so the
-    assignment is reproducible across engines, partitionings and runs
-    (the embedding_kmeans_step contract, extended with one more
-    assignment pass against the converged centroids).
-
-    Scale shape: centroids (k x 64 rows) BROADCAST per iteration; the
-    data-sized exchanges are partial-aggregated integer shuffles. The
-    quantized component stream is localCheckpoint-ed once — 2*_KMEANS_ITERS + 2
-    plan references otherwise re-explode the corpus each time."""
-    q, cent = _kmeans_plan(df, k, _KMEANS_ITERS, "embedding", "vec_id")
-    return _assign_against(q, cent, "vec_id")
-
-
 def _assign_against(q: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
     """One assignment pass: (vid, dim, vq) components scored against a
     broadcast (cl, dim, cd) centroid table — exact int64 squared
@@ -371,8 +349,10 @@ def _kmeans_plan(
     id_col: str,
 ) -> tuple[DataFrame, DataFrame]:
     """(quantized component stream, FINAL centroid table (cl, dim, cd))
-    after `iters` Lloyd iterations — the shared tail of kmeans_assignment
-    and kmeans_centroids. The centroid table is what a query-time or
+    after `iters` Lloyd iterations of the exact integer Lloyd system
+    (md5-seeded starts, floor-quantized micro-unit components,
+    pmod-then-truncate centroid floor division, argmin ties to the lower
+    cluster id). The centroid table is what a query-time or
     stream-time assigner must score against to reproduce the persisted
     assignment bit-for-bit (recomputing means from the final assignment
     would yield the NEXT iteration's centroids and a different argmin)."""

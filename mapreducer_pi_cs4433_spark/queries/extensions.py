@@ -960,13 +960,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reads the persisted signature/posting artifacts."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
-        docs,
-        k=_SHINGLE_K,
-        num_perm=64,
-        bands=16,
-        threshold=_JACCARD_T,
-        sigs=dedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K),
-        posting=dedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K),
+        dedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K),
+        dedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K),
+        num_perm=dedup.LSH_NUM_PERM,
+        bands=dedup.LSH_BANDS,
+        threshold=dedup.LSH_THRESHOLD,
     )
 
 
@@ -1262,28 +1260,22 @@ def decontaminate_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         docs = _t(spark, sf_dir, "documents")
-        is_bench = (
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) >= "c"
-        )
         # both sides are hash-gated slices of the same corpus, so they
         # slice the persisted signature/posting artifacts directly (the
         # gate is a function of the id column the artifacts carry)
         sigs = dedup.ensure_minhash_signatures(spark, docs, sf_dir, k=_SHINGLE_K)
         posting = dedup.ensure_postings(spark, docs, sf_dir, k=_SHINGLE_K)
-        art_bench = (
+        is_bench = (
             F.substring(F.md5(F.col("id").cast("string")), 1, 1) >= "c"
         )
         return dedup.cross_containment_pairs(
-            docs.filter(~is_bench),
-            docs.filter(is_bench),
-            k=_SHINGLE_K,
+            sigs.filter(~is_bench),
+            sigs.filter(is_bench),
+            posting.filter(~is_bench),
+            posting.filter(is_bench),
             threshold=0.5,
             num_perm=64,
             bands=32,
-            sigs_left=sigs.filter(~art_bench),
-            sigs_right=sigs.filter(art_bench),
-            posting_left=posting.filter(~art_bench),
-            posting_right=posting.filter(art_bench),
         )
 
     return ensure_table(

@@ -91,12 +91,7 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=_PF_THRESHOLD,
         posting=posting,
         prefix=dedup.ensure_prefix_index(
-            spark,
-            docs,
-            sf_dir,
-            k=_SHINGLE_K,
-            threshold=_PF_THRESHOLD,
-            posting=posting,
+            spark, sf_dir, posting, k=_SHINGLE_K, threshold=_PF_THRESHOLD
         ),
     )
 

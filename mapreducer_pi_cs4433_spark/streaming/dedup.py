@@ -154,7 +154,7 @@ def admit_new_documents(
     sigs_new = minhash_signatures(
         exact_ok, k=_SHINGLE_K, num_perm=_NUM_PERM
     ).localCheckpoint()
-    postings_new = _hashed_postings(exact_ok, "text", "doc_id", _SHINGLE_K).localCheckpoint()
+    postings_new = _hashed_postings(exact_ok, _SHINGLE_K).localCheckpoint()
 
     try:
         sigs_old = spark.read.parquet(sigs_path)
@@ -166,26 +166,21 @@ def admit_new_documents(
     rejected = None
     if have_history:
         vs_history = cross_containment_pairs(
-            exact_ok,
-            exact_ok,  # placeholders: all four index inputs are supplied
-            k=_SHINGLE_K,
+            sigs_new,
+            sigs_old,
+            postings_new,
+            postings_old,
             threshold=_THRESHOLD,
             num_perm=_NUM_PERM,
             bands=_BANDS,
-            sigs_left=sigs_new,
-            sigs_right=sigs_old,
-            posting_left=postings_new,
-            posting_right=postings_old,
         )
         rejected = vs_history.select(F.col("id_l").alias("_rid")).distinct()
     in_batch = minhash_lsh_pairs(
-        exact_ok,
-        k=_SHINGLE_K,
+        sigs_new,
+        postings_new,
         num_perm=_NUM_PERM,
         bands=_BANDS,
         threshold=_THRESHOLD,
-        sigs=sigs_new,
-        posting=postings_new,
     ).select(F.col("id_b").alias("_rid")).distinct()
     rejected = in_batch if rejected is None else rejected.unionByName(in_batch).distinct()
 

@@ -13,7 +13,7 @@ put a stateful shuffle in the hot path for something each Arrow batch
 can decide locally with one integer GEMM against a k*d closure table
 (k*64 int64s — kilobytes; the classic broadcast-model-scoring shape).
 Exactness: the SAME floor-quantized micro-unit components and int64
-distance algebra as functions/similarity.kmeans_assignment, scored
+distance algebra as functions/similarity.ensure_kmeans_assignment, scored
 against the artifact's FINAL centroid table — so a streamed row's
 (cl, d) equals the persisted batch assignment bit-for-bit (pinned by
 tests/test_streaming_enrich.py), deterministic across batch boundaries

@@ -36,8 +36,6 @@ is the second consumer that earned the extraction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,10 +49,7 @@ _PAIR_SCHEMA = "id_a long, id_b long, ahash_hi long, ahash_lo long"
 def read_emitted_pairs(spark: SparkSession, state_path: str) -> DataFrame:
     """Every near-dup pair emitted so far — the union the
     batch-equivalence test compares against image_ahash_neardup."""
-    got = partstore.read_parts(spark, state_path, "pairs", exclude_batch=-1)
-    if got is None:
-        return spark.createDataFrame([], _PAIR_SCHEMA)
-    return got
+    return partstore.read_pairs(spark, state_path, _PAIR_SCHEMA)
 
 
 def match_and_register_batch(
@@ -150,28 +145,13 @@ def image_ingest_stream(
     byte-identical re-arrivals inside the watermark horizon, and
     ``compact_every=N`` auto-folds the index once more than N live
     per-batch parts accumulate."""
-    os.makedirs(state_path, exist_ok=True)
-    prepared = (
-        stream.withColumn("__digest", F.md5(F.col("payload")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["__digest"])
-        .drop("__digest")
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        match_and_register_batch(
-            batch_df.sparkSession, batch_df, state_path, batch_id
-        )
-        if compact_every is not None and partstore.auto_compact_due(
-            state_path, "pairs", compact_every
-        ):
-            compact_index(batch_df.sparkSession, state_path)
-
-    return (
-        prepared.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return partstore.ingest_stream(
+        stream,
+        "payload",
+        state_path,
+        checkpoint,
+        watermark,
+        compact_every,
+        match_and_register_batch,
+        compact_index,
     )

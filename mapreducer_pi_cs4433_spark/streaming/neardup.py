@@ -22,11 +22,13 @@ Two layers, mirroring ``streaming/dedup.py``:
   verified pairs, then register the batch into the index.
 
 Batch-equivalence contract: replaying a corpus in chunks emits exactly
-``minhash_lsh_pairs`` of the full corpus (same banding, same 4-sigma
-agreement prefilter, same exact-Jaccard verification — a pair's fate
-depends only on the two documents' content, never on arrival timing),
-asserted in tests/test_streaming_neardup.py. Within-batch pairs come
-from the batch's banded self-join; cross-batch pairs from the
+``dedup_minhash_lsh`` of the full corpus — a pair's fate depends only on
+the two documents' content, never on arrival timing — asserted in
+tests/test_streaming_neardup.py. Both run the same code: the banding
+constants (``dedup.LSH_*``), the candidate generator with its 4-sigma
+agreement gate (``dedup._lsh_candidates``) and the exact-Jaccard
+verifier (``dedup.verify_exact_jaccard``). Within-batch pairs come from
+the batch's banded self-join; cross-batch pairs from the
 batch-vs-history band join — together they cover every pair exactly
 once (a pair's LATER member sees the earlier one in history).
 
@@ -57,11 +59,7 @@ periodically with ``compact_index`` (protocol-aware: it folds committed
 batches below the newest into one ``c{lo}_{hi}`` segment readers
 prefer over the covered ``b`` dirs) like any streaming sink — either
 offline between trigger runs, or automatically via
-``neardup_ingest_stream(compact_every=N)``, which runs it inside the
-sink AFTER a batch's own writes commit (a safe point: the next batch's
-history read is the first reader that can observe it, and a crash
-anywhere in the hook replays the batch through the same idempotent
-protocol).
+``neardup_ingest_stream(compact_every=N)`` (``partstore.ingest_stream``).
 
 Reference note: the reference repo (MapReducer-PI-cs4433) has no
 streaming or dedup surface; this module extends the engine's
@@ -70,27 +68,25 @@ LLM-pipeline family (SURVEY.md §2.8 "engine ships them anyway").
 
 from __future__ import annotations
 
-import math
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import partstore
 from ..functions.dedup import (
+    LSH_BANDS,
+    LSH_NUM_PERM,
+    LSH_THRESHOLD,
     _banded_keys,
     _hashed_postings,
+    _lsh_candidates,
     minhash_signatures,
     verify_exact_jaccard,
 )
 
 _PAIR_SCHEMA = "id_a long, id_b long, jaccard double"
 
-# word 12-shingles, 64 MinHash permutations in 16 bands, Jaccard >= 0.5
+# character 12-shingles: the shingle width of the catalog's artifacts
 _SHINGLE_K = 12
-_NUM_PERM = 64
-_BANDS = 16
-_THRESHOLD = 0.5
 
 # the index tables this module keeps in its partstore directory
 _INDEX_KINDS = ("pairs", "sigs", "banded", "postings")
@@ -109,12 +105,9 @@ def compact_index(spark: SparkSession, state_path: str) -> int:
 
 def read_emitted_pairs(spark: SparkSession, state_path: str) -> DataFrame:
     """Every near-dup pair emitted so far (id_a, id_b, jaccard) — the
-    union the batch-equivalence test compares against
-    dedup.minhash_lsh_pairs of the full corpus."""
-    got = partstore.read_parts(spark, state_path, "pairs", exclude_batch=-1)
-    if got is None:
-        return spark.createDataFrame([], _PAIR_SCHEMA)
-    return got
+    union the batch-equivalence test compares against dedup_minhash_lsh
+    of the full corpus."""
+    return partstore.read_pairs(spark, state_path, _PAIR_SCHEMA)
 
 
 def match_and_register_batch(
@@ -125,18 +118,11 @@ def match_and_register_batch(
 ) -> None:
     """Fold one document batch into the near-dup index and append the
     verified pairs it forms (within itself and against all prior
-    batches). Idempotent per batch id — see module docstring.
-
-    Same parameters and constants as the batch operator: banding at
-    bands x (num_perm/bands) rows, the threshold - 4*sigma signature
-    agreement prefilter, exact posting-intersection Jaccard — so a
-    pair's presence and value are identical whether computed here or
-    by minhash_lsh_pairs over the assembled corpus."""
+    batches). Idempotent per batch id — see module docstring."""
     # Batch ids are per-CHECKPOINT-LINEAGE: an id below the newest
     # committed batch is a restarted query pointed at an old state dir,
     # never a crash-replay — enforced by the shared store protocol.
     partstore.check_lineage(state_path, "pairs", batch_id)
-    rows_per_band = _NUM_PERM // _BANDS
 
     # WITHIN-batch id uniqueness: two rows with the same doc_id in ONE
     # batch (distinct texts under one id) would otherwise slip past the
@@ -179,79 +165,42 @@ def match_and_register_batch(
 
     # batch-sized derived tables, each consumed by several joins below:
     # materialize once (localCheckpoint) — the multi-consumer invariant
-    sigs_b = minhash_signatures(
-        batch_docs, k=_SHINGLE_K, num_perm=_NUM_PERM
+    sigs_b = minhash_signatures(batch_docs, _SHINGLE_K, LSH_NUM_PERM).localCheckpoint()
+    post_b = _hashed_postings(batch_docs, _SHINGLE_K).localCheckpoint()
+    banded_b = _banded_keys(
+        sigs_b, LSH_BANDS, LSH_NUM_PERM // LSH_BANDS
     ).localCheckpoint()
-    post_b = _hashed_postings(batch_docs, "text", "doc_id", _SHINGLE_K).localCheckpoint()
-    banded_b = _banded_keys(sigs_b, _BANDS, rows_per_band).localCheckpoint()
 
     # candidates WITHIN the batch: the batch operator's banded self-join
-    lb = banded_b.select("band", "bkey", F.col("id").alias("id_a"))
-    rb = banded_b.select(
-        F.col("band").alias("band_b"),
-        F.col("bkey").alias("bkey_b"),
-        F.col("id").alias("id_b"),
+    candidates = _lsh_candidates(
+        banded_b, banded_b, sigs_b, sigs_b, LSH_NUM_PERM, LSH_THRESHOLD, ordered=True
     )
-    within = lb.join(
-        rb,
-        (lb["band"] == rb["band_b"])
-        & (lb["bkey"] == rb["bkey_b"])
-        & (lb["id_a"] < rb["id_b"]),
-    ).select("id_a", "id_b")
-
-    # candidates ACROSS: new docs vs the committed index — the batch
-    # side broadcasts (it is batch-sized by construction); the history
-    # banded table is scanned once per batch, never shuffled
+    post = post_b
     if hist_banded is not None:
-        nb = banded_b.select(
-            F.col("band").alias("band_n"),
-            F.col("bkey").alias("bkey_n"),
-            F.col("id").alias("id_n"),
+        # candidates ACROSS: the committed index vs the new docs — the
+        # batch side broadcasts (it is batch-sized by construction), so
+        # the history banded table is scanned once per batch, never
+        # shuffled. ids are disjoint across batches (the guard above),
+        # so least/greatest puts each pair in the batch operator's
+        # id_a < id_b order and no pair is also a within-batch one.
+        cross = _lsh_candidates(
+            hist_banded,
+            F.broadcast(banded_b),
+            hist_sigs,
+            sigs_b,
+            LSH_NUM_PERM,
+            LSH_THRESHOLD,
+            ordered=False,
+        ).select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
         )
-        cross = (
-            hist_banded.join(
-                F.broadcast(nb),
-                (hist_banded["band"] == nb["band_n"])
-                & (hist_banded["bkey"] == nb["bkey_n"]),
-            )
-            .select(
-                F.least(F.col("id"), F.col("id_n")).alias("id_a"),
-                F.greatest(F.col("id"), F.col("id_n")).alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-        )
-        candidates = within.unionByName(cross).distinct()
-        all_sigs = hist_sigs.unionByName(sigs_b)
-        all_post = hist_post.unionByName(post_b)
-    else:
-        candidates = within.distinct()
-        all_sigs = sigs_b
-        all_post = post_b
+        candidates = candidates.unionByName(cross)
+        post = hist_post.unionByName(post_b)
 
-    # identical constants to minhash_lsh_pairs: threshold - 4 sigma
-    # agreement floor, 64-term codegen sum (no array HOF)
-    est_floor = max(
-        0.0,
-        _THRESHOLD - 4.0 * math.sqrt(_THRESHOLD * (1.0 - _THRESHOLD) / _NUM_PERM),
-    )
-    agree = sum(
-        F.when(F.col("sig_a")[i] == F.col("sig_b")[i], 1).otherwise(0)
-        for i in range(_NUM_PERM)
-    )
-    ga = all_sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    gb = all_sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    candidates = (
-        candidates.join(ga, "id_a")
-        .join(gb, "id_b")
-        .filter(agree >= math.ceil(est_floor * _NUM_PERM))
-        .select("id_a", "id_b")
-    )
-
-    # exact verification — the batch operator's posting-intersection
-    # math via the SHARED helper (one definition of the "same math as
-    # ngram_jaccard_pairs" contract), restricted to this batch's
-    # candidates
-    pairs = verify_exact_jaccard(candidates, all_post, _THRESHOLD)
+    # exact verification of this batch's candidates — the batch
+    # operator's own verifier
+    pairs = verify_exact_jaccard(candidates, post, LSH_THRESHOLD)
 
     # pairs first, then the index parts: a crash anywhere re-runs the
     # whole batch and overwrites every directory identically
@@ -284,38 +233,17 @@ def neardup_ingest_stream(
     exact dups, not near-dups — the batch twin of that layer is
     dedup_exact / merge_into_digest_table).
 
-    ``compact_every=N`` turns on auto-compaction: once more than N
-    committed per-batch parts sit above the current segment's coverage,
-    the sink calls ``compact_index`` right after the batch's own writes
-    commit. The trigger counts LIVE parts (not batch ids), so empty
-    batches and replays don't skew the cadence, and the steady-state
-    part count per state table is bounded at N per-batch dirs plus one
-    compacted segment. The hook inherits the compactor's whole crash
-    protocol — a crash mid-hook replays the batch, whose re-run excludes
-    its own dirs and finishes straggler kinds — because the hook IS the offline call, just scheduled at the
-    one point in a trigger cycle with no concurrent history reader."""
-    os.makedirs(state_path, exist_ok=True)
-    prepared = (
-        stream.withColumn("__digest", F.md5(F.col("text")))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["__digest"])
-        .drop("__digest")
-    )
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        match_and_register_batch(
-            batch_df.sparkSession, batch_df, state_path, batch_id
-        )
-        if compact_every is not None and partstore.auto_compact_due(
-            state_path, "pairs", compact_every
-        ):
-            compact_index(batch_df.sparkSession, state_path)
-
-    return (
-        prepared.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    ``compact_every=N`` runs ``compact_index`` once more than N live
+    per-batch parts accumulate (``partstore.ingest_stream``), bounding
+    the part count per state table at N per-batch dirs plus one
+    compacted segment."""
+    return partstore.ingest_stream(
+        stream,
+        "text",
+        state_path,
+        checkpoint,
+        watermark,
+        compact_every,
+        match_and_register_batch,
+        compact_index,
     )

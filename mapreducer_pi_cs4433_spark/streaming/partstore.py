@@ -37,13 +37,22 @@ already-covered check runs per KIND so a crash between kinds leaves a
 re-run able to finish the stragglers. Write the segment first, delete
 covered leftovers after: a crash in the window double-stores but never
 double-reads.
+
+Ingest wiring (``ingest_stream``, ``read_pairs``): both ingest sinks put
+the same stream in front of their store — a watermark-bounded md5 digest
+layer that drops byte-identical re-arrivals, then a foreachBatch sink
+that folds each batch into the store and auto-compacts it — and both
+emit into a "pairs" kind.
 """
 
 from __future__ import annotations
 
 import os
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def part_dir(root: str, kind: str, batch_id: int) -> str:
@@ -173,3 +182,57 @@ def auto_compact_due(root: str, primary_kind: str, every: int) -> bool:
     hi = compacted_hi(root, primary_kind)
     live_b = [b for b in committed_batches(root, primary_kind) if b > hi]
     return len(live_b) > every
+
+
+def read_pairs(spark: SparkSession, root: str, schema: str) -> DataFrame:
+    """Every pair a store has emitted so far: its committed "pairs" kind,
+    or an empty frame of `schema` before the first batch commits."""
+    got = read_parts(spark, root, "pairs", exclude_batch=-1)
+    if got is None:
+        return spark.createDataFrame([], schema)
+    return got
+
+
+def ingest_stream(
+    stream: DataFrame,
+    payload_col: str,
+    root: str,
+    checkpoint: str,
+    watermark: str,
+    compact_every: int | None,
+    register: Callable[[SparkSession, DataFrame, str, int], None],
+    compact_store: Callable[[SparkSession, str], int],
+):
+    """Start an ingest sink over `stream`; returns the started
+    StreamingQuery (caller owns trigger/termination).
+
+    Rows whose `payload_col` md5 digest already arrived inside the
+    watermark horizon are dropped before the sink (exact dups are the
+    cheap layer's job). Each non-empty batch goes to
+    ``register(spark, batch, root, batch_id)``; with ``compact_every=N``
+    the sink then calls ``compact_store(spark, root)`` once more than N
+    live per-batch "pairs" parts accumulate (auto_compact_due) — right
+    after the batch's own writes commit, the one point in a trigger
+    cycle with no concurrent history reader, so a crash mid-compaction
+    replays the batch through the same idempotent protocol."""
+    os.makedirs(root, exist_ok=True)
+    prepared = (
+        stream.withColumn("__digest", F.md5(F.col(payload_col)))
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark(["__digest"])
+        .drop("__digest")
+    )
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        register(batch_df.sparkSession, batch_df, root, batch_id)
+        if compact_every is not None and auto_compact_due(root, "pairs", compact_every):
+            compact_store(batch_df.sparkSession, root)
+
+    return (
+        prepared.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )

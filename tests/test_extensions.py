@@ -375,6 +375,7 @@ def test_build_index_prebuilds_exactly_what_queries_consume(
     for name in [
         "dedup_ngram_jaccard",
         "dedup_clusters",
+        "dedup_prefix_filter",
         "dedup_span_coverage",
         "similarity_topk_ivf",
         "similarity_topk_pq",

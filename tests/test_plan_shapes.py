@@ -298,6 +298,31 @@ def test_lsh_entries_never_rescan_the_corpus(spark):
         assert plan.count("documents.parquet") == n_docs_scans, name
 
 
+def test_neardup_pair_plans_keep_their_exchanges(spark):
+    """Exchange-count pins for the three plans the shared LSH candidate
+    generator and overlap verifier feed: the live LSH entry, the prefix
+    filter entry, and the plan ensure_neardup_pairs persists. At this
+    scale the band/prefix and signature joins broadcast, so each plan
+    shuffles four times: the candidate pair distinct, the candidate
+    repartition, and the verifier's two id-keyed hash-set aggregates. A
+    refactor of the shared helpers that adds or loses a shuffle fails
+    here."""
+    from mapreducer_pi_cs4433_spark.functions import dedup
+    from mapreducer_pi_cs4433_spark.sources.loaders import load_table
+
+    for name in ("dedup_minhash_lsh", "dedup_prefix_filter"):
+        assert count_exchanges(QUERIES[name](spark, SF_SMOKE)) == 4, name
+    docs = load_table(spark, SF_SMOKE, "documents")
+    pairs = dedup.minhash_lsh_pairs(
+        dedup.ensure_minhash_signatures(spark, docs, SF_SMOKE, k=12),
+        dedup.ensure_postings(spark, docs, SF_SMOKE, k=12),
+        num_perm=64,
+        bands=32,
+        threshold=0.5,
+    )
+    assert count_exchanges(pairs) == 4
+
+
 def test_ivf_probe_prunes_index_partitions(spark):
     """The persisted IVF index is partitioned by bucket, and a probe's
     bucket filter must reach the scan as PartitionFilters — the physical

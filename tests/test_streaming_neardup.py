@@ -328,10 +328,7 @@ def test_neardup_within_batch_duplicate_id_registers_one_doc(spark):
 
         singles = {
             t: _hashed_postings(
-                spark.createDataFrame([Row(doc_id=dup_id, text=t)]),
-                "text",
-                "doc_id",
-                12,
+                spark.createDataFrame([Row(doc_id=dup_id, text=t)]), 12
             ).count()
             for t in (
                 chunks[0][0].text,
